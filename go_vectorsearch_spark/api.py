@@ -44,7 +44,7 @@ from go_vectorsearch_spark.functions.vector import dequantize, quantize, vector_
 from go_vectorsearch_spark.operators.assign import assign_nearest
 from go_vectorsearch_spark.operators.documents import (
     SEARCH_QUERY_PREFIX,
-    noop_embed,
+    noop_embed_text,
     prepare_chunks,
 )
 from go_vectorsearch_spark.operators.search import (
@@ -54,6 +54,7 @@ from go_vectorsearch_spark.operators.search import (
     normalize_search_args,
     topk_paginated,
 )
+from go_vectorsearch_spark.sources.tables import ensure_package_on_workers
 
 EMBED_DIM = 64  # matches the driver testdata's embedding width
 
@@ -747,6 +748,9 @@ class Engine:
             select_embed_provider,
         )
 
+        # the upload path's pandas UDFs import this package on Spark's
+        # Python workers, which do not share the driver's sys.path
+        ensure_package_on_workers(spark)
         self.spark = spark
         self.root = root
         self.embed_dim = embed_dim
@@ -794,8 +798,9 @@ class Engine:
     def _embed_query(self, qtext: str) -> list[float]:
         """One query vector, driver-side (the reference embeds the query
         with the same provider call as uploads, server/search.go:124-147).
-        HTTP mode posts a single-text batch; noop mode evaluates the
-        expression on a 1-row frame."""
+        HTTP mode posts a single-text batch; noop mode hashes the text
+        in-process with the expression's pure-Python twin
+        (documents.noop_embed_text) and runs no Spark job."""
         if self.provider:
             import numpy as np
 
@@ -810,12 +815,7 @@ class Engine:
             return (
                 np.float32(lo[0]) + codes[0].astype(np.float32) / np.float32(255.0) * span
             ).astype(float).tolist()
-        row = (
-            self.spark.range(1)
-            .select(noop_embed(F.lit(qtext), dim=self.embed_dim).alias("v"))
-            .head()
-        )
-        return row[0]
+        return noop_embed_text(qtext, dim=self.embed_dim)
 
     # -- id allocation ----------------------------------------------------
     def _next_id(self, table: str, id_col: str) -> int:
@@ -1074,13 +1074,13 @@ class Engine:
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None:  # missing owner/category -> empty result
-            return self._empty_search_result()  # (server/search.go:156-177)
+            return self._page_frame([])  # (server/search.go:156-177)
         allowed = None if where is None else self._allowed_docs(scope, where)
         qtext = f"{SEARCH_QUERY_PREFIX}{text}"
         qvec = self._embed_query(qtext)
         topk = self._vector_topk(scope, qvec, count + offset, nprobe, allowed=allowed)
         if topk is None:
-            return self._empty_search_result()
+            return self._page_frame([])
         # collect the full top-(count+offset) once; the page is a local
         # slice (brute_force_topk already emitted the exact total order)
         # and the widening loop merges against these rows
@@ -1111,14 +1111,7 @@ class Engine:
                     first_rows=top_rows, needed=offset + target,
                 )
                 page_rows = topk_paginated(merged, count, offset).collect()
-        return self._hydrate_page(page_rows, scope)
-
-    def _empty_search_result(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "document_id long, name string, external_id string, "
-            "payload_json string, score double",
-        )
+        return self._hydrate(page_rows, scope)
 
     def search_many(
         self,
@@ -1161,17 +1154,13 @@ class Engine:
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None or not texts:
-            return self.spark.createDataFrame(
-                [],
-                "q_ix long, document_id long, name string, "
-                "external_id string, payload_json string, score double",
-            )
+            return self._page_frame([], batched=True)
         qvecs = self._embed_queries(
             [f"{SEARCH_QUERY_PREFIX}{t}" for t in texts]
         )
         best = self._vector_best_many(scope, qvecs, nprobe, where)
         if best is None:
-            return self._empty_many_result()
+            return self._page_frame([], batched=True)
         w = Window.partitionBy("q_ix").orderBy(
             F.desc(F.round("score", 6)), F.asc("document_id")
         )
@@ -1180,7 +1169,7 @@ class Engine:
             return (
                 frame.withColumn("_rn", F.row_number().over(w))
                 .filter((F.col("_rn") > offset) & (F.col("_rn") <= count + offset))
-                .select("q_ix", "document_id", "score")
+                .select("q_ix", "document_id", "score", "_rn")
                 .collect()
             )
 
@@ -1224,14 +1213,7 @@ class Engine:
                 ] + sub_rows
                 filled = Counter(r["q_ix"] for r in sub_rows)
                 under = [ix for ix in under if filled[ix] < target]
-        return self._hydrate_pages_many(page_rows, scope)
-
-    def _empty_many_result(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "q_ix long, document_id long, name string, "
-            "external_id string, payload_json string, score double",
-        )
+        return self._hydrate(page_rows, scope, batched=True)
 
     def _allowed_docs(self, scope: int, where) -> DataFrame:
         """The category-scoped allowed-document frame for a ``where``
@@ -1293,41 +1275,6 @@ class Engine:
             F.max("_s").alias("score")
         )
 
-    def _hydrate_pages_many(self, page_rows: list, scope: int) -> DataFrame:
-        """Hydrate collected (q_ix, document_id, score) pages — the
-        batch form of _hydrate_page: one manifest-pruned documents
-        read for all pages."""
-        if not page_rows:
-            return self._empty_many_result()
-        ids = sorted({r["document_id"] for r in page_rows})
-        page = F.broadcast(
-            self.spark.createDataFrame(
-                [
-                    (r["q_ix"], r["document_id"], float(r["score"]))
-                    for r in page_rows
-                ],
-                "q_ix long, document_id long, score double",
-            )
-        )
-        docs = (
-            self.t["documents"]
-            .read(partition_values=sorted({i % N_DOC_BUCKETS for i in ids}))
-            .filter(
-                F.col("document_id").isin(ids)
-                & (F.col("category_id") == scope)
-            )
-        )
-        return (
-            docs.join(page, "document_id")
-            .select(
-                "q_ix", "document_id", "name", "external_id",
-                "payload_json", "score",
-            )
-            .orderBy(
-                "q_ix", F.desc(F.round("score", 6)), F.asc("document_id")
-            )
-        )
-
     def search_many_hybrid(
         self,
         owner: str,
@@ -1364,7 +1311,7 @@ class Engine:
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None or not texts:
-            return self._empty_many_result()
+            return self._page_frame([], batched=True)
         path = self._text_index_path(scope)
         if not os.path.exists(f"{path}/VERSION"):
             raise ValueError(
@@ -1419,7 +1366,7 @@ class Engine:
                 .select("q_ix", "document_id", "score")
             )
         if not legs:
-            return self._empty_many_result()
+            return self._page_frame([], batched=True)
 
         # -- fusion: rank per (leg, q_ix), sum 1/(c + rank) ---------------
         tagged = []
@@ -1446,7 +1393,7 @@ class Engine:
             .collect()
         )
         page_rows = [r for r in fused_rows if r["_rn"] > offset]
-        return self._hydrate_pages_many(page_rows, scope)
+        return self._hydrate(page_rows, scope, batched=True)
 
     def _embed_once_failover(self, qtexts: list[str]):
         """embed_texts_once across the provider's api_bases IN ORDER —
@@ -1477,15 +1424,7 @@ class Engine:
         of :meth:`_embed_query` — same request shape, same
         quantize-at-decode round-trip per vector)."""
         if not self.provider:
-            rows = (
-                self.spark.createDataFrame(
-                    [(i, t) for i, t in enumerate(qtexts)], "i long, t string"
-                )
-                .select("i", noop_embed(F.col("t"), dim=self.embed_dim).alias("v"))
-                .orderBy("i")
-                .collect()
-            )
-            return [list(r["v"]) for r in rows]
+            return [noop_embed_text(t, dim=self.embed_dim) for t in qtexts]
         import numpy as np
 
         codes, lo, hi = self._embed_once_failover(qtexts)
@@ -1563,8 +1502,9 @@ class Engine:
 
         T1 centroid pruning runs DRIVER-SIDE over the TTL-cached
         centroid set — exactly the reference's in-process V2 cosine
-        over cached centroids (server/search.go:202-227): a repeat
-        search launches zero Spark jobs before the probed scan.
+        over cached centroids (server/search.go:202-227). With the
+        query embedded in-process too (noop, or one HTTP call), a
+        repeat search launches zero Spark jobs before the probed scan.
         ``probe_ids`` overrides the ranking with an explicit list set —
         the incremental widening loop passes only the NEWLY added
         lists of each round."""
@@ -1638,14 +1578,14 @@ class Engine:
         pool = max(int(pool), count + offset)
         scope = self._category_id(owner, category)
         if scope is None:
-            return self._empty_search_result()
+            return self._page_frame([])
         allowed = None if where is None else self._allowed_docs(scope, where)
         qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
         topk = self._vector_topk(
             scope, qvec, pool, nprobe, allowed=allowed, with_vector=True
         )
         if topk is None:
-            return self._empty_search_result()
+            return self._page_frame([])
         rows = topk.collect()
         # filtered underfill: like search()'s adaptive widening, a
         # selective where= can thin the probed lists below the pool
@@ -1672,50 +1612,69 @@ class Engine:
             mmr_lambda,
         )
         page = [rows[i] for i in picks[offset : offset + count]]
-        return self._hydrate_page(page, scope, keep_order=True)
+        return self._hydrate(page, scope)
 
-    def _hydrate_page(
-        self, page_rows: list, scope: int, keep_order: bool = False
+    def _hydrate(
+        self, page_rows: list, scope: int, batched: bool = False
     ) -> DataFrame:
-        """Hydrate a collected (document_id, score) page.
+        """Hydrate a collected, ranked page of (document_id, score) rows
+        — plus (q_ix, _rn) when ``batched`` — into the search result.
 
         The reference collects the page's ids and hydrates them with a
-        separate point query (server/search.go:285-308); mirroring
-        that lets the documents scan prune to the <= page-size ids'
-        HASH BUCKETS at the manifest level — hydration never scans the
-        corpus-sized documents table (its pre-r4 shape: a full scan
-        joined against the broadcast page).
+        separate point query (server/search.go:285-308); so does this:
+        one documents scan pruned at the manifest level to the page
+        ids' HASH BUCKETS and filtered to the ids and the category is
+        collected (one job) and joined to the page on the driver. The
+        rows keep the caller's order, which is already the rank: Spark's
+        (round(score, 6) desc, id asc) top-k order, the MMR selection
+        order, or per query the ``_rn`` a batched page is sorted by. A
+        page id whose document was deleted after the top-k is dropped.
         """
         if not page_rows:
-            return self._empty_search_result()
-        ids = [r["document_id"] for r in page_rows]
-        page = F.broadcast(
-            self.spark.createDataFrame(
-                [
-                    (i, r["document_id"], float(r["score"]))
-                    for i, r in enumerate(page_rows)
-                ],
-                "_rank long, document_id long, score double",
+            return self._page_frame([], batched)
+        if batched:
+            page_rows = sorted(page_rows, key=lambda r: (r["q_ix"], r["_rn"]))
+        ids = sorted({int(r["document_id"]) for r in page_rows})
+        docs = {
+            d["document_id"]: d
+            for d in self.t["documents"]
+            .read(partition_values=sorted({i % N_DOC_BUCKETS for i in ids}))
+            .filter(F.col("document_id").isin(ids) & (F.col("category_id") == scope))
+            .select("document_id", "name", "external_id", "payload_json")
+            .collect()
+        }
+        return self._page_frame(
+            [
+                ((r["q_ix"],) if batched else ()) + tuple(d) + (float(r["score"]),)
+                for r in page_rows
+                if (d := docs.get(r["document_id"])) is not None
+            ],
+            batched,
+        )
+
+    def _page_frame(self, rows: list[tuple], batched: bool = False) -> DataFrame:
+        """A search result (``q_ix`` first when ``batched``) as a
+        DataFrame over an Arrow table. Spark plans it as a LocalRelation,
+        so its collect() runs no job; a frame built from a Python list
+        is an RDD scan and pays one job per collect."""
+        import pyarrow as pa
+
+        schema = pa.schema(
+            ([("q_ix", pa.int64())] if batched else [])
+            + [
+                ("document_id", pa.int64()),
+                ("name", pa.string()),
+                ("external_id", pa.string()),
+                ("payload_json", pa.string()),
+                ("score", pa.float64()),
+            ]
+        )
+        cols = list(zip(*rows)) if rows else [()] * len(schema)
+        return self.spark.createDataFrame(
+            pa.Table.from_arrays(
+                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
             )
         )
-        docs = self.t["documents"].read(
-            partition_values=sorted({i % N_DOC_BUCKETS for i in ids})
-        ).filter(F.col("document_id").isin(ids) & (F.col("category_id") == scope))
-        hydrated = docs.join(page, "document_id", "inner").select(
-            "_rank", "document_id", "name", "external_id", "payload_json", "score"
-        )
-        # keep_order (the MMR path): the caller's row order IS the rank.
-        # Default: deterministic reference rank order — pagination ranked
-        # by round(score, 6) with id tie-break (topk_paginated), so the
-        # hydrated sort must use the SAME key; raw score would let rows
-        # equal at 6 decimals display in a different order than the rank
-        # that paginated them (tiny result, single-partition sort)
-        order = (
-            [F.asc("_rank")]
-            if keep_order
-            else [F.desc(F.round("score", 6)), F.asc("document_id")]
-        )
-        return hydrated.orderBy(*order).drop("_rank")
 
     # -- hybrid retrieval (engine extension beyond the reference) ----------
     def _text_index_path(self, cid: int) -> str:
@@ -2808,7 +2767,7 @@ class Engine:
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None:
-            return self._empty_search_result()
+            return self._page_frame([])
         path = self._text_index_path(scope)
         if not os.path.exists(f"{path}/VERSION"):
             raise ValueError(
@@ -2857,7 +2816,7 @@ class Engine:
             rankings, k=count + offset, c=rrf_c, id_col="document_id"
         )
         page_rows = fused.collect()[offset:]
-        return self._hydrate_page(page_rows, scope)
+        return self._hydrate(page_rows, scope)
 
     # -- chat (server/chat.go:109-181, minus the LLM call) -------------------
     def chat_messages(

@@ -11,7 +11,8 @@ Flatten/Split are genuinely recursive/sequential-greedy and run once per
 document at ingest (not in any query hot path), so they are plain Python
 applied through Arrow-batched pandas UDFs — the documented slow path.
 The embedder, in contrast, is a pure column expression (md5-block codes)
-so embedding generation stays JVM-side and scales with the scan.
+so embedding generation stays JVM-side and scales with the scan; a
+bit-exact pure-Python twin embeds single query strings on the driver.
 
 Quirks of the reference reproduced on purpose (and locked by golden
 tests in tests/test_documents.py):
@@ -323,3 +324,23 @@ def noop_embed(text: Column, dim: int = NOOP_DIM, seed: int = 0) -> Column:
             "float"
         ),
     )
+
+
+# code -> float32(lo + code / 255 * span), evaluated in double then
+# narrowed exactly as the expression's final cast does
+_NOOP_LEVELS = [
+    float(np.float32(NOOP_LO + c / 255.0 * (NOOP_HI - NOOP_LO))) for c in range(256)
+]
+
+
+def noop_embed_text(text: str, dim: int = NOOP_DIM, seed: int = 0) -> list[float]:
+    """Driver-side twin of :func:`noop_embed` for one string, equal to
+    the expression element for element: the same md5 blocks over the
+    UTF-8 bytes of ``seed:text:block`` and the same float32 levels.
+    The serving path embeds queries with it, so a query costs no Spark
+    job."""
+    stream = b"".join(
+        hashlib.md5(f"{seed}:{text}:{b}".encode()).digest()
+        for b in range((dim + 15) // 16)
+    )
+    return [_NOOP_LEVELS[c] for c in stream[:dim]]

@@ -21,6 +21,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+import numpy as np
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -33,10 +35,20 @@ def query_vec_lit(query_vec: Sequence[float]) -> Column:
     This is the Spark analogue of broadcasting the query: the vector
     becomes a constant in the codegen'd expression, shipped once with
     the task binary - strictly cheaper than a broadcast join.
+
+    The Column is ONE array<double> Literal node. ``F.lit(list)``
+    builds ``array(lit(x), ...)``, one py4j call per element, and
+    ``F.lit(ndarray)`` fills a Java array element by element; here the
+    vector crosses py4j as one big-endian byte string that a
+    DoubleBuffer decodes into the Java array, a handful of calls at any
+    dimension.
     """
-    # a true array Literal (one node), not CreateArray of d literal
-    # children re-evaluated per row
-    return F.lit([float(x) for x in query_vec])
+    sc = SparkContext._active_spark_context
+    jvm = sc._jvm
+    vec = np.asarray(query_vec, dtype=">f8")  # java.nio's default order
+    arr = sc._gateway.new_array(jvm.double, len(vec))
+    jvm.java.nio.ByteBuffer.wrap(vec.tobytes()).asDoubleBuffer().get(arr)
+    return Column(jvm.functions.lit(arr))
 
 
 def score_cosine(

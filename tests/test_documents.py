@@ -14,6 +14,7 @@ from go_vectorsearch_spark.operators.documents import (
     flatten,
     noop_embed,
     noop_embed_codes,
+    noop_embed_text,
     prepare_chunks,
     split_text,
 )
@@ -134,3 +135,32 @@ def test_noop_embed_matches_reference_dequant(spark):
     ).head()
     for c, e in zip(r["c"], r["e"]):
         assert abs(e - (-1.0 + c / 255.0 * 2.0)) < 1e-6
+
+
+def test_noop_embed_text_equals_expression(spark):
+    """The driver-side twin the serving path embeds queries with is the
+    Column expression's output exactly, element for element."""
+    texts = [
+        "search_query: plain ascii",
+        "search_query: ünïcødé 東京 ☃ 🚀",
+        "",
+        "a:b::c:",
+        "long " * 500,  # 2,500 characters
+    ]
+    assert len(texts[-1]) > 2048
+    combos = [(dim, seed) for dim in (64, 512) for seed in (0, 7)]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i long, t string")
+    rows = df.select(
+        "i",
+        *[
+            noop_embed(F.col("t"), dim=dim, seed=seed).alias(f"e{dim}_{seed}")
+            for dim, seed in combos
+        ],
+    ).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        for dim, seed in combos:
+            want = r[f"e{dim}_{seed}"]
+            got = noop_embed_text(texts[r["i"]], dim=dim, seed=seed)
+            assert len(got) == dim
+            assert got == want, (r["i"], dim, seed)
