@@ -41,9 +41,10 @@ from pyspark.sql import functions as F
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
 
 from go_vectorsearch_spark.functions.vector import dequantize, quantize, vector_range
-from go_vectorsearch_spark.operators.assign import assign_nearest
+from go_vectorsearch_spark.operators.assign import assign_nearest, assign_nearest_mat
 from go_vectorsearch_spark.operators.documents import (
     SEARCH_QUERY_PREFIX,
+    document_chunks,
     noop_embed_text,
     prepare_chunks,
 )
@@ -165,6 +166,19 @@ class NearDupIndexMissing(ValueError):
     exactly this case to 400 without catching engine-internal
     ValueErrors raised later in the upload (embed failures, malformed
     stored JSON), which must stay 500s."""
+
+
+def _row_group_stats(path: str, col: str) -> list:
+    """Parquet statistics of ``col`` in each row group of one file, read
+    from its footer; ``[None]`` if the file has no such column."""
+    import pyarrow.parquet as pq
+
+    md = pq.read_metadata(path)
+    paths = [md.schema.column(j).path for j in range(md.num_columns)]
+    if col not in paths:
+        return [None]
+    ix = paths.index(col)
+    return [md.row_group(g).column(ix).statistics for g in range(md.num_row_groups)]
 
 
 class _VersionedTable:
@@ -362,6 +376,39 @@ class _VersionedTable:
             .option("recursiveFileLookup", "true")
             .parquet(*[os.path.join(self.dir, d) for d in dirs])
         )
+
+    def _data_files(self, v: int) -> list[str]:
+        """Paths of the data files that version ``v``'s manifest
+        references, hidden names (``_*``, ``.*``) skipped as Spark skips
+        them."""
+        out = []
+        for dirs in self._manifest(v).values():
+            for rel in dirs:
+                for base, subdirs, files in os.walk(os.path.join(self.dir, rel)):
+                    subdirs[:] = [d for d in subdirs if not d.startswith(("_", "."))]
+                    out += [
+                        os.path.join(base, f)
+                        for f in files
+                        if not f.startswith(("_", "."))
+                    ]
+        return out
+
+    def max_value(self, col: str):
+        """``max(col)`` over the current snapshot, from the parquet
+        footers of the data files its manifest references: row-group
+        statistics read on the driver, with no listing job and no scan.
+        If any row group lacks statistics for ``col`` the value comes from
+        a scan of the same snapshot instead. ``None`` for an empty or
+        never-written table, like the aggregate."""
+        v = self._version()
+        if v < 0:
+            return None
+        stats = [
+            st for path in self._data_files(v) for st in _row_group_stats(path, col)
+        ]
+        if any(st is None or not st.has_min_max for st in stats):
+            return self.read(v).agg(F.max(col)).head()[0]
+        return max((st.max for st in stats), default=None)
 
     def write(self, df: DataFrame, keep_versions: int = 2) -> None:
         """Full-snapshot rewrite — for tiny metadata tables and whole-
@@ -702,12 +749,28 @@ class _TTLCache:
             self._gen += 1
 
 
+def _local_frame(spark: SparkSession, schema, rows: Sequence[tuple]) -> DataFrame:
+    """``rows`` as a DataFrame over an Arrow table with ``schema`` (a
+    pyarrow schema). Spark plans it as a LocalRelation, so building it
+    runs no job and neither does its collect(); a frame built from a
+    Python list is an RDD scan and pays one job per action."""
+    import pyarrow as pa
+
+    cols = list(zip(*rows)) if rows else [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_arrays(
+            [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
+        )
+    )
+
+
 def assign_embedding_ids(
     chunks: DataFrame, base_emb: int, base_doc: int, stride: int | None = None
 ) -> DataFrame:
     """Unique, deterministic embedding_id per (doc_id, chunk_idx) with NO
     global sort: id = base + (doc_id - base_doc) * stride + chunk_idx,
-    stride = max chunks per doc in the batch (one tiny agg job). A
+    stride = max chunks per doc in the batch (one tiny agg job unless
+    the caller passes it). A
     row_number over an unpartitioned Window would funnel the whole batch
     through one task — fine for request-sized uploads, the wrong shape
     for bulk ingest. Ids are gappy (stride over-allocates); id allocation
@@ -819,8 +882,8 @@ class Engine:
 
     # -- id allocation ----------------------------------------------------
     def _next_id(self, table: str, id_col: str) -> int:
-        row = self.t[table].read().agg(F.max(id_col)).head()
-        return (row[0] if row[0] is not None else 0) + 1
+        top = self.t[table].max_value(id_col)
+        return (top if top is not None else 0) + 1
 
     def _get_or_create(self, table: str, id_col: str, filters: dict) -> int:
         df = self.t[table].read()
@@ -944,57 +1007,82 @@ class Engine:
                 # with zero survivors every slot matched the store
                 return [dup_of[ix] for ix in range(len(documents))]
             documents = [documents[i] for i in survivors]
-        base_doc = self._next_id("documents", "document_id")
+        import numpy as np
+        import pyarrow as pa
 
-        docs = self.spark.createDataFrame(
+        # the request-sized ends run on the driver: chunking here (a bad
+        # payload fails before any write), and the documents and chunk
+        # rows become Arrow-backed LocalRelations — no job builds them
+        doc_chunks = [
+            document_chunks(d.get("name", ""), d["document"], ctx_num=2048)
+            for d in documents
+        ]
+        base_doc = self._next_id("documents", "document_id")
+        ids = [base_doc + i for i in range(len(documents))]
+        long, text = pa.int64(), pa.string()
+        new_docs = _local_frame(
+            self.spark,
+            pa.schema([("document_id", long), ("name", text), ("external_id", text),
+                       ("payload_json", text), ("category_id", long)]),
             [
-                {
-                    "doc_id": base_doc + i,
-                    "name": d.get("name", ""),
-                    "external_id": d.get("external_id", ""),
-                    "payload_json": d["document"],
-                }
-                for i, d in enumerate(documents)
+                (doc_id, d.get("name", ""), d.get("external_id", ""), d["document"],
+                 category_id)
+                for doc_id, d in zip(ids, documents)
             ],
-            "doc_id long, name string, external_id string, payload_json string",
+        )
+        chunk_frame = _local_frame(
+            self.spark,
+            pa.schema([("doc_id", long), ("chunk_idx", pa.int32()), ("chunk", text)]),
+            [
+                (doc_id, ix, chunk)
+                for doc_id, texts in zip(ids, doc_chunks)
+                for ix, chunk in enumerate(texts)
+            ],
         )
         # Embed → quantized codes immediately (the reference never holds
         # full precision past the decode boundary, ai/aicomms/embed.go:
         # 42-50). "vector" is the dequantize-in-expression working column
         # used for centroid assignment, never stored.
         # persist: the embed stage (an HTTP mapInPandas in live mode) is
-        # referenced by up to three actions below (seed head, stride agg,
-        # embeddings write) — unpersisted, every chunk would be re-POSTed
-        # to the embed endpoint per action, and a non-bit-deterministic
+        # referenced by up to two actions below (seed head, embeddings
+        # write) — unpersisted, every chunk would be re-POSTed to the
+        # embed endpoint per action, and a non-bit-deterministic
         # endpoint would seed centroids from a different response than
         # the stored codes
-        chunks = dequantized_vector(
-            self._embed_chunks(prepare_chunks(docs, ctx_num=2048))
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        chunks = dequantized_vector(self._embed_chunks(chunk_frame)).persist(
+            StorageLevel.MEMORY_AND_DISK_DESER
+        )
 
-        # first upload of a category seeds centroid #1 with the first
-        # chunk's embedding (server/upload.go:210-227)
-        cents = self.t["centroids"].read().filter(F.col("category_id") == category_id)
-        if cents.isEmpty():
+        # one fresh collect of the category's centroids: a cached list
+        # another process has since replaced could assign into a list
+        # that no longer exists
+        cents = self._category_centroids(category_id, fresh=True)
+        if not cents:
+            # first upload of a category seeds centroid #1 with the
+            # first chunk's embedding (server/upload.go:210-227)
             first = chunks.orderBy("doc_id", "chunk_idx").select("vector").head()
             seed_id = self._next_id("centroids", "centroid_id")
-            seed = self.spark.createDataFrame(
-                [{"centroid_id": seed_id, "category_id": category_id, "vector": first[0]}],
-                _SCHEMAS["centroids"],
+            self.t["centroids"].append(
+                self.spark.createDataFrame(
+                    [{"centroid_id": seed_id, "category_id": category_id,
+                      "vector": first[0]}],
+                    _SCHEMAS["centroids"],
+                )
             )
-            self.t["centroids"].append(seed)
-            cents = seed
+            cents = [(seed_id, first[0])]
 
         # nearest-centroid assignment (server/upload.go:239-245, J5/V3)
-        assigned = assign_nearest(
+        assigned = assign_nearest_mat(
             chunks,
-            cents.select(F.col("centroid_id"), F.col("vector").alias("centroid_vec")),
+            [(int(c), np.asarray(v, dtype=np.float64)) for c, v in cents],
             vec_col="vector",
             out_col="centroid_id",
         )
 
         base_emb = self._next_id("embeddings", "embedding_id")
-        new_emb = assign_embedding_ids(assigned, base_emb, base_doc).select(
+        new_emb = assign_embedding_ids(
+            assigned, base_emb, base_doc, stride=max(map(len, doc_chunks))
+        ).select(
             "embedding_id",
             F.col("doc_id").alias("document_id"),
             "centroid_id",
@@ -1014,18 +1102,10 @@ class Engine:
         # aliased onto new content, with no repair path (the delete
         # cascade verifies victims against the documents table and
         # could never reach them).
-        new_docs = docs.select(
-            F.col("doc_id").alias("document_id"),
-            "name",
-            "external_id",
-            "payload_json",
-            F.lit(category_id).cast("long").alias("category_id"),
-        )
         self.t["documents"].append(new_docs)
         self.t["embeddings"].append(new_emb)
         chunks.unpersist()
         self._invalidate_cache()  # owner/category/centroids may have changed
-        ids = [base_doc + i for i in range(len(documents))]
         # a category WITH a text index stays hybrid-consistent without
         # manual maintenance: the new documents' postings append
         # incrementally (the lexical twin of the upload's incremental
@@ -1654,9 +1734,7 @@ class Engine:
 
     def _page_frame(self, rows: list[tuple], batched: bool = False) -> DataFrame:
         """A search result (``q_ix`` first when ``batched``) as a
-        DataFrame over an Arrow table. Spark plans it as a LocalRelation,
-        so its collect() runs no job; a frame built from a Python list
-        is an RDD scan and pays one job per collect."""
+        :func:`_local_frame`, so its collect() runs no job."""
         import pyarrow as pa
 
         schema = pa.schema(
@@ -1669,12 +1747,7 @@ class Engine:
                 ("score", pa.float64()),
             ]
         )
-        cols = list(zip(*rows)) if rows else [()] * len(schema)
-        return self.spark.createDataFrame(
-            pa.Table.from_arrays(
-                [pa.array(c, f.type) for c, f in zip(cols, schema)], schema=schema
-            )
-        )
+        return _local_frame(self.spark, schema, rows)
 
     # -- hybrid retrieval (engine extension beyond the reference) ----------
     def _text_index_path(self, cid: int) -> str:
@@ -2914,8 +2987,11 @@ class Engine:
             return self._cache.get(("category_id", owner, category), load)
         return load()
 
-    def _category_centroids(self, cid: int) -> list[tuple[int, list[float]]]:
-        """All (centroid_id, vector) of a category, TTL-cached — the
+    def _category_centroids(
+        self, cid: int, fresh: bool = False
+    ) -> list[tuple[int, list[float]]]:
+        """All (centroid_id, vector) of a category, TTL-cached (unless
+        ``fresh``: one collect, bypassing the cache) — the
         reference's FetchCentroids (cache/middleware.go:115-163): search
         resolves its probe set WITHOUT touching storage on repeat
         requests. Bounded by design: centroid count ~ rows/10k (the
@@ -2932,7 +3008,7 @@ class Engine:
                 .collect()
             ]
 
-        if self._cache:
+        if self._cache and not fresh:
             return self._cache.get(("centroids", cid), load)
         return load()
 
@@ -3073,30 +3149,32 @@ class Engine:
             return 0
         ids = sorted({int(i) for i in document_ids})
         # the victim check reads ONLY the ids' hash-bucket partitions
-        # (manifest pruning); the same pruned read yields each victim's
-        # token count so the text-index tombstones below can shrink the
-        # corpus stats exactly without a postings scan
-        from go_vectorsearch_spark.operators.documents import flatten_json_udf
-        from go_vectorsearch_spark.operators.fulltext import tokenize
+        # (manifest pruning). In a category with a text index the same
+        # pruned read yields each victim's token count, so the tombstones
+        # below shrink the corpus stats exactly without a postings scan;
+        # without one it reads the ids alone and runs no tokenizer
+        tpath = self._text_index_path(cid)
+        text_indexed = os.path.exists(f"{tpath}/VERSION")
+        cols = [F.col("document_id")]
+        if text_indexed:
+            from go_vectorsearch_spark.operators.documents import flatten_json_udf
+            from go_vectorsearch_spark.operators.fulltext import tokenize
 
+            cols.append(
+                F.size(tokenize(flatten_json_udf(F.col("payload_json")))).alias("_dl")
+            )
         buckets = sorted({i % N_DOC_BUCKETS for i in ids})
         victim = F.col("document_id").isin(ids) & (F.col("category_id") == cid)
         victim_rows = (
             self.t["documents"]
             .read(partition_values=buckets)
             .filter(victim)
-            .select(
-                "document_id",
-                F.size(
-                    tokenize(flatten_json_udf(F.col("payload_json")))
-                ).alias("_dl"),
-            )
+            .select(*cols)
             .collect()
         )
         if not victim_rows:
             return 0  # no verified victims in this tenant: no-op
         verified = sorted(r["document_id"] for r in victim_rows)
-        dl_by_doc = {r["document_id"]: int(r["_dl"]) for r in victim_rows}
         victim_buckets = sorted({i % N_DOC_BUCKETS for i in verified})
         # embeddings carry no category_id — the cascade follows the
         # VERIFIED victim documents (FK ON DELETE CASCADE semantics),
@@ -3130,8 +3208,9 @@ class Engine:
         # postings would occupy lexical top-n slots that hydration then
         # drops, silently underfilling hybrid pages. One tombstone
         # commit for the whole batch, with the exact dls recovered
-        # above — O(manifest), no bucket rewrite
-        tpath = self._text_index_path(cid)
+        # above — O(manifest), no bucket rewrite. An index built since
+        # the check above has no dls from the victim read: the tombstone
+        # recovers them from the postings instead
         if os.path.exists(f"{tpath}/VERSION"):
             from go_vectorsearch_spark.operators.fulltext import (
                 _store_manifest,
@@ -3140,6 +3219,11 @@ class Engine:
                 delete_postings,
             )
 
+            dl_by_doc = (
+                {r["document_id"]: int(r["_dl"]) for r in victim_rows}
+                if text_indexed
+                else None
+            )
             delete_postings(self.spark, tpath, verified, dl_by_doc=dl_by_doc)
             # the tombstone list rides every reader's plan as a NOT-IN
             # literal; many point deletes without a maintenance pass
@@ -3242,7 +3326,6 @@ class Engine:
         the category's final count)."""
         import numpy as np
 
-        from go_vectorsearch_spark.operators.assign import assign_nearest_mat
         from go_vectorsearch_spark.plans.ivf import build_index
 
         noop = {"split": [], "dropped": [], "recentered": [], "centroids": 0}

@@ -8,11 +8,14 @@ process-global RNG stream — a distributed engine cannot reproduce a
 sequential RNG, so determinism comes from hashing the text itself.
 
 Flatten/Split are genuinely recursive/sequential-greedy and run once per
-document at ingest (not in any query hot path), so they are plain Python
-applied through Arrow-batched pandas UDFs — the documented slow path.
-The embedder, in contrast, is a pure column expression (md5-block codes)
-so embedding generation stays JVM-side and scales with the scan; a
-bit-exact pure-Python twin embeds single query strings on the driver.
+document at ingest (not in any query hot path), so they are plain Python:
+:func:`document_chunks` turns one document into its chunk rows. An
+upload is request-sized and calls it on the driver; bulk re-chunking
+(:func:`prepare_chunks`) applies the same function through one
+Arrow-batched pandas UDF. The embedder, in contrast, is a pure column
+expression (md5-block codes) so embedding generation stays JVM-side and
+scales with the scan; a bit-exact pure-Python twin embeds single query
+strings on the driver.
 
 Quirks of the reference reproduced on purpose (and locked by golden
 tests in tests/test_documents.py):
@@ -29,11 +32,16 @@ tests in tests/test_documents.py):
 * Upload chunk prefix = document name, trimmed, trailing '.' removed,
   plus ". "; every chunk then gets "search_document: "; queries get
   "search_query: " (server/upload.go:121-128, server/search.go:129).
+  The trim and the '.' removal follow Spark's ``trim`` and Java's
+  ``\\.$`` (see :func:`doc_name_prefix`), so chunks, and the embeddings
+  hashed from them, equal those already stored by the Spark-expression
+  form of this prefix.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import re
 
 import numpy as np
@@ -43,6 +51,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 _EXCESS_NEWLINES = re.compile(r"\n\n+")
+# a '.' at the end, or before ONE final line terminator: what Java's
+# non-multiline ``\.$`` matches
+_FINAL_DOT = re.compile(r"\.(?=(?:\r\n|[\n\r\x85\u2028\u2029])?\Z)")
 
 SEARCH_DOCUMENT_PREFIX = "search_document: "
 SEARCH_QUERY_PREFIX = "search_query: "
@@ -117,11 +128,30 @@ def split_text(prefix: str, text: str, ctx_num: int) -> list[str]:
     return chunks
 
 
-def doc_name_prefix(name: str) -> str:
-    """Upload chunk prefix from the document name (server/upload.go:121-124)."""
+def doc_name_prefix(name: str | None) -> str:
+    """Upload chunk prefix from the document name (server/upload.go:121-124).
+
+    Equal to Spark's ``concat(regexp_replace(trim(name), '\\.$', ''),
+    '. ')`` for a non-empty name: ``trim`` strips only U+0020 (not tabs
+    or NBSP), and Java's ``$`` also matches before one final line
+    terminator, so ``"a.\\n"`` loses its dot. ``None`` or ``""`` gives
+    ``""``."""
     if not name:
         return ""
-    return name.strip().removesuffix(".") + ". "
+    return _FINAL_DOT.sub("", name.strip(" "), count=1) + ". "
+
+
+def document_chunks(
+    name: str | None, payload_json: str | None, ctx_num: int = 2048
+) -> list[str]:
+    """One document's chunk texts in chunk_idx order: the JSON payload
+    flattened, split under the name prefix, each chunk with the
+    ``search_document: `` task prefix (server/upload.go:117-132)."""
+    text = flatten(json.loads(payload_json)) if payload_json is not None else "null."
+    return [
+        SEARCH_DOCUMENT_PREFIX + chunk
+        for chunk in split_text(doc_name_prefix(name), text, ctx_num)
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -132,8 +162,6 @@ def doc_name_prefix(name: str) -> str:
 @F.pandas_udf(StringType())
 def flatten_json_udf(payload: pd.Series) -> pd.Series:
     """Flatten a JSON-string column (parse + reference Flatten)."""
-    import json
-
     return payload.map(lambda s: flatten(json.loads(s)) if s is not None else "null.")
 
 
@@ -243,19 +271,7 @@ def json_string_udf(text: pd.Series) -> pd.Series:
     payload becomes plain text (the substring-cut write path rewrites a
     cut document's payload as the JSON encoding of its cleaned text;
     token-level surgery cannot preserve arbitrary JSON structure)."""
-    import json
-
     return text.map(lambda s: json.dumps(s if s is not None else ""))
-
-
-def split_chunks_udf(ctx_num: int):
-    @F.pandas_udf(ArrayType(StringType()))
-    def _split(prefix: pd.Series, text: pd.Series) -> pd.Series:
-        return pd.Series(
-            [split_text(p or "", t or "", ctx_num) for p, t in zip(prefix, text)]
-        )
-
-    return _split
 
 
 def prepare_chunks(
@@ -265,25 +281,21 @@ def prepare_chunks(
     ctx_num: int = 2048,
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Upload-side text prep: JSON payload → flattened text → prefixed
-    chunks, one output row per chunk with a stable per-document chunk
-    index (replaces the reference's positional slice bookkeeping,
-    server/upload.go:117-132).
+    """Upload-side text prep as a frame: :func:`document_chunks` of every
+    (name, payload) row, one output row per chunk with a stable
+    per-document chunk index (replaces the reference's positional slice
+    bookkeeping, server/upload.go:117-132).
     """
-    prefix = F.when(
-        (F.col(name_col).isNotNull()) & (F.col(name_col) != ""),
-        F.concat(
-            F.regexp_replace(F.trim(F.col(name_col)), r"\.$", ""), F.lit(". ")
-        ),
-    ).otherwise(F.lit(""))
-    flat = docs.withColumn("_flat", flatten_json_udf(F.col(payload_col)))
-    chunked = flat.withColumn(
-        "_chunks", split_chunks_udf(ctx_num)(prefix, F.col("_flat"))
-    )
-    return chunked.select(
-        F.col(id_col),
-        F.posexplode("_chunks").alias("chunk_idx", "chunk"),
-    ).withColumn("chunk", F.concat(F.lit(SEARCH_DOCUMENT_PREFIX), F.col("chunk")))
+
+    @F.pandas_udf(ArrayType(StringType()))
+    def _chunks(name: pd.Series, payload: pd.Series) -> pd.Series:
+        return pd.Series(
+            [document_chunks(n, p, ctx_num) for n, p in zip(name, payload)]
+        )
+
+    return docs.withColumn(
+        "_chunks", _chunks(F.col(name_col), F.col(payload_col))
+    ).select(F.col(id_col), F.posexplode("_chunks").alias("chunk_idx", "chunk"))
 
 
 # ---------------------------------------------------------------------------

@@ -90,6 +90,7 @@ def test_doc_name_prefix():
     assert doc_name_prefix("") == ""
     assert doc_name_prefix(" My Doc. ") == "My Doc. "
     assert doc_name_prefix("My Doc") == "My Doc. "
+    assert doc_name_prefix(None) == ""
 
 
 # ---------------------------------------------------------------------------
