@@ -30,7 +30,6 @@ from __future__ import annotations
 
 import os
 import threading
-from contextlib import contextmanager as _contextmanager
 import time
 from collections.abc import Sequence
 
@@ -38,6 +37,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from go_vectorsearch_spark import versioned
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
 
 from go_vectorsearch_spark.functions.vector import dequantize, quantize, vector_range
@@ -181,20 +181,22 @@ def _row_group_stats(path: str, col: str) -> list:
     return [md.row_group(g).column(ix).statistics for g in range(md.num_row_groups)]
 
 
+def _part_dirs(m: dict) -> list[str]:
+    """The data directories a table manifest references."""
+    return [d for dirs in m["parts"].values() for d in dirs]
+
+
 class _VersionedTable:
     """Manifest-versioned parquet table with PARTITION-SCOPED writes.
 
-    Layout (a hand-rolled miniature of what Delta/Iceberg do):
-
-      <dir>/VERSION        — pointer to the current version number
-      <dir>/v{N}           — manifest FILE for version N (JSON): maps
-                             partition value -> list of immutable data
-                             directories composing that partition
-      <dir>/_data/w{N}/    — write batch N's parquet files; partitioned
-                             tables get one ``_p=<value>`` subdir per
-                             touched value (the partition column itself
-                             stays IN the data files; ``_p`` only names
-                             the directory)
+    The pointer, manifests, writer lock, commit and vacuum are the
+    shared primitive in :mod:`go_vectorsearch_spark.versioned`; this
+    class owns the partition logic on top of it. Each version's
+    manifest is ``{"parts": {partition value: [data dirs]}}``, and
+    ``<dir>/_data/w{N}/`` holds write batch N's parquet files;
+    partitioned tables get one ``_p=<value>`` subdir per touched value
+    (the partition column itself stays IN the data files; ``_p`` only
+    names the directory).
 
     A snapshot is a manifest; data directories are immutable and SHARED
     across versions, so a mutation that touches K partitions writes K
@@ -224,94 +226,53 @@ class _VersionedTable:
         self.partition_expr = partition_expr
         self.dir = os.path.join(root, name)
         os.makedirs(self.dir, exist_ok=True)
-        self._ptr = os.path.join(self.dir, "VERSION")
-        self._lock_tls = threading.local()  # _write_lock reentrancy depth
-        # retention grace: never GC a data directory younger than this,
-        # so a reader that resolved its manifest and is mid-scan keeps
-        # its snapshot even if the keep-window count has moved past it
-        # (two quick writes would otherwise rmtree the files under an
-        # in-flight multi-second job). 0 = count-only (unit tests).
+        # retention grace: never GC a data directory sooner than this
+        # after it was dereferenced, so a reader that resolved its
+        # manifest and is mid-scan keeps its snapshot even if the keep
+        # window has moved past it. 0 = count-only (unit tests).
         self.vacuum_min_age_s = vacuum_min_age_s
 
+    def exists(self) -> bool:
+        return versioned.exists(self.dir)
+
     def _version(self) -> int:
-        if not os.path.exists(self._ptr):
-            return -1
-        with open(self._ptr) as f:
-            return int(f.read().strip())
+        return versioned.version(self.dir)
 
     def versions(self) -> list[int]:
         """Version numbers still on disk (ascending) — the snapshots a
         time-travel read can target. Bounded by the write-time vacuum
         keep window."""
-        out = []
-        for d in os.listdir(self.dir):
-            if d.startswith("v") and d[1:].isdigit():
-                out.append(int(d[1:]))
-        return sorted(out)
-
-    # -- manifest plumbing --------------------------------------------------
-    def _manifest_path(self, v: int) -> str:
-        return os.path.join(self.dir, f"v{v}")
+        return versioned.versions(self.dir)
 
     def _manifest(self, v: int) -> dict[str, list[str]]:
         """parts mapping of version v: partition value (as string; "" for
         unpartitioned) -> data dirs relative to the table dir."""
-        import json
+        return versioned.manifest(self.dir, v)["parts"]
 
-        path = self._manifest_path(v)
-        if not os.path.isfile(path):
-            raise KeyError(
-                f"{self.name}: version {v} not on disk "
-                f"(available: {self.versions()})"
-            )
-        with open(path) as f:
-            return json.load(f)["parts"]
+    def _snapshot(self) -> tuple[int, dict[str, list[str]]]:
+        """(current version, its parts mapping); (-1, {}) if never written."""
+        v, m = versioned.snapshot(self.dir)
+        return v, (m["parts"] if m else {})
 
-    @_contextmanager
     def _write_lock(self):
-        """CROSS-PROCESS writer serialization: an OS advisory flock held
+        """The table's cross-process writer lock (versioned.lock): held
         for a mutation's whole read-version → write-batch → commit
-        critical section. Two service replicas over one table root
-        would otherwise both read VERSION=v and both write _data/w{v+1}
-        (the second's overwrite deleting the first's files) — the
-        in-process Service lock cannot see the other process. Reentrant
-        per thread (upsert/compact wrap the primitives); a second
-        THREAD or PROCESS blocks on the flock, so read-modify-write
-        mutations serialize everywhere the root is a shared local/NFS
-        mount. Readers take no lock — they resolve the pointer once and
-        scan immutable paths (snapshot isolation unchanged)."""
-        import fcntl
-
-        tls = self._lock_tls
-        depth = getattr(tls, "depth", 0)
-        if depth == 0:
-            f = open(os.path.join(self.dir, "_lock"), "w")
-            fcntl.flock(f, fcntl.LOCK_EX)
-            tls.fd = f
-        tls.depth = depth + 1
-        try:
-            yield
-        finally:
-            tls.depth -= 1
-            if tls.depth == 0:
-                fcntl.flock(tls.fd, fcntl.LOCK_UN)
-                tls.fd.close()
+        section, reentrant per thread, so upsert/compact can wrap the
+        primitives."""
+        return versioned.lock(self.dir)
 
     def _commit(self, v: int, parts: dict[str, list[str]], keep: int) -> None:
-        import json
-
-        with open(self._manifest_path(v), "w") as f:
-            json.dump({"parts": parts}, f)
-        with open(self._ptr, "w") as f:
-            f.write(str(v))
-        self._vacuum(v, keep)
+        versioned.commit(self.dir, v, {"parts": parts})
+        versioned.vacuum(
+            self.dir, keep, "_data", _part_dirs, self.vacuum_min_age_s
+        )
 
     def _write_batch(self, df: DataFrame, v: int) -> dict[str, list[str]]:
         """Write df as immutable batch w{v}; return its parts mapping.
 
         mode("overwrite"): a FAILED prior attempt at this version (write
         job died after creating the directory, before _commit moved the
-        VERSION pointer) leaves an orphan w{v} no manifest references;
+        pointer) leaves an orphan w{v} no committed version references;
         the next mutation recomputes the same v and must be able to
         reclaim the path, or the table wedges on error-if-exists
         forever. Committed batches are never at risk — the pointer
@@ -356,12 +317,12 @@ class _VersionedTable:
         — callers must not silently get a different snapshot than they
         asked for.
         """
-        v = self._version() if version is None else version
-        if v < 0:
-            if version is not None:
-                raise KeyError(f"{self.name}: version {version} not on disk")
-            return self.spark.createDataFrame([], self.schema)
-        parts = self._manifest(v)
+        if version is None:
+            _v, parts = self._snapshot()
+        elif version < 0:
+            raise KeyError(f"{self.name}: version {version} not on disk")
+        else:
+            parts = self._manifest(version)
         if partition_values is not None:
             keys = {str(x) for x in partition_values}
             dirs = [d for k in sorted(keys & parts.keys()) for d in parts[k]]
@@ -377,12 +338,11 @@ class _VersionedTable:
             .parquet(*[os.path.join(self.dir, d) for d in dirs])
         )
 
-    def _data_files(self, v: int) -> list[str]:
-        """Paths of the data files that version ``v``'s manifest
-        references, hidden names (``_*``, ``.*``) skipped as Spark skips
-        them."""
+    def _data_files(self, parts: dict[str, list[str]]) -> list[str]:
+        """Paths of the data files a manifest's ``parts`` reference,
+        hidden names (``_*``, ``.*``) skipped as Spark skips them."""
         out = []
-        for dirs in self._manifest(v).values():
+        for dirs in parts.values():
             for rel in dirs:
                 for base, subdirs, files in os.walk(os.path.join(self.dir, rel)):
                     subdirs[:] = [d for d in subdirs if not d.startswith(("_", "."))]
@@ -400,11 +360,13 @@ class _VersionedTable:
         If any row group lacks statistics for ``col`` the value comes from
         a scan of the same snapshot instead. ``None`` for an empty or
         never-written table, like the aggregate."""
-        v = self._version()
+        v, parts = self._snapshot()
         if v < 0:
             return None
         stats = [
-            st for path in self._data_files(v) for st in _row_group_stats(path, col)
+            st
+            for path in self._data_files(parts)
+            for st in _row_group_stats(path, col)
         ]
         if any(st is None or not st.has_min_max for st in stats):
             return self.read(v).agg(F.max(col)).head()[0]
@@ -423,8 +385,8 @@ class _VersionedTable:
         carries every prior directory by reference and adds the new
         batch's. Upload's shape (server/upload.go:288-304's INSERTs)."""
         with self._write_lock():
-            v = self._version() + 1
-            parts = dict(self._manifest(v - 1)) if v > 0 else {}
+            cur, parts = self._snapshot()
+            v = cur + 1
             for key, dirs in self._write_batch(df, v).items():
                 parts[key] = parts.get(key, []) + dirs
             self._commit(v, parts, keep_versions)
@@ -443,16 +405,14 @@ class _VersionedTable:
         if not keys:
             return
         with self._write_lock():
-            v = self._version() + 1
+            cur, prev = self._snapshot()
+            v = cur + 1
             scoped = df.filter(
                 F.expr(self.partition_expr)
                 .cast("string")
                 .isin([str(x) for x in partition_values])
             )
-            parts = {
-                k: d for k, d in (self._manifest(v - 1) if v > 0 else {}).items()
-                if k not in keys
-            }
+            parts = {k: d for k, d in prev.items() if k not in keys}
             parts.update(self._write_batch(scoped, v))
             self._commit(v, parts, keep_versions)
 
@@ -475,13 +435,10 @@ class _VersionedTable:
         if not self.partition_expr:
             raise ValueError(f"{self.name}: table is not partitioned")
         with self._write_lock():
-            v = self._version() + 1
+            cur, prev = self._snapshot()
+            v = cur + 1
             remove = {str(x) for x in remove_values}
-            parts = {
-                k: d
-                for k, d in (self._manifest(v - 1) if v > 0 else {}).items()
-                if k not in remove
-            }
+            parts = {k: d for k, d in prev.items() if k not in remove}
             for key, dirs in self._write_batch(df, v).items():
                 parts[key] = parts.get(key, []) + dirs
             self._commit(v, parts, keep_versions)
@@ -603,10 +560,9 @@ class _VersionedTable:
             return self._compact_locked(min_dirs, keep_versions)
 
     def _compact_locked(self, min_dirs: int, keep_versions: int) -> list[str]:
-        v = self._version()
+        v, parts = self._snapshot()
         if v < 0:
             return []
-        parts = self._manifest(v)
         victims = sorted(k for k, dirs in parts.items() if len(dirs) >= min_dirs)
         if not victims:
             return []
@@ -617,60 +573,6 @@ class _VersionedTable:
             self.read(partition_values=victims), victims, keep_versions=keep_versions
         )
         return victims
-
-    def _vacuum(self, current: int, keep: int) -> None:
-        """Drop manifests older than the ``keep`` most recent, then
-        garbage-collect data directories no surviving manifest
-        references (what Delta's VACUUM exists for) — but never sooner
-        than ``vacuum_min_age_s`` after the directory was FIRST
-        OBSERVED dereferenced (retention.deref_expired's sentinel; the
-        same retention idea as Delta's VACUUM ... RETAIN, measured from
-        dereference rather than the write mtime — a batch written hours
-        ago can be superseded a second ago while a reader who resolved
-        the old manifest is still mid-scan). Shared directories
-        referenced by any live manifest survive indefinitely — that
-        sharing is what makes a mutation cost O(touched partitions),
-        not O(table)."""
-        import shutil
-
-        from go_vectorsearch_spark.retention import deref_expired
-
-        for old in range(max(0, current - keep + 1)):
-            p = self._manifest_path(old)
-            if os.path.isfile(p):
-                os.remove(p)
-        referenced: set[str] = set()
-        for v in self.versions():
-            try:
-                for dirs in self._manifest(v).values():
-                    referenced.update(dirs)
-            except (KeyError, ValueError):
-                continue
-        data_root = os.path.join(self.dir, "_data")
-        if not os.path.isdir(data_root):
-            return
-        grace = self.vacuum_min_age_s
-        for batch in os.listdir(data_root):
-            bpath = os.path.join(data_root, batch)
-            brel = os.path.join("_data", batch)
-            if not os.path.isdir(bpath) or brel in referenced:
-                continue
-            live = False
-            for child in os.listdir(bpath):
-                if not child.startswith("_p="):
-                    continue
-                cpath = os.path.join(bpath, child)
-                if os.path.join(brel, child) in referenced:
-                    live = True
-                    continue
-                if not deref_expired(cpath, grace):
-                    live = True
-                    continue
-                shutil.rmtree(cpath, ignore_errors=True)
-            if live:
-                continue
-            if deref_expired(bpath, grace):
-                shutil.rmtree(bpath, ignore_errors=True)
 
 
 def _rank_probe_ids(
@@ -939,9 +841,7 @@ class Engine:
             # (mapped to HTTP 400) must not persist owner/category rows
             # as a side effect of _get_or_create
             cid = self._category_id(owner, category)
-            if cid is None or not os.path.exists(
-                f"{self._neardup_path(cid)}/VERSION"
-            ):
+            if cid is None or not versioned.exists(self._neardup_path(cid)):
                 raise NearDupIndexMissing(
                     f"upload: neardup='skip' but no near-dup index for "
                     f"{owner}/{category}; run build_neardup_index first"
@@ -1110,12 +1010,12 @@ class Engine:
         # manual maintenance: the new documents' postings append
         # incrementally (the lexical twin of the upload's incremental
         # centroid assignment); categories without one pay nothing
-        if os.path.exists(f"{self._text_index_path(category_id)}/VERSION"):
+        if versioned.exists(self._text_index_path(category_id)):
             self.append_text_index(owner, category, ids)
         # same contract for the near-dup band index (regardless of the
         # neardup mode: an indexed category stays checkable after plain
         # uploads too)
-        if os.path.exists(f"{self._neardup_path(category_id)}/VERSION"):
+        if versioned.exists(self._neardup_path(category_id)):
             self.append_neardup_index(owner, category, ids)
         if neardup == "skip" and (dup_of or dup_of_ix):
             # positional result: survivors get their fresh ids; skipped
@@ -1393,7 +1293,7 @@ class Engine:
         if scope is None or not texts:
             return self._page_frame([], batched=True)
         path = self._text_index_path(scope)
-        if not os.path.exists(f"{path}/VERSION"):
+        if not versioned.exists(path):
             raise ValueError(
                 f"search_many_hybrid: no text index for {owner}/{category}; "
                 "run build_text_index first"
@@ -1770,10 +1670,7 @@ class Engine:
             write_postings,
         )
 
-        from go_vectorsearch_spark.operators.fulltext import (
-            ConcurrentWriteError,
-            _store_version,
-        )
+        from go_vectorsearch_spark.operators.fulltext import ConcurrentWriteError
 
         cid = self._category_id(owner, category)
         if cid is None:
@@ -1786,7 +1683,7 @@ class Engine:
         # loss). On conflict, re-snapshot — the interleaved epoch's
         # documents are then inside the corpus — and retry.
         for _attempt in range(5):
-            base_v = _store_version(path)
+            base_v = versioned.version(path)
             docs = (
                 self.t["documents"]
                 .read()
@@ -1842,7 +1739,7 @@ class Engine:
         if cid is None:
             raise ValueError(f"append_text_index: unknown {owner}/{category}")
         path = self._text_index_path(cid)
-        if not os.path.exists(f"{path}/VERSION"):
+        if not versioned.exists(path):
             raise ValueError(
                 f"append_text_index: no text index for {owner}/{category}; "
                 "run build_text_index first"
@@ -2189,10 +2086,8 @@ class Engine:
             # whole-corpus cut, id-list-free, and bit-identical scoring
             # either way.
             tpath = self._text_index_path(cid)
-            if os.path.exists(f"{tpath}/VERSION"):
+            if versioned.exists(tpath):
                 from go_vectorsearch_spark.operators.fulltext import (
-                    _store_manifest,
-                    _store_version,
                     compact_postings,
                     delete_postings,
                 )
@@ -2204,18 +2099,14 @@ class Engine:
                     compact_postings(self.spark, tpath)
                     self.append_text_index(owner, category, changed_ids)
                 else:
-                    n_buckets = int(
-                        _store_manifest(tpath, _store_version(tpath))[
-                            "n_buckets"
-                        ]
-                    )
+                    n_buckets = int(versioned.snapshot(tpath)[1]["n_buckets"])
                     self.build_text_index(owner, category, n_buckets=n_buckets)
             # near-dup band store: the changed documents' band rows
             # derive from the text — rewrite exactly theirs under the
             # store's cross-process lock (the compact_neardup_index
             # discipline); the changed set joins as a frame, never as
             # an id literal
-            if os.path.exists(f"{self._neardup_path(cid)}/VERSION"):
+            if versioned.exists(self._neardup_path(cid)):
                 t = self._neardup_table(cid)
                 with t._write_lock():
                     kept = t.read().join(ids, "document_id", "left_anti")
@@ -2606,7 +2497,7 @@ class Engine:
         cid = self._category_id(owner, category)
         if cid is None:
             raise ValueError(f"append_neardup_index: unknown {owner}/{category}")
-        if not os.path.exists(f"{self._neardup_path(cid)}/VERSION"):
+        if not versioned.exists(self._neardup_path(cid)):
             raise ValueError(
                 f"append_neardup_index: no near-dup index for "
                 f"{owner}/{category}; run build_neardup_index first"
@@ -2656,7 +2547,7 @@ class Engine:
         cid = self._category_id(owner, category)
         if cid is None:
             raise ValueError(f"compact_neardup_index: unknown {owner}/{category}")
-        if not os.path.exists(f"{self._neardup_path(cid)}/VERSION"):
+        if not versioned.exists(self._neardup_path(cid)):
             raise ValueError(
                 f"compact_neardup_index: no near-dup index for "
                 f"{owner}/{category}; run build_neardup_index first"
@@ -2707,7 +2598,7 @@ class Engine:
         cid = self._category_id(owner, category)
         if cid is None:
             raise ValueError(f"neardup_check: unknown {owner}/{category}")
-        if not os.path.exists(f"{self._neardup_path(cid)}/VERSION"):
+        if not versioned.exists(self._neardup_path(cid)):
             raise NearDupIndexMissing(
                 f"neardup_check: no near-dup index for {owner}/{category}; "
                 "run build_neardup_index first"
@@ -2842,7 +2733,7 @@ class Engine:
         if scope is None:
             return self._page_frame([])
         path = self._text_index_path(scope)
-        if not os.path.exists(f"{path}/VERSION"):
+        if not versioned.exists(path):
             raise ValueError(
                 f"search_hybrid: no text index for {owner}/{category}; "
                 "run build_text_index first"
@@ -3154,7 +3045,7 @@ class Engine:
         # below shrink the corpus stats exactly without a postings scan;
         # without one it reads the ids alone and runs no tokenizer
         tpath = self._text_index_path(cid)
-        text_indexed = os.path.exists(f"{tpath}/VERSION")
+        text_indexed = versioned.exists(tpath)
         cols = [F.col("document_id")]
         if text_indexed:
             from go_vectorsearch_spark.operators.documents import flatten_json_udf
@@ -3211,10 +3102,8 @@ class Engine:
         # above — O(manifest), no bucket rewrite. An index built since
         # the check above has no dls from the victim read: the tombstone
         # recovers them from the postings instead
-        if os.path.exists(f"{tpath}/VERSION"):
+        if versioned.exists(tpath):
             from go_vectorsearch_spark.operators.fulltext import (
-                _store_manifest,
-                _store_version,
                 compact_postings,
                 delete_postings,
             )
@@ -3230,7 +3119,7 @@ class Engine:
             # would bloat it unboundedly, so past a threshold the
             # delete itself triggers the compaction that purges them
             # (bounded amortized cost, like the tables' compact)
-            m = _store_manifest(tpath, _store_version(tpath))
+            _v, m = versioned.snapshot(tpath)
             if len(m.get("tombstones", [])) >= 1024:
                 compact_postings(self.spark, tpath)
         self._invalidate_cache()
@@ -3587,11 +3476,11 @@ class Engine:
                 "documents": int(doc_counts.get(r["category_id"], 0)),
                 "embeddings": int(emb_counts.get(r["category_id"], 0)),
                 "centroids": int(cent_counts.get(r["category_id"], 0)),
-                "text_index": os.path.exists(
-                    f"{self._text_index_path(r['category_id'])}/VERSION"
+                "text_index": versioned.exists(
+                    self._text_index_path(r["category_id"])
                 ),
-                "neardup_index": os.path.exists(
-                    f"{self._neardup_path(r['category_id'])}/VERSION"
+                "neardup_index": versioned.exists(
+                    self._neardup_path(r["category_id"])
                 ),
             }
             for r in sorted(

@@ -35,12 +35,13 @@ exactly (tests/test_fulltext.py).
 
 from __future__ import annotations
 
-import os
 import re
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from go_vectorsearch_spark import versioned
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -331,49 +332,12 @@ def rrf_fuse(
 STORED_POSTINGS_SCHEMA = "term string, doc_id long, dl int, tf long, _tb long"
 
 
-def _store_version(path: str) -> int:
-    vfile = f"{path}/VERSION"
-    if not os.path.exists(vfile):
-        return -1
-    with open(vfile) as f:
-        return int(f.read().strip())
-
-
-def _store_manifest(path: str, v: int) -> dict:
-    import json as _json
-
-    with open(f"{path}/v{v}.json") as f:
-        return _json.load(f)
-
-
-def _store_commit(path: str, v: int, manifest: dict) -> None:
-    import json as _json
-
-    with open(f"{path}/v{v}.json", "w") as f:
-        _json.dump(manifest, f)
-    with open(f"{path}/VERSION", "w") as f:
-        f.write(str(v))
-
-
-# one writer at a time per store path (same process): every commit is a
-# read-manifest -> write-manifest critical section, so an upload's
-# auto-append racing a streaming epoch (or two direct appenders) must
-# serialize or the loser's manifest write silently orphans the winner's
-# batch. Cross-PROCESS writers need external coordination (the service
-# write lock / a scheduler), exactly like the reference serializes its
-# writes in the database.
-import threading as _threading
-
-_STORE_LOCKS: dict[str, _threading.Lock] = {}
-_STORE_LOCKS_GUARD = _threading.Lock()
-
-
-def _store_lock(path: str) -> _threading.Lock:
-    key = os.path.abspath(path)
-    with _STORE_LOCKS_GUARD:
-        if key not in _STORE_LOCKS:
-            _STORE_LOCKS[key] = _threading.Lock()
-        return _STORE_LOCKS[key]
+def _current(path: str, caller: str) -> tuple[int, dict]:
+    """(version, manifest) of the store's current snapshot."""
+    v, m = versioned.snapshot(path)
+    if m is None:
+        raise FileNotFoundError(f"{caller}: no postings store at {path}")
+    return v, m
 
 
 def _write_batch_dir(
@@ -416,29 +380,6 @@ class ConcurrentWriteError(RuntimeError):
     caller re-reads and retries."""
 
 
-def _write_postings_unlocked(
-    index: BM25Index, path: str, n_buckets: int
-) -> None:
-    """write_postings body without the lock — compact_postings (which
-    must hold the lock across its whole read-snapshot -> commit
-    critical section) calls this directly."""
-    v = _store_version(path) + 1
-    applied = _store_manifest(path, v - 1).get("applied", []) if v > 0 else []
-    os.makedirs(path, exist_ok=True)
-    rel = _write_batch_dir(index.postings, path, f"batches/b{v}", n_buckets)
-    _store_commit(
-        path,
-        v,
-        {
-            "batches": [rel],
-            "applied": applied,
-            "n_docs": index.n_docs,
-            "sum_dl": _index_sum_dl(index),
-            "n_buckets": int(n_buckets),
-        },
-    )
-
-
 def write_postings(
     index: BM25Index,
     path: str,
@@ -449,7 +390,8 @@ def write_postings(
     directory partitioned by term HASH BUCKET (xxhash64 mod n_buckets)
     — a query's scan prunes to its terms' buckets, the inverted
     index's seek as directory pruning — referenced by a tiny JSON
-    manifest (batch list + corpus scalars) behind a VERSION pointer.
+    manifest (batch list + corpus scalars) behind the store's pointer
+    (:mod:`go_vectorsearch_spark.versioned`).
     Readers resolve the pointer once per request, so a concurrent
     rebuild or append NEVER mutates directories under an in-flight
     scan: a rebuild writes a NEW batch and points a NEW manifest at it,
@@ -468,13 +410,25 @@ def write_postings(
     append/epoch committed in between, the commit raises
     :class:`ConcurrentWriteError` instead of silently erasing it, and
     the rebuilder re-snapshots and retries."""
-    with _store_lock(path):
-        if base_version is not None and _store_version(path) != base_version:
+    with versioned.lock(path):
+        v, m = versioned.snapshot(path)
+        if base_version is not None and v != base_version:
             raise ConcurrentWriteError(
                 f"write_postings: store at {path} moved past "
-                f"v{base_version} (now v{_store_version(path)})"
+                f"v{base_version} (now v{v})"
             )
-        _write_postings_unlocked(index, path, n_buckets)
+        rel = _write_batch_dir(index.postings, path, f"batches/b{v + 1}", n_buckets)
+        versioned.commit(
+            path,
+            v + 1,
+            {
+                "batches": [rel],
+                "applied": m.get("applied", []) if m else [],
+                "n_docs": index.n_docs,
+                "sum_dl": _index_sum_dl(index),
+                "n_buckets": int(n_buckets),
+            },
+        )
 
 
 def _batches_frame(spark, path: str, m: dict) -> DataFrame:
@@ -505,10 +459,7 @@ def read_postings(spark, path: str) -> tuple[BM25Index, int]:
     :func:`compact_postings` rewrites them away, but no reader ever
     sees them, and the manifest's n_docs/sum_dl already exclude them,
     so idf/avgdl match a from-scratch build over the live corpus."""
-    v = _store_version(path)
-    if v < 0:
-        raise FileNotFoundError(f"read_postings: no VERSION at {path}")
-    m = _store_manifest(path, v)
+    _v, m = _current(path, "read_postings")
     postings = _batches_frame(spark, path, m)
     tombstones = m.get("tombstones", [])
     if tombstones:
@@ -555,11 +506,8 @@ def delete_postings(
     store are ignored — not tombstoned, not counted. A tombstoned id
     must not be re-appended before a compaction. Returns the number of
     newly tombstoned ids."""
-    with _store_lock(path):
-        v = _store_version(path)
-        if v < 0:
-            raise FileNotFoundError(f"delete_postings: no VERSION at {path}")
-        m = _store_manifest(path, v)
+    with versioned.lock(path):
+        v, m = _current(path, "delete_postings")
         existing = set(m.get("tombstones", []))
         new_ids = sorted(set(int(i) for i in doc_ids) - existing)
         if not new_ids:
@@ -581,13 +529,11 @@ def delete_postings(
         if not victims:
             return 0
         removed_dl = sum(int(dl_by_doc.get(i, 0)) for i in victims)
-        _store_commit(
+        versioned.commit(
             path,
             v + 1,
             {
-                "batches": m["batches"],
-                "applied": m.get("applied", []),
-                "n_buckets": int(m["n_buckets"]),
+                **m,
                 "n_docs": int(m["n_docs"]) - len(victims),
                 "sum_dl": int(m["sum_dl"]) - removed_dl,
                 "tombstones": sorted(existing | set(victims)),
@@ -615,26 +561,29 @@ def append_postings(delta: BM25Index, path: str) -> None:
     they neither surface nor waste rank slots."""
     if delta.sum_dl is None:
         raise ValueError("append_postings: delta index lacks sum_dl")
-    with _store_lock(path):
-        v = _store_version(path)
-        if v < 0:
-            raise FileNotFoundError(f"append_postings: no VERSION at {path}")
-        m = _store_manifest(path, v)
-        rel = _write_batch_dir(
-            delta.postings, path, f"batches/b{v + 1}", int(m["n_buckets"])
-        )
-        _store_commit(
-            path,
-            v + 1,
-            {
-                "batches": m["batches"] + [rel],
-                "applied": m.get("applied", []),
-                "n_docs": int(m["n_docs"]) + delta.n_docs,
-                "sum_dl": int(m["sum_dl"]) + delta.sum_dl,
-                "n_buckets": int(m["n_buckets"]),
-                "tombstones": m.get("tombstones", []),
-            },
-        )
+    with versioned.lock(path):
+        v, m = _current(path, "append_postings")
+        _commit_delta(delta, path, v, m, f"b{v + 1}", m.get("applied", []))
+
+
+def _commit_delta(
+    delta: BM25Index, path: str, v: int, m: dict, name: str, applied: list
+) -> None:
+    """Write ``delta`` as batch ``batches/{name}`` and commit version
+    v + 1: the batch list grows, the corpus scalars add exactly, the
+    tombstones and bucket count carry through."""
+    rel = _write_batch_dir(delta.postings, path, f"batches/{name}", int(m["n_buckets"]))
+    versioned.commit(
+        path,
+        v + 1,
+        {
+            **m,
+            "batches": m["batches"] + [rel],
+            "applied": applied,
+            "n_docs": int(m["n_docs"]) + delta.n_docs,
+            "sum_dl": int(m["sum_dl"]) + delta.sum_dl,
+        },
+    )
 
 
 def append_postings_epoch(
@@ -655,31 +604,12 @@ def append_postings_epoch(
     if delta.sum_dl is None:
         raise ValueError("append_postings_epoch: delta index lacks sum_dl")
     key = f"s{stream_id}-e{epoch_id}"
-    with _store_lock(path):
-        v = _store_version(path)
-        if v < 0:
-            raise FileNotFoundError(
-                f"append_postings_epoch: no VERSION at {path}"
-            )
-        m = _store_manifest(path, v)
+    with versioned.lock(path):
+        v, m = _current(path, "append_postings_epoch")
         applied = m.get("applied", [])
         if key in applied:
             return False
-        rel = _write_batch_dir(
-            delta.postings, path, f"batches/{key}", int(m["n_buckets"])
-        )
-        _store_commit(
-            path,
-            v + 1,
-            {
-                "batches": m["batches"] + [rel],
-                "applied": applied + [key],
-                "n_docs": int(m["n_docs"]) + delta.n_docs,
-                "sum_dl": int(m["sum_dl"]) + delta.sum_dl,
-                "n_buckets": int(m["n_buckets"]),
-                "tombstones": m.get("tombstones", []),
-            },
-        )
+        _commit_delta(delta, path, v, m, key, applied + [key])
         return True
 
 
@@ -700,64 +630,29 @@ def compact_postings(spark, path: str) -> None:
     recognized-and-skipped replay, i.e. silent permanent loss. The
     lock serializes the compaction against writers instead (readers
     stay lock-free on their resolved snapshots)."""
-    with _store_lock(path):
+    with versioned.lock(path):
         index, n_buckets = read_postings(spark, path)
-        _write_postings_unlocked(index, path, n_buckets)
+        write_postings(index, path, n_buckets)
 
 
 def vacuum_postings(
     path: str, keep_versions: int = 2, min_age_s: float = 0.0
 ) -> list[str]:
     """Drop manifests older than the ``keep_versions`` newest and
-    delete batch directories no kept manifest references. Rebuilds
-    leave their predecessors' batches on disk by design (snapshot
-    isolation for lock-free readers); this is the explicit reclaim,
-    shaped like the versioned tables' vacuum — including the AGE GUARD:
-    a dereferenced path is deleted only ``min_age_s`` after a vacuum
-    FIRST OBSERVED it dereferenced (retention.deref_expired's sentinel
-    — the batch's own write mtime says nothing about when the last
-    manifest referencing it was superseded, and a reader that resolved
-    that manifest seconds ago is still mid-scan). Direct unit-test
-    callers default to 0 (immediate one-pass delete); the Engine passes
-    its serving grace period, so reclamation completes on the SECOND
+    delete batch directories no kept manifest references, each only
+    ``min_age_s`` after a vacuum first observed it dereferenced
+    (:func:`versioned.vacuum`). Rebuilds leave their predecessors'
+    batches on disk by design (snapshot isolation for lock-free
+    readers); this is the explicit reclaim. Direct unit-test callers
+    default to 0 (immediate one-pass delete); the Engine passes its
+    serving grace period, so reclamation completes on the SECOND
     maintenance pass after the grace. Returns removed paths."""
-    import shutil
-    import time as _time
-
-    from go_vectorsearch_spark.retention import deref_expired
-
-    with _store_lock(path):
-        v = _store_version(path)
-        if v < 0:
-            return []
-        cutoff = _time.time() - min_age_s
-        versions = sorted(
-            int(f[1:-5])
-            for f in os.listdir(path)
-            if f.startswith("v") and f.endswith(".json") and f[1:-5].isdigit()
+    if not versioned.exists(path):
+        return []
+    with versioned.lock(path):
+        return versioned.vacuum(
+            path, keep_versions, "batches", lambda m: m["batches"], min_age_s
         )
-        kept = [x for x in versions if x > v - keep_versions]
-        referenced = {
-            rel for x in kept for rel in _store_manifest(path, x)["batches"]
-        }
-        removed = []
-        for x in versions:
-            mf = f"{path}/v{x}.json"
-            # a manifest file records its own supersession time: v{x}
-            # stops being resolvable the moment a newer VERSION commits,
-            # and any reader that resolved it did so before that — the
-            # file's own mtime is the correct age basis here
-            if x not in kept and os.path.getmtime(mf) <= cutoff:
-                os.remove(mf)
-                removed.append(f"v{x}.json")
-        bdir = f"{path}/batches"
-        for d in os.listdir(bdir) if os.path.isdir(bdir) else []:
-            rel = f"batches/{d}"
-            full = f"{path}/{rel}"
-            if rel not in referenced and deref_expired(full, min_age_s):
-                shutil.rmtree(full)
-                removed.append(rel)
-        return removed
 
 
 def bm25_search_stored(

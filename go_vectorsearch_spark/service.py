@@ -48,12 +48,11 @@ LLM endpoint configured the route answers 501, mirroring the reference's
 Scale note: one Service process fronts one SparkSession (the reference
 is likewise one process over one DB pool); horizontal scale is N
 service replicas over the same table root. READS need no coordination —
-the versioned tables give each request snapshot isolation. WRITES
-serialize through the tables' cross-process flock
-(_VersionedTable._write_lock): two replicas' concurrent uploads commit
-one after the other instead of the second's manifest silently dropping
-the first's rows (the in-process Service lock cannot see another
-process).
+the versioned stores give each request snapshot isolation. Each store
+commit serializes through the stores' cross-process flock
+(versioned.lock): two replicas' concurrent uploads commit one after
+the other instead of the second's manifest silently dropping the
+first's rows (the in-process Service lock cannot see another process).
 """
 
 from __future__ import annotations
@@ -64,6 +63,7 @@ import threading
 from collections.abc import Iterator
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
+from go_vectorsearch_spark import versioned
 from go_vectorsearch_spark.api import Engine, NearDupIndexMissing
 
 CHAT_PATH = "/api/chat"  # LLM-provider side path (ai/ollama/chat.go:114)
@@ -341,13 +341,17 @@ class Service:
         self.llm_model = llm_model
         self.llm_token = llm_token
         self.static_dir = static_dir
-        # MUTATIONS serialize: _VersionedTable.write is read-modify-write
-        # (union current + flip pointer), so two concurrent uploads could
-        # drop each other's rows. READS need no lock — the VERSION
-        # pointer is read once per request, so a reader sees a complete
-        # snapshot regardless of concurrent writers (and SparkSession
-        # actions are thread-safe). Mirrors the reference: SQL writes
-        # serialize in the DB, reads run concurrently.
+        # MUTATIONS serialize within this process: a mutating route is
+        # several store commits (an upload allocates ids from the
+        # current snapshot, then appends documents, then embeddings).
+        # Each commit is serialized on its own by the store's writer
+        # lock (versioned.lock); this lock keeps the whole sequence of
+        # one request from interleaving with another's. READS need no
+        # lock — a request resolves each store's pointer once and scans
+        # immutable files, so it sees complete snapshots regardless of
+        # concurrent writers (and SparkSession actions are thread-safe).
+        # Mirrors the reference: SQL writes serialize in the DB, reads
+        # run concurrently.
         self.lock = threading.Lock()
 
     # -- route bodies (pure JSON -> JSON, no HTTP) -------------------------
@@ -675,8 +679,8 @@ class Service:
         # strings (a '/' in an owner name must not split a composed key)
         for o, c in pairs:
             cid = self.engine._category_id(o, c)
-            if cid is not None and os.path.exists(
-                f"{self.engine._text_index_path(cid)}/VERSION"
+            if cid is not None and versioned.exists(
+                self.engine._text_index_path(cid)
             ):
                 self.engine.build_text_index(o, c)
         return {
@@ -699,14 +703,14 @@ class Service:
             if cid is None:
                 raise BadRequest(f"unknown {owner}/{category}")
             tpath = self.engine._text_index_path(cid)
-            if os.path.exists(f"{tpath}/VERSION"):
+            if versioned.exists(tpath):
                 from go_vectorsearch_spark.operators.fulltext import (
                     compact_postings,
                 )
 
                 compact_postings(self.engine.spark, tpath)
                 out["text_index"] = True
-            if os.path.exists(f"{self.engine._neardup_path(cid)}/VERSION"):
+            if versioned.exists(self.engine._neardup_path(cid)):
                 out["neardup_rows"] = self.engine.compact_neardup_index(
                     owner, category
                 )

@@ -106,8 +106,8 @@ def neardup_filter_stream(
     from go_vectorsearch_spark.operators import dedup as DD
     from go_vectorsearch_spark.streaming import require_local_path
 
-    # all three directories are consumed through os.path (VERSION
-    # probes, parquet-file detection) — a remote URI would silently
+    # all three directories are consumed through os.path (store
+    # pointer probes, parquet-file detection) — a remote URI would silently
     # disable the cross-batch verify or plant the band store on the
     # driver's local disk, so refuse loudly like the ingest module
     require_local_path(checkpoint_dir, "neardup_filter_stream checkpoint_dir")
@@ -146,7 +146,7 @@ def neardup_filter_stream(
         try:
             drop_ids = set()
             # 1) against the admitted corpus (band store + out_dir text)
-            if _os.path.exists(_os.path.join(band_store_dir, "VERSION")):
+            if bands_t.exists():
                 keys = [
                     r["key"] for r in new_bands.select("key").distinct().collect()
                 ]
@@ -246,7 +246,7 @@ def neardup_filter_stream(
             # bands FIRST (see docstring: crash between the appends must
             # re-emit, never lose); skip only the band WRITE when the
             # surviving docs contributed no rows
-            if _os.path.exists(_os.path.join(band_store_dir, "VERSION")):
+            if bands_t.exists():
                 if not surv_bands.isEmpty():
                     bands_t.append(surv_bands)
             else:

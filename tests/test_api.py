@@ -245,7 +245,7 @@ def test_versioned_table_vacuum(spark, tmp_path):
     for i in range(5):
         t.write(spark.createDataFrame([(i, f"v{i}")], "id long, x string"))
     dirs = sorted(d for d in os.listdir(t.dir) if d.startswith("v") and d != "VERSION")
-    assert dirs == ["v3", "v4"]
+    assert dirs == ["v3.json", "v4.json"]
     assert [tuple(r) for r in t.read().collect()] == [(4, "v4")]
 
 

@@ -485,7 +485,7 @@ def test_vacuum_grace_measures_dereference_not_write_time(
         vacuum_postings,
         write_postings,
     )
-    from go_vectorsearch_spark.retention import DEREF_SENTINEL
+    from go_vectorsearch_spark.versioned import DEREF_SENTINEL
 
     docs = _load_docs(spark, sf_correct)
     path = str(tmp_path / "store")
@@ -565,9 +565,9 @@ def test_delete_postings_ignores_ids_absent_from_the_index(spark, tmp_path):
     absent-id deletes could drive n_docs negative, making the idf's log
     argument negative (NULL in Spark) and silently zeroing every BM25
     score."""
+    from go_vectorsearch_spark.versioned import manifest as _store_manifest
+    from go_vectorsearch_spark.versioned import version as _store_version
     from go_vectorsearch_spark.operators.fulltext import (
-        _store_manifest,
-        _store_version,
         bm25_search_stored,
         delete_postings,
         read_postings,
@@ -646,9 +646,9 @@ def test_delete_postings_dl_hint_compaction_purges_and_append_carries(
     same exact stats; (b) compaction PHYSICALLY purges tombstoned rows
     and clears the list; (c) an append between delete and compaction
     carries the tombstones forward (the dead doc stays hidden)."""
+    from go_vectorsearch_spark.versioned import manifest as _store_manifest
+    from go_vectorsearch_spark.versioned import version as _store_version
     from go_vectorsearch_spark.operators.fulltext import (
-        _store_manifest,
-        _store_version,
         append_postings,
         bm25_search_stored,
         compact_postings,
@@ -704,9 +704,9 @@ def test_write_postings_version_guard_detects_interleaved_commit(spark, tmp_path
     ConcurrentWriteError instead."""
     import pytest as _pytest
 
+    from go_vectorsearch_spark.versioned import version as _store_version
     from go_vectorsearch_spark.operators.fulltext import (
         ConcurrentWriteError,
-        _store_version,
         append_postings,
         write_postings,
     )

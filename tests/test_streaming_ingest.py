@@ -213,7 +213,8 @@ def test_compact_postings_collapses_batches_and_keeps_memory(spark, tmp_path):
         assert append_postings_epoch(delta, store, e, stream_id="s") is True
 
     before = [tuple(r) for r in bm25_search_stored(spark, store, "alpha common", k=12).collect()]
-    from go_vectorsearch_spark.operators.fulltext import _store_manifest, _store_version
+    from go_vectorsearch_spark.versioned import manifest as _store_manifest
+    from go_vectorsearch_spark.versioned import version as _store_version
 
     assert len(_store_manifest(store, _store_version(store))["batches"]) == 3
     compact_postings(spark, store)
@@ -281,9 +282,9 @@ def test_pre_token_checkpoint_resumes_under_legacy_stream_id(spark, tmp_path):
     in-flight epoch re-apply and double those documents' postings."""
     import hashlib
 
+    from go_vectorsearch_spark.versioned import manifest as _store_manifest
+    from go_vectorsearch_spark.versioned import version as _store_version
     from go_vectorsearch_spark.operators.fulltext import (
-        _store_manifest,
-        _store_version,
         build_bm25_index,
         read_postings,
         write_postings,

@@ -728,9 +728,9 @@ def test_engine_bulk_cut_frame_shaped(spark, tmp_path, monkeypatch):
             (r["document_id"], r["band"], r["key"])
             for r in e._neardup_table(cid).read().collect()
         )
+        from go_vectorsearch_spark.versioned import manifest as _store_manifest
+        from go_vectorsearch_spark.versioned import version as _store_version
         from go_vectorsearch_spark.operators.fulltext import (
-            _store_manifest,
-            _store_version,
             bm25_search_stored,
         )
 
