@@ -33,11 +33,10 @@ import threading
 import time
 from collections.abc import Sequence
 
-from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from go_vectorsearch_spark import versioned
+from go_vectorsearch_spark import persist, versioned
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
 
 from go_vectorsearch_spark.functions.vector import dequantize, quantize, vector_range
@@ -880,9 +879,6 @@ class Engine:
                 id_col="q_ix",
                 text_col="_text",
                 threshold=neardup_threshold,
-                # request-sized batch in a long-lived service: a
-                # persisted signature frame would leak per upload
-                persist_signatures=False,
             ).collect()
             peers: dict[int, list[int]] = {}
             for r in pair_rows:  # id_a < id_b by construction
@@ -949,62 +945,60 @@ class Engine:
         # embed endpoint per action, and a non-bit-deterministic
         # endpoint would seed centroids from a different response than
         # the stored codes
-        chunks = dequantized_vector(self._embed_chunks(chunk_frame)).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
+        with persist.Scope() as scope:
+            chunks = scope.hold(dequantized_vector(self._embed_chunks(chunk_frame)))
 
-        # one fresh collect of the category's centroids: a cached list
-        # another process has since replaced could assign into a list
-        # that no longer exists
-        cents = self._category_centroids(category_id, fresh=True)
-        if not cents:
-            # first upload of a category seeds centroid #1 with the
-            # first chunk's embedding (server/upload.go:210-227)
-            first = chunks.orderBy("doc_id", "chunk_idx").select("vector").head()
-            seed_id = self._next_id("centroids", "centroid_id")
-            self.t["centroids"].append(
-                self.spark.createDataFrame(
-                    [{"centroid_id": seed_id, "category_id": category_id,
-                      "vector": first[0]}],
-                    _SCHEMAS["centroids"],
+            # one fresh collect of the category's centroids: a cached list
+            # another process has since replaced could assign into a list
+            # that no longer exists
+            cents = self._category_centroids(category_id, fresh=True)
+            if not cents:
+                # first upload of a category seeds centroid #1 with the
+                # first chunk's embedding (server/upload.go:210-227)
+                first = chunks.orderBy("doc_id", "chunk_idx").select("vector").head()
+                seed_id = self._next_id("centroids", "centroid_id")
+                self.t["centroids"].append(
+                    self.spark.createDataFrame(
+                        [{"centroid_id": seed_id, "category_id": category_id,
+                          "vector": first[0]}],
+                        _SCHEMAS["centroids"],
+                    )
                 )
+                cents = [(seed_id, first[0])]
+
+            # nearest-centroid assignment (server/upload.go:239-245, J5/V3)
+            assigned = assign_nearest_mat(
+                chunks,
+                [(int(c), np.asarray(v, dtype=np.float64)) for c, v in cents],
+                vec_col="vector",
+                out_col="centroid_id",
             )
-            cents = [(seed_id, first[0])]
 
-        # nearest-centroid assignment (server/upload.go:239-245, J5/V3)
-        assigned = assign_nearest_mat(
-            chunks,
-            [(int(c), np.asarray(v, dtype=np.float64)) for c, v in cents],
-            vec_col="vector",
-            out_col="centroid_id",
-        )
-
-        base_emb = self._next_id("embeddings", "embedding_id")
-        new_emb = assign_embedding_ids(
-            assigned, base_emb, base_doc, stride=max(map(len, doc_chunks))
-        ).select(
-            "embedding_id",
-            F.col("doc_id").alias("document_id"),
-            "centroid_id",
-            "codes",
-            "lo",
-            "hi",
-        )
-        # pure appends: existing data is carried over by manifest
-        # reference — an upload writes only its own rows, the
-        # INSERT-shaped write path of server/upload.go:288-304.
-        # DOCUMENTS COMMIT FIRST: a crash between the two appends then
-        # leaves zombie documents with no vectors — hydratable,
-        # deletable, merely unsearchable — and the next upload's
-        # _next_id sees the advanced documents max. The reverse order
-        # left orphan embeddings whose document_ids the NEXT upload
-        # re-allocated to unrelated documents: old vectors permanently
-        # aliased onto new content, with no repair path (the delete
-        # cascade verifies victims against the documents table and
-        # could never reach them).
-        self.t["documents"].append(new_docs)
-        self.t["embeddings"].append(new_emb)
-        chunks.unpersist()
+            base_emb = self._next_id("embeddings", "embedding_id")
+            new_emb = assign_embedding_ids(
+                assigned, base_emb, base_doc, stride=max(map(len, doc_chunks))
+            ).select(
+                "embedding_id",
+                F.col("doc_id").alias("document_id"),
+                "centroid_id",
+                "codes",
+                "lo",
+                "hi",
+            )
+            # pure appends: existing data is carried over by manifest
+            # reference — an upload writes only its own rows, the
+            # INSERT-shaped write path of server/upload.go:288-304.
+            # DOCUMENTS COMMIT FIRST: a crash between the two appends then
+            # leaves zombie documents with no vectors — hydratable,
+            # deletable, merely unsearchable — and the next upload's
+            # _next_id sees the advanced documents max. The reverse order
+            # left orphan embeddings whose document_ids the NEXT upload
+            # re-allocated to unrelated documents: old vectors permanently
+            # aliased onto new content, with no repair path (the delete
+            # cascade verifies victims against the documents table and
+            # could never reach them).
+            self.t["documents"].append(new_docs)
+            self.t["embeddings"].append(new_emb)
         self._invalidate_cache()  # owner/category/centroids may have changed
         # a category WITH a text index stays hybrid-consistent without
         # manual maintenance: the new documents' postings append
@@ -1857,22 +1851,23 @@ class Engine:
             raise ValueError(f"substr_dedup_report: unknown {owner}/{category}")
         # the duplicate-set plan references the window frame TWICE (hash
         # aggregate + join-back) — unshared, the flatten pandas UDF +
-        # tokenize + md5 would run twice over the category. Persisted
-        # here; a bulk-analysis frame, reclaimed by the ContextCleaner
-        # when the returned report is dropped.
-        windows = SUB.window_hashes(
-            self._category_doc_texts(cid),
-            L=L,
-            id_col="document_id",
-            text_col="_text",
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        return SUB.exact_substr_stats(
-            self._category_doc_texts(cid),
-            L=L,
-            id_col="document_id",
-            text_col="_text",
-            windows=windows,
-        )
+        # tokenize + md5 would run twice over the category. The window
+        # frame is held only while the report is computed: it comes back
+        # as a local frame (Arrow rows), so no cache entry outlives the call.
+        with persist.Scope() as scope:
+            windows = scope.hold(SUB.window_hashes(
+                self._category_doc_texts(cid),
+                L=L,
+                id_col="document_id",
+                text_col="_text",
+            ))
+            return self.spark.createDataFrame(SUB.exact_substr_stats(
+                self._category_doc_texts(cid),
+                L=L,
+                id_col="document_id",
+                text_col="_text",
+                windows=windows,
+            ).toArrow())
 
     def substr_dedup_cut(
         self,
@@ -1927,19 +1922,18 @@ class Engine:
         # discipline applied to the Engine). The window frame persists
         # too: the duplicate-flags aggregate + join-back both read it
         # (the substr_dedup_report pattern).
-        texts = self._category_doc_texts(cid).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
-        windows = SUB.window_hashes(
-            texts, L=L, id_col="document_id", text_col="_text"
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
         from go_vectorsearch_spark.operators.documents import (
             _format_rejoined_string,
             format_rejoined_text,
         )
 
-        try:
-            cut = SUB.exact_substr_cut(
+        with persist.Scope() as scope:
+            texts = scope.hold(self._category_doc_texts(cid))
+            windows = scope.hold(SUB.window_hashes(
+                texts, L=L, id_col="document_id", text_col="_text"
+            ))
+            # iterate > 1 hands its persisted fixpoint result to this scope
+            cut = scope.adopt(SUB.exact_substr_cut(
                 texts,
                 L=L,
                 id_col="document_id",
@@ -1951,13 +1945,10 @@ class Engine:
                 # adaptive driver-local path for driver-sized
                 # categories (the k-means build precedent)
                 normalize_py=_format_rejoined_string,
-            )
+            ))
             return self._rewrite_category_texts(
-                owner, category, cid, cut, re_embed=re_embed, texts=texts
+                owner, category, cid, cut, texts, scope, re_embed=re_embed
             )
-        finally:
-            windows.unpersist()
-            texts.unpersist()
 
     def _rewrite_category_texts(
         self,
@@ -1966,6 +1957,7 @@ class Engine:
         cid: int,
         cut: DataFrame,
         texts: DataFrame,
+        scope: persist.Scope,
         re_embed: bool = False,
     ) -> int:
         """Apply a cleaned-text frame (document_id, text) to a stored
@@ -2014,8 +2006,8 @@ class Engine:
         # (REQUIRED: the cut plan already references it, so change
         # detection rides the same cached pass; an optional fallback
         # would let a future caller silently lose the one-flatten-pass
-        # guarantee)
-        changed = (
+        # guarantee). ``scope`` — the caller's, owner of a handed-off ``cut``
+        changed = scope.hold(
             cut.join(texts, "document_id")
             .filter(F.col("text") != F.col("_text"))
             # _dl: the PRE-cut token count — the text-index tombstone
@@ -2031,98 +2023,93 @@ class Engine:
                 format_text_udf(F.col("text")).alias("text"),
                 F.size(tokenize(F.col("_text"))).alias("_dl"),
             )
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
         )
-        try:
-            n_changed = int(changed.count())
-            # the count above fully materialized `changed`, the only
-            # consumer of the cut plan — release the fixpoint loop's
-            # persisted frame (iterate>1 returns `cur` persisted; unpersist
-            # on an uncached frame is a no-op)
-            cut.unpersist()
-            if n_changed == 0:
-                return 0
-            ids = changed.select("document_id")
-            # bounded by N_DOC_BUCKETS no matter how many docs changed
-            buckets = sorted(
-                int(r[0])
-                for r in ids.select(
-                    F.pmod(F.col("document_id"), F.lit(N_DOC_BUCKETS)).alias("b")
-                )
-                .distinct()
-                .collect()
+        n_changed = int(changed.count())
+        # the count above fully materialized `changed`, the only
+        # consumer of the cut plan — release the fixpoint's persisted
+        # result now (a no-op when the cut was lazy or borrowed)
+        scope.release(cut)
+        if n_changed == 0:
+            return 0
+        ids = changed.select("document_id")
+        # bounded by N_DOC_BUCKETS no matter how many docs changed
+        buckets = sorted(
+            int(r[0])
+            for r in ids.select(
+                F.pmod(F.col("document_id"), F.lit(N_DOC_BUCKETS)).alias("b")
             )
-            small = n_changed <= BULK_REWRITE_CAP
-            changed_ids = None
-            dl_by_doc = None
-            if small:
-                meta = changed.select("document_id", "_dl").collect()
-                changed_ids = sorted(r["document_id"] for r in meta)
-                dl_by_doc = {r["document_id"]: int(r["_dl"]) for r in meta}
-            upd = (
-                self.t["documents"]
-                .read(partition_values=buckets)
-                .filter(F.col("category_id") == cid)
-                .join(changed.select("document_id", "text"), "document_id")
-                .select(
-                    "document_id",
-                    "name",
-                    "external_id",
-                    json_string_udf(F.col("text")).alias("payload_json"),
-                    "category_id",
-                )
+            .distinct()
+            .collect()
+        )
+        small = n_changed <= BULK_REWRITE_CAP
+        changed_ids = None
+        dl_by_doc = None
+        if small:
+            meta = changed.select("document_id", "_dl").collect()
+            changed_ids = sorted(r["document_id"] for r in meta)
+            dl_by_doc = {r["document_id"]: int(r["_dl"]) for r in meta}
+        upd = (
+            self.t["documents"]
+            .read(partition_values=buckets)
+            .filter(F.col("category_id") == cid)
+            .join(changed.select("document_id", "text"), "document_id")
+            .select(
+                "document_id",
+                "name",
+                "external_id",
+                json_string_udf(F.col("text")).alias("payload_json"),
+                "category_id",
             )
-            self.t["documents"].upsert(upd, "document_id")
-            if re_embed:
-                self._re_embed_documents(
-                    cid, ids, buckets, document_ids=changed_ids
-                )
-            # text index: below the cap, tombstone the pre-cut postings,
-            # COMPACT (a tombstoned id stays hidden until compaction
-            # clears the list — append alone would leave the
-            # re-tokenized documents invisible), then append the changed
-            # documents re-read from the NEW snapshot. Above the cap,
-            # rebuild over the cut snapshot — proportional work for a
-            # whole-corpus cut, id-list-free, and bit-identical scoring
-            # either way.
-            tpath = self._text_index_path(cid)
-            if versioned.exists(tpath):
-                from go_vectorsearch_spark.operators.fulltext import (
-                    compact_postings,
-                    delete_postings,
-                )
+        )
+        self.t["documents"].upsert(upd, "document_id")
+        if re_embed:
+            self._re_embed_documents(
+                cid, ids, buckets, document_ids=changed_ids
+            )
+        # text index: below the cap, tombstone the pre-cut postings,
+        # COMPACT (a tombstoned id stays hidden until compaction
+        # clears the list — append alone would leave the
+        # re-tokenized documents invisible), then append the changed
+        # documents re-read from the NEW snapshot. Above the cap,
+        # rebuild over the cut snapshot — proportional work for a
+        # whole-corpus cut, id-list-free, and bit-identical scoring
+        # either way.
+        tpath = self._text_index_path(cid)
+        if versioned.exists(tpath):
+            from go_vectorsearch_spark.operators.fulltext import (
+                compact_postings,
+                delete_postings,
+            )
 
-                if small:
-                    delete_postings(
-                        self.spark, tpath, changed_ids, dl_by_doc=dl_by_doc
-                    )
-                    compact_postings(self.spark, tpath)
-                    self.append_text_index(owner, category, changed_ids)
-                else:
-                    n_buckets = int(versioned.snapshot(tpath)[1]["n_buckets"])
-                    self.build_text_index(owner, category, n_buckets=n_buckets)
-            # near-dup band store: the changed documents' band rows
-            # derive from the text — rewrite exactly theirs under the
-            # store's cross-process lock (the compact_neardup_index
-            # discipline); the changed set joins as a frame, never as
-            # an id literal
-            if versioned.exists(self._neardup_path(cid)):
-                t = self._neardup_table(cid)
-                with t._write_lock():
-                    kept = t.read().join(ids, "document_id", "left_anti")
-                    # buckets only with the frame shape — the id-list
-                    # branch derives its own pruning set from the ids
-                    fresh = self._doc_band_rows(
-                        self._category_doc_texts(cid, changed_ids)
-                        if small
-                        else self._category_doc_texts(cid, ids, buckets=buckets),
-                        "document_id",
-                    )
-                    t.write(kept.unionByName(fresh))
-            self._invalidate_cache()
-            return n_changed
-        finally:
-            changed.unpersist()
+            if small:
+                delete_postings(
+                    self.spark, tpath, changed_ids, dl_by_doc=dl_by_doc
+                )
+                compact_postings(self.spark, tpath)
+                self.append_text_index(owner, category, changed_ids)
+            else:
+                n_buckets = int(versioned.snapshot(tpath)[1]["n_buckets"])
+                self.build_text_index(owner, category, n_buckets=n_buckets)
+        # near-dup band store: the changed documents' band rows
+        # derive from the text — rewrite exactly theirs under the
+        # store's cross-process lock (the compact_neardup_index
+        # discipline); the changed set joins as a frame, never as
+        # an id literal
+        if versioned.exists(self._neardup_path(cid)):
+            t = self._neardup_table(cid)
+            with t._write_lock():
+                kept = t.read().join(ids, "document_id", "left_anti")
+                # buckets only with the frame shape — the id-list
+                # branch derives its own pruning set from the ids
+                fresh = self._doc_band_rows(
+                    self._category_doc_texts(cid, changed_ids)
+                    if small
+                    else self._category_doc_texts(cid, ids, buckets=buckets),
+                    "document_id",
+                )
+                t.write(kept.unionByName(fresh))
+        self._invalidate_cache()
+        return n_changed
 
     def _re_embed_documents(
         self,
@@ -2162,10 +2149,10 @@ class Engine:
             "external_id",
             "payload_json",
         )
-        chunks = dequantized_vector(
-            self._embed_chunks(prepare_chunks(docs, ctx_num=2048))
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        try:
+        with persist.Scope() as scope:
+            chunks = scope.hold(dequantized_vector(
+                self._embed_chunks(prepare_chunks(docs, ctx_num=2048))
+            ))
             cents = (
                 self.t["centroids"].read().filter(F.col("category_id") == cid)
             )
@@ -2219,8 +2206,6 @@ class Engine:
                 )
             else:
                 emb_t.append(new_emb)
-        finally:
-            chunks.unpersist()
 
     def decontaminate_report(
         self, owner: str, category: str, benchmark_texts: list[str], L: int = 8
@@ -2297,16 +2282,14 @@ class Engine:
             [(i, flatten(t)) for i, t in enumerate(benchmark_texts)],
             "b_ix long, _text string",
         )
-        # one flatten pass per cut call (see substr_dedup_cut): texts
-        # feeds the window hashing, the rebuild and the change detection
-        texts = self._category_doc_texts(cid).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
         from go_vectorsearch_spark.operators.documents import (
             format_rejoined_text,
         )
 
-        try:
+        # one flatten pass per cut call (see substr_dedup_cut): texts
+        # feeds the window hashing, the rebuild and the change detection
+        with persist.Scope() as scope:
+            texts = scope.hold(self._category_doc_texts(cid))
             cut = SUB.decontaminate_cut(
                 texts,
                 bench,
@@ -2318,10 +2301,8 @@ class Engine:
                 normalize=format_rejoined_text,
             )
             return self._rewrite_category_texts(
-                owner, category, cid, cut, re_embed=re_embed, texts=texts
+                owner, category, cid, cut, texts, scope, re_embed=re_embed
             )
-        finally:
-            texts.unpersist()
 
     def boilerplate_report(
         self, owner: str, category: str, min_df: int = 10
@@ -2441,11 +2422,10 @@ class Engine:
             raise ValueError(
                 f"boilerplate_cut: min_df must be >= 2, got {min_df}"
             )
-        texts = self._category_doc_texts(cid).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
-        try:
-            cut = strip_boilerplate_fixpoint(
+        with persist.Scope() as scope:
+            texts = scope.hold(self._category_doc_texts(cid))
+            # the fixpoint hands its persisted result to this scope
+            cut = scope.adopt(strip_boilerplate_fixpoint(
                 texts,
                 id_col="document_id",
                 text_col="_text",
@@ -2463,12 +2443,10 @@ class Engine:
                 # whitespace edges) — enables the fixpoint's adaptive
                 # driver-local path for driver-sized categories
                 normalize_py=_format_multiline_string,
-            )
+            ))
             return self._rewrite_category_texts(
-                owner, category, cid, cut, re_embed=re_embed, texts=texts
+                owner, category, cid, cut, texts, scope, re_embed=re_embed
             )
-        finally:
-            texts.unpersist()
 
     def build_neardup_index(self, owner: str, category: str) -> int:
         """Build (or rebuild) the category's persisted near-dup band
@@ -2477,16 +2455,15 @@ class Engine:
         cid = self._category_id(owner, category)
         if cid is None:
             raise ValueError(f"build_neardup_index: unknown {owner}/{category}")
-        rows = self._doc_band_rows(self._category_doc_texts(cid), "document_id")
         t = self._neardup_table(cid)
-        # persist so the write materializes the band rows ONCE and the
+        # held so the write materializes the band rows ONCE and the
         # return-value count reuses them — no read-back of the store
-        rows.persist()
-        try:
+        with persist.Scope() as scope:
+            rows = scope.hold(
+                self._doc_band_rows(self._category_doc_texts(cid), "document_id")
+            )
             t.write(rows)
             return rows.select("document_id").distinct().count()
-        finally:
-            rows.unpersist()
 
     def append_neardup_index(
         self, owner: str, category: str, document_ids: list[int]
@@ -2525,16 +2502,24 @@ class Engine:
         cid = self._category_id(owner, category)
         if cid is None:
             raise ValueError(f"neardup_pairs_report: unknown {owner}/{category}")
-        return DD.minhash_lsh_pairs(
-            self._category_doc_texts(cid),
-            id_col="document_id",
-            text_col="_text",
-            threshold=threshold,
-        ).select(
-            F.col("id_a").alias("document_id_a"),
-            F.col("id_b").alias("document_id_b"),
-            "jaccard",
-        )
+        texts = self._category_doc_texts(cid)
+        # the signatures feed two join sides + the verify: held while the
+        # report is computed, which comes back as a local frame
+        with persist.Scope() as scope:
+            sigs = scope.hold(DD.signature_frame(
+                DD.shingled_docs(texts, "document_id", "_text")
+            ))
+            return self.spark.createDataFrame(DD.minhash_lsh_pairs(
+                texts,
+                id_col="document_id",
+                text_col="_text",
+                threshold=threshold,
+                signatures=sigs,
+            ).select(
+                F.col("id_a").alias("document_id_a"),
+                F.col("id_b").alias("document_id_b"),
+                "jaccard",
+            ).toArrow())
 
     def compact_neardup_index(self, owner: str, category: str) -> int:
         """Drop band rows of deleted documents from the category's

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from go_vectorsearch_spark import persist
 from go_vectorsearch_spark.functions.text import md5_int32, ws_tokens
 from go_vectorsearch_spark.operators.dedup import _shingles_of_tokens
 
@@ -271,8 +272,9 @@ def _local_result_frame(df: DataFrame, id_col: str, result: dict) -> DataFrame:
     Arrow path serializes them as one columnar batch — the list-of-
     tuples form walks the pickle local-relation path, measured ~1 s per
     50k-text result against ~ms over Arrow (guide §6: Arrow for driver
-    transfers). Falls back to the row path if pandas/Arrow declines
-    (the result is driver-sized either way)."""
+    transfers); Spark's Arrow fallback takes the row path if Arrow
+    declines (the result is driver-sized either way)."""
+    import pandas as pd
     from pyspark.sql.types import StringType, StructField, StructType
 
     schema = StructType(
@@ -281,15 +283,8 @@ def _local_result_frame(df: DataFrame, id_col: str, result: dict) -> DataFrame:
             StructField("text", StringType()),
         ]
     )
-    try:
-        import pandas as pd
-
-        pdf = pd.DataFrame(
-            {id_col: list(result.keys()), "text": list(result.values())}
-        )
-        return df.sparkSession.createDataFrame(pdf, schema=schema)
-    except Exception:
-        return df.sparkSession.createDataFrame(list(result.items()), schema=schema)
+    pdf = pd.DataFrame({id_col: list(result.keys()), "text": list(result.values())})
+    return df.sparkSession.createDataFrame(pdf, schema=schema)
 
 
 def _fixpoint_local(
@@ -451,32 +446,21 @@ def strip_boilerplate_fixpoint(
     the loop as a marked passthrough leg instead of splitting into held
     side frames: they are excluded from the fit and the strip, rejoin
     each pass's one cached frame, and the result needs no final
-    reconstruction join. Intermediates persist for their pass and
-    release AS SUPERSEDED, so the cache footprint is bounded by one
-    pass's working set regardless of ``iterate``, and the RESULT always
-    comes back persisted — materialized on the distributed path; the
-    driver-local path leaves materialization to the first consumer,
-    whose "recompute" is a memory copy of a local Arrow relation (the
-    eager count there was one pure-floor job per call, r13) — and the
-    caller releases it (previously a first-pass convergence returned
-    the raw source plan, r12 advice). A converged result re-fit yields an EMPTY hot set over
+    reconstruction join. Intermediates are held for their pass and
+    released AS SUPERSEDED, so the cache footprint is one pass's working
+    set regardless of ``iterate``. The RESULT always comes back
+    persisted and handed off to the caller's scope (persist.py) —
+    materialized on the distributed path, left to the first consumer on
+    the driver-local one (a memory copy of a local Arrow relation). A converged result re-fit yields an EMPTY hot set over
     the still-active documents: stripped lines reach document frequency
     zero, survivors kept their sub-threshold frequencies, and
     normalization-migrated forms were re-checked by the next pass —
     only the frozen empty-document markers (reported but irremovable)
     can remain frequent."""
-    from pyspark import StorageLevel
-
     if iterate < 1:
         raise ValueError(
             f"strip_boilerplate_fixpoint: iterate must be >= 1, got {iterate}"
         )
-
-    def _hold(frame: DataFrame) -> DataFrame:
-        frame = frame.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        frame.count()
-        return frame
-
     if not _force_distributed and (normalize is None or normalize_py is not None):
         rows = _bounded_local_rows(
             df, id_col, text_col, local_max_docs, local_max_bytes
@@ -491,13 +475,12 @@ def strip_boilerplate_fixpoint(
                 normalize_py if normalize is not None else None,
                 marker,
             )
-            # persisted per the return contract; materialization is the
-            # first consumer's — the source is a driver-local Arrow
-            # relation, so recompute is a memory copy and the eager
-            # count was one pure-floor job per call (r13)
-            return _local_result_frame(df, id_col, result).persist(
-                StorageLevel.MEMORY_AND_DISK_DESER
-            )
+            # handed off persisted per the return contract, unmaterialized
+            # (an eager count was one pure-floor job per call)
+            with persist.Scope() as scope:
+                return scope.hand_off(
+                    scope.hold(_local_result_frame(df, id_col, result))
+                )
 
     if normalize is not None:
         # freeze PRE-EXISTING empty-document markers up front, not just
@@ -521,65 +504,62 @@ def strip_boilerplate_fixpoint(
         )
     else:
         cur = df.select(F.col(id_col), F.col(text_col).alias("text"))
-    # the frame backing the CURRENT ``cur``'s plan (this pass's fused
-    # fit+strip+normalize rebuild): the only intermediate that must stay
-    # cached across the pass boundary — everything older is released
-    # the moment the next pass's frame materializes
-    live: list[DataFrame] = []
-    for _ in range(iterate):
-        if normalize is None:
-            # no storage convention in play: '' documents stay '' and
-            # contribute no countable lines — no freeze needed
-            staged = _strip_rebuild(cur, id_col, "text", min_df, None).select(
-                F.col("_id").alias(id_col), "text", "__changed"
-            )
-        else:
-            active = cur.filter(~F.col("__frozen"))
-            raw = _strip_rebuild(active, id_col, "text", min_df, None)
-            changed = F.col("__changed")
-            staged = raw.select(
-                F.col("_id").alias(id_col),
-                F.when(changed, normalize(F.col("text")))
-                .otherwise(F.col("text"))
-                .alias("text"),
-                changed.alias("__changed"),
-                # only a CHANGED empty freezes (becomes the marker): an
-                # input-'' document is unchanged forever, contributes no
-                # countable lines, and must emerge as '' verbatim — it
-                # circulates harmlessly instead of being misfiled as a
-                # marker
-                (changed & (F.col("text") == "")).alias("__frozen"),
-            ).unionByName(
-                # frozen docs ride along untouched — same cached frame,
-                # no held side frame, no reconstruction join at the end
-                cur.filter(F.col("__frozen")).select(
-                    F.col(id_col),
-                    "text",
-                    F.lit(False).alias("__changed"),
-                    F.lit(True).alias("__frozen"),
+    with persist.Scope() as scope:
+        # the frame backing the CURRENT ``cur``'s plan (this pass's fused
+        # fit+strip+normalize rebuild) is the only intermediate that must
+        # stay cached across the pass boundary — everything older is
+        # released the moment the next pass's frame materializes
+        for _ in range(iterate):
+            if normalize is None:
+                # no storage convention in play: '' documents stay '' and
+                # contribute no countable lines — no freeze needed
+                staged = _strip_rebuild(cur, id_col, "text", min_df, None).select(
+                    F.col("_id").alias(id_col), "text", "__changed"
                 )
-            )
-        staged = staged.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        # ONE action: materializes the pass's cache AND returns the
-        # convergence decision (changed-count ≡ hot-fit emptiness, both
-        # directions — see the docstring)
-        if staged.filter(F.col("__changed")).count() == 0:
-            staged.unpersist()
-            break
-        for frame in live:
-            frame.unpersist()
-        live = [staged]
-        cur = staged
-    # persist + materialize the RESULT itself, unconditionally (r12
-    # advice: a first-pass convergence used to return the raw source
-    # plan), then release the final pass's intermediate (its rows now
-    # live in out's cache) — the caller releases out (the substr
-    # fixpoint's contract: _rewrite_category_texts unpersists the cut
-    # frame it was given)
-    out = _hold(cur.select(id_col, "text"))
-    for frame in live:
-        frame.unpersist()
-    return out
+            else:
+                active = cur.filter(~F.col("__frozen"))
+                raw = _strip_rebuild(active, id_col, "text", min_df, None)
+                changed = F.col("__changed")
+                staged = raw.select(
+                    F.col("_id").alias(id_col),
+                    F.when(changed, normalize(F.col("text")))
+                    .otherwise(F.col("text"))
+                    .alias("text"),
+                    changed.alias("__changed"),
+                    # only a CHANGED empty freezes (becomes the marker): an
+                    # input-'' document is unchanged forever, contributes no
+                    # countable lines, and must emerge as '' verbatim — it
+                    # circulates harmlessly instead of being misfiled as a
+                    # marker
+                    (changed & (F.col("text") == "")).alias("__frozen"),
+                ).unionByName(
+                    # frozen docs ride along untouched — same cached frame,
+                    # no held side frame, no reconstruction join at the end
+                    cur.filter(F.col("__frozen")).select(
+                        F.col(id_col),
+                        "text",
+                        F.lit(False).alias("__changed"),
+                        F.lit(True).alias("__frozen"),
+                    )
+                )
+            staged = scope.hold(staged)
+            # ONE action: materializes the pass's cache AND returns the
+            # convergence decision (changed-count ≡ hot-fit emptiness, both
+            # directions — see the docstring)
+            if staged.filter(F.col("__changed")).count() == 0:
+                scope.release(staged)
+                break
+            scope.release(cur)
+            cur = staged
+        # hold + materialize the RESULT itself, unconditionally (a
+        # first-pass convergence must not return the raw source plan),
+        # then release the final pass's intermediate (its rows now live
+        # in out's cache) and hand out to the caller's scope (the substr
+        # fixpoint's contract)
+        out = scope.hold(cur.select(id_col, "text"))
+        out.count()
+        scope.release(cur)
+        return scope.hand_off(out)
 
 
 def repetition_stats(

@@ -29,10 +29,10 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import StorageLevel
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from go_vectorsearch_spark import persist
 from go_vectorsearch_spark.functions.text import md5_int32, ws_tokens
 from go_vectorsearch_spark.sources.tables import spread
 
@@ -204,11 +204,11 @@ def jaccard_pairs(
     shingles — is unaffected in practice (the recall-calibration test
     pins this on the sf corpus).
 
-    ``shingled`` (a persisted :func:`shingled_docs` frame) lets several
-    dedup variants share one shingling pass.
+    ``shingled`` (a caller-held :func:`shingled_docs` frame) lets several
+    dedup variants share one shingling pass; without it nothing is held.
     """
     if shingled is None:
-        shingled = shingled_docs(df, id_col, text_col, n).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        shingled = shingled_docs(df, id_col, text_col, n)
     # per-doc set size rides the exploded rows (8 bytes per side) so the
     # Jaccard denominator is available straight off the pair-count
     # aggregate — measured faster at sf0.1 than the two join-backs
@@ -375,17 +375,17 @@ def minhash_lsh_pairs(
     n: int = 3,
     threshold: float = 0.2,
     shingled: DataFrame | None = None,
-    persist_signatures: bool = True,
+    signatures: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate pairs from 4×4 LSH banding, verified with exact Jaccard.
 
-    ``persist_signatures=False`` skips caching the signature frame: for
-    REQUEST-SIZED inputs inside a long-lived service (the upload
-    neardup-skip path) a persisted frame outliving the call leaks a
-    CacheManager entry per request, and recomputing a tiny batch's
-    signatures per consumer is map-side noise. Corpus-scale callers
-    keep the default (the signature subtree feeds two join sides + the
-    verify — measured ~14x slower unshared at sf0.1).
+    ``signatures`` — a caller-held :func:`signature_frame` frame. The
+    signature subtree feeds two join sides + the verify (measured ~14x
+    slower unshared at sf0.1), so corpus-scale callers hold one in
+    their scope. Without it the signatures are computed lazily and
+    nothing is persisted: the right shape for REQUEST-SIZED inputs (the
+    upload neardup-skip path), where recomputing a tiny batch's
+    signatures per consumer is map-side noise.
 
     Plan: per-row signature (no shuffle) → explode to (band, band_key)
     where band_key = md5 of the band's 4 values → self-join on band bucket
@@ -395,22 +395,19 @@ def minhash_lsh_pairs(
     raw text. ``shingled`` (see :func:`shingled_docs`) shares the
     shingling pass with the other dedup variants.
     """
-    if shingled is None:
-        shingled = shingled_docs(df, id_col, text_col, n)
     # ``_sh`` already holds the md5_int32 shingle hashes (shingled_docs
     # hashes at the source), so the 16 signature mins derive from it
-    # directly; materializing sigd keeps the signature from being
-    # re-evaluated on every reuse (two join sides + verify — measured
-    # ~14x slower unshared at sf0.1). Note: sigd stays persisted for the
-    # lifetime of the returned (lazy) frame; callers running many
-    # corpora through one session should pass a managed ``shingled``
-    # frame and handle persistence themselves (the registry does).
+    # directly. The returned frame is lazy, so it owns no cache entry:
+    # sharing the signatures across the join sides is the caller's
+    # ``signatures`` frame, held in the caller's scope.
     #
     # signature_frame drops shingle-less docs (see its docstring — the
     # sentinel-signature band collision / NULL-vs-NaN parity split)
-    sigd = signature_frame(shingled)
-    if persist_signatures:
-        sigd = sigd.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    sigd = signatures
+    if sigd is None:
+        if shingled is None:
+            shingled = shingled_docs(df, id_col, text_col, n)
+        sigd = signature_frame(shingled)
     bands = minhash_band_rows(sigd)
     a, b = bands.alias("a"), bands.alias("b")
     cand = (
@@ -533,8 +530,9 @@ def simhash_pairs(
     bands; any pair within Hamming 3 must agree on ≥ 1 band (pigeonhole),
     so the band equi-join finds *all* such pairs — exact, not
     approximate — while shuffling only (band, key) ints. Verification
-    uses bit_count(xor). Pass a precomputed (persisted) :func:`simhash`
-    frame as ``sims`` to share the sketch pass with other consumers.
+    uses bit_count(xor). Pass a caller-held :func:`simhash` frame as
+    ``sims`` to share the sketch pass with other consumers; without it
+    the sketch is computed lazily and nothing is persisted.
 
     ``max_band_freq``: hot-band cap, the simhash analog of
     :func:`jaccard_pairs`'s hot-shingle cap. A (band, key) bucket of f
@@ -549,7 +547,7 @@ def simhash_pairs(
     """
     assert max_hamming < SIMHASH_BANDS, "pigeonhole guarantee needs hamming < bands"
     if sims is None:
-        sims = simhash(df, id_col, text_col).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        sims = simhash(df, id_col, text_col)
     sims = sims.select(F.col(id_col).alias("_id"), F.col("simhash").alias("_sim"))
     band_mask = (1 << SIMHASH_BAND_BITS) - 1
     bands = sims.select(
@@ -666,106 +664,90 @@ def neardup_components(
     """
     if collect_threshold is None:
         collect_threshold = _driver_collect_threshold(pairs.sparkSession)
-    # persist before branching: count() then collect()/loop would
-    # otherwise recompute the whole upstream pair pipeline twice.
-    # OWNERSHIP (r14): only a persist THIS function adds may be
-    # released here — an unconditional unpersist on a caller-persisted
-    # frame (the registry's session-cached jaccard pairs) silently
-    # evicted the shared cache, and every later consumer recomputed the
-    # whole pair pipeline per action while the cache dict still claimed
-    # it was materialized.
-    owned = not (
-        pairs.storageLevel.useMemory or pairs.storageLevel.useDisk
-    )
-    if owned:
-        pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    n_edges = pairs.count()
-    if n_edges <= collect_threshold:
-        rows = pairs.select(id_a, id_b).collect()
-        parent: dict = {}
+    # hold before branching: count() then collect()/loop would
+    # otherwise recompute the whole upstream pair pipeline twice. A
+    # caller-persisted frame (the registry's session-cached jaccard
+    # pairs) is borrowed, never released here (releasing it
+    # would evict the shared cache).
+    with persist.Scope() as scope:
+        pairs = scope.hold(pairs)
+        n_edges = pairs.count()
+        if n_edges <= collect_threshold:
+            rows = pairs.select(id_a, id_b).collect()
+            parent: dict = {}
 
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
+            def find(x):
+                root = x
+                while parent[root] != root:
+                    root = parent[root]
+                while parent[x] != root:  # path compression
+                    parent[x], x = root, parent[x]
+                return root
 
-        for r in rows:
-            u, v = r[0], r[1]
-            parent.setdefault(u, u)
-            parent.setdefault(v, v)
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                # union by min id so component = smallest member, matching
-                # the label-propagation path exactly
-                lo, hi = (ru, rv) if ru < rv else (rv, ru)
-                parent[hi] = lo
-        labels = [(x, find(x)) for x in parent]
-        id_type = dict(pairs.dtypes)[id_a]
-        if owned:
-            pairs.unpersist()
-        schema = f"doc_id {id_type}, component {id_type}"
-        try:
+            for r in rows:
+                u, v = r[0], r[1]
+                parent.setdefault(u, u)
+                parent.setdefault(v, v)
+                ru, rv = find(u), find(v)
+                if ru != rv:
+                    # union by min id so component = smallest member, matching
+                    # the label-propagation path exactly
+                    lo, hi = (ru, rv) if ru < rv else (rv, ru)
+                    parent[hi] = lo
+            labels = [(x, find(x)) for x in parent]
+            id_type = dict(pairs.dtypes)[id_a]
             # one Arrow batch instead of the pickle local-relation walk
             # (guide §6: Arrow for driver transfers) — the label list is
             # driver-sized by the collect_threshold gate above
-            import pandas as pd
-
-            pdf = pd.DataFrame(labels, columns=["doc_id", "component"])
-            return pairs.sparkSession.createDataFrame(pdf, schema=schema)
-        except Exception:
-            return pairs.sparkSession.createDataFrame(labels, schema)
-
-    edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-        .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
-        .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    )
-    labels = (
-        edges.select(F.col("u").alias("doc_id"))
-        .distinct()
-        .withColumn("component", F.col("doc_id"))
-        .localCheckpoint()
-    )
-    changed = -1
-    for _ in range(max_rounds):
-        neighbor_min = (
-            edges.join(labels, edges.v == labels.doc_id)
-            .groupBy(F.col("u").alias("doc_id"))
-            .agg(F.min("component").alias("_nbr"))
-        )
-        updated = (
-            labels.join(neighbor_min, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.least(F.col("component"), F.coalesce(F.col("_nbr"), F.col("component"))).alias(
-                    "component"
-                ),
+            return pairs.sparkSession.createDataFrame(
+                pd.DataFrame(labels, columns=["doc_id", "component"]),
+                schema=f"doc_id {id_type}, component {id_type}",
             )
+
+        edges = scope.hold(
+            pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+            .union(pairs.select(F.col(id_b).alias("u"), F.col(id_a).alias("v")))
+            .distinct()
+        )
+        labels = (
+            edges.select(F.col("u").alias("doc_id"))
+            .distinct()
+            .withColumn("component", F.col("doc_id"))
             .localCheckpoint()
         )
-        changed = (
-            updated.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .filter(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = updated
-        if changed == 0:
-            break
-    edges.unpersist()
-    if owned:
-        pairs.unpersist()
-    if changed != 0:
-        raise RuntimeError(
-            f"neardup_components did not converge in {max_rounds} rounds "
-            f"({changed} labels still changing): graph diameter exceeds the "
-            "round budget; raise max_rounds"
-        )
-    return labels
+        changed = -1
+        for _ in range(max_rounds):
+            neighbor_min = (
+                edges.join(labels, edges.v == labels.doc_id)
+                .groupBy(F.col("u").alias("doc_id"))
+                .agg(F.min("component").alias("_nbr"))
+            )
+            updated = (
+                labels.join(neighbor_min, "doc_id", "left")
+                .select(
+                    "doc_id",
+                    F.least(F.col("component"), F.coalesce(F.col("_nbr"), F.col("component"))).alias(
+                        "component"
+                    ),
+                )
+                .localCheckpoint()
+            )
+            changed = (
+                updated.alias("n")
+                .join(labels.alias("o"), "doc_id")
+                .filter(F.col("n.component") != F.col("o.component"))
+                .count()
+            )
+            labels = updated
+            if changed == 0:
+                break
+        if changed != 0:
+            raise RuntimeError(
+                f"neardup_components did not converge in {max_rounds} rounds "
+                f"({changed} labels still changing): graph diameter exceeds the "
+                "round budget; raise max_rounds"
+            )
+        return labels
 
 
 def neardup_dedup(

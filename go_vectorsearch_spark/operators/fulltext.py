@@ -42,6 +42,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from go_vectorsearch_spark import versioned
+from go_vectorsearch_spark.persist import Scope
 
 TOKEN_SPLIT_RE = "[^a-z0-9]+"
 
@@ -110,25 +111,22 @@ def build_bm25_index(
         # the stats aggregate below is itself the materializing action:
         # it scans every posting partition, filling the cache while
         # computing the corpus scalars — a separate eager count() was
-        # one extra pass over the postings (r13)
-        postings = postings.persist()
-        row = (
-            postings.select("doc_id", "dl")
-            .distinct()
-            .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
-            .head()
-        )
-        n, dl_sum = int(row["n"]), int(row["s"] or 0)
-        return BM25Index(
-            postings=postings,
-            n_docs=n,
-            avgdl=(dl_sum / n if n else 0.0),
-            sum_dl=dl_sum,
-        )
-    stats = toks.agg(
-        F.count(F.when(F.size("_toks") > 0, 1)).alias("n"),
-        F.sum(F.size("_toks")).alias("s"),
-    ).head()
+        # one extra pass over the postings. The held postings are
+        # handed off to the caller's scope.
+        with Scope() as scope:
+            postings = scope.hold(postings)
+            stats = (
+                postings.select("doc_id", "dl")
+                .distinct()
+                .agg(F.count("*").alias("n"), F.sum("dl").alias("s"))
+                .head()
+            )
+            postings = scope.hand_off(postings)
+    else:
+        stats = toks.agg(
+            F.count(F.when(F.size("_toks") > 0, 1)).alias("n"),
+            F.sum(F.size("_toks")).alias("s"),
+        ).head()
     n, dl_sum = int(stats["n"]), int(stats["s"] or 0)
     return BM25Index(
         postings=postings,

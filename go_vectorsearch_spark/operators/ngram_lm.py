@@ -77,18 +77,8 @@ def train_ngram_lm(
     search and BPE all see one view of the text."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from pyspark import StorageLevel
-
+    from go_vectorsearch_spark import persist
     from go_vectorsearch_spark.operators.fulltext import tokenize
-
-    # ONE tokenize pass: the per-order count jobs and the unigram-total
-    # agg all read the persisted token frame instead of re-running the
-    # raw-text scan + split per action (order+1 corpus scans → 1; at
-    # corpus scale the text scan dominates training). Scratch frame —
-    # released before returning.
-    toks = docs.select(tokenize(F.col(text_col)).alias("_t")).persist(
-        StorageLevel.MEMORY_AND_DISK_DESER
-    )
 
     def gram_table(n: int) -> dict[tuple, int]:
         if n == 1:
@@ -127,18 +117,20 @@ def train_ngram_lm(
         # one agg — keeps the order-1 ratio a true probability
         return int(toks.agg(F.sum(F.size("_t")).alias("s")).head()["s"] or 0)
 
-    # the order+1 jobs are independent (each a TakeOrdered/agg over the
-    # cached frame), so submit them together and let later jobs
-    # back-fill the earlier jobs' straggler tails — results land by
-    # index, so completion order cannot reorder the model
-    try:
-        with ThreadPoolExecutor(max_workers=order + 1) as pool:
-            futs = [pool.submit(gram_table, n) for n in range(1, order + 1)]
-            tot_fut = pool.submit(corpus_total)
-            counts = [f.result() for f in futs]
-            total = tot_fut.result()
-    finally:
-        toks.unpersist()
+    # ONE tokenize pass: the per-order count jobs and the unigram-total
+    # agg all read the held token frame instead of re-running the
+    # raw-text scan + split per action (order+1 corpus scans → 1; at
+    # corpus scale the text scan dominates training). Scratch frame —
+    # released before returning. The order+1 jobs are independent (each
+    # a TakeOrdered/agg over the cached frame), so submit them together
+    # and let later jobs back-fill the earlier jobs' straggler tails —
+    # results land by index, so completion order cannot reorder the model
+    with persist.Scope() as scope, ThreadPoolExecutor(order + 1) as pool:
+        toks = scope.hold(docs.select(tokenize(F.col(text_col)).alias("_t")))
+        futs = [pool.submit(gram_table, n) for n in range(1, order + 1)]
+        tot_fut = pool.submit(corpus_total)
+        counts = [f.result() for f in futs]
+        total = tot_fut.result()
     return NgramLM(order=order, counts=tuple(counts), total=total)
 
 

@@ -59,6 +59,7 @@ import threading
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from go_vectorsearch_spark import persist
 from go_vectorsearch_spark.functions.text import ws_tokens
 from go_vectorsearch_spark.sources.tables import spread
 
@@ -420,13 +421,10 @@ def exact_substr_cut(
     et al. single pass. Above 1, passes repeat until a pass would change
     no document (fixpoint: cut-created adjacencies are re-checked) or
     the bound is hit. Convergence is decided by a PROBE, not by cutting
-    and comparing (r12 — the r11 verdict's cold-cost ask): each round
-    windows the current text ONCE (r13: the round's window frame
-    persists for the round, so the flag aggregate and its join-back
-    read one cached scan instead of re-tokenizing the corpus twice) and
-    aggregates duplicate flags ONCE (persisted), then asks whether any
-    EFFECTIVE cut span exists
-    (a removable island not fully keeper-covered — exactly
+    and comparing: each round windows the current text ONCE and
+    aggregates duplicate flags ONCE (both held for the round), then asks
+    whether any EFFECTIVE cut span exists (a removable island not fully
+    keeper-covered — exactly
     :func:`_cut_once`'s passthrough gate, over the duplicated-window
     docs only). No effective span means the cut pass would return its
     input verbatim, so the converged round — every fixpoint's last —
@@ -438,7 +436,9 @@ def exact_substr_cut(
     Returns (id_col, text) with the cleaned text rebuilt from the
     ORIGINAL-case tokens (positions align because the tokenizer splits on
     whitespace before lowercasing). Docs with nothing to cut pass through
-    with their token stream re-joined by single spaces.
+    with their token stream re-joined by single spaces. At ``iterate`` 1
+    the result is lazy; above 1 it comes back persisted and handed off
+    (persist.py): the caller's scope adopts it.
 
     Plan shape: the window/keeper computation reuses the stats pipeline;
     per-document span arrays come back via two partitioned-aggregation
@@ -503,98 +503,81 @@ def exact_substr_cut(
             local_out = _local_result_frame(df, id_col, result)
             if iterate == 1:
                 return local_out  # the single-pass contract: lazy frame
-            from pyspark import StorageLevel as _SL
-
-            # persisted per the fixpoint return contract (pinned by
-            # tests on the storage level); materialization is left to
-            # the first consumer — the source is a driver-local Arrow
-            # relation, so "recompute" is a memory copy, and the eager
-            # count here was one pure-floor job per fixpoint call (r13)
-            return local_out.persist(_SL.MEMORY_AND_DISK_DESER)
-    from pyspark import StorageLevel
-
-    # pass-1 window sharing lives IN the operator for the fixpoint case
-    # (r13 self-review): duplicate_flags reads its window frame twice,
-    # and callers used to pre-build a persisted windows hint that the
-    # adaptive gate then ignores — built here instead, it exists only
-    # on the distributed path that consumes it, and releases once the
-    # loop ends (single-pass callers still pass their own shared frame:
-    # a lazy return cannot own a persist lifecycle)
-    own_w = None
-    if iterate > 1 and windows is None and flags is None:
-        own_w = window_hashes(df, L, id_col, text_col).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
-        windows = own_w
-    out = _cut_once(
-        df, L, id_col, text_col, windows=windows, flags=flags, normalize=normalize
-    )
+            # handed off persisted per the fixpoint return contract,
+            # unmaterialized: the source is a driver-local Arrow relation,
+            # and an eager count was one pure-floor job per call
+            with persist.Scope() as scope:
+                return scope.hand_off(scope.hold(local_out))
     if iterate == 1:
-        return out
-
-    empty = F.array().cast("array<struct<s_pos:int,e_pos:int>>")
-    cur = out.persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    for _ in range(iterate - 1):
-        # the round's window frame persists for the round (r13 — the
-        # r12 verdict's curate-residual ask): duplicate_flags references
-        # it TWICE (the keeper aggregate and the join-back), so an
-        # unshared subtree re-tokenized + re-hashed the round's corpus
-        # twice; cached, the scan+split+md5 pass is paid once and both
-        # consumers read columnar cache. Released as superseded the
-        # moment the round's outputs are materialized — the fixpoint
-        # discipline, one round's working set regardless of iterate.
-        w_cur = window_hashes(cur, L, id_col, "text").persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
+        # single-pass callers pass their own shared window frame: a
+        # lazy return owns no cache entry
+        return _cut_once(
+            df, L, id_col, text_col, windows=windows, flags=flags,
+            normalize=normalize,
         )
-        cur_flags = duplicate_flags(w_cur).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
-        # fast converged path (r13): an EMPTY duplicate set trivially
-        # implies no effective cut span, and after a keeper cut it is
-        # the COMMON convergence shape (every duplicated family is down
-        # to its keeper copy, so the next round's duplicate set is
-        # empty unless keeper protection or cut-created adjacencies
-        # left real duplicates). Checking it first skips planning +
-        # compiling the island/subtraction probe below — whose codegen
-        # alone outweighs this isEmpty — in exactly the rounds where
-        # that probe would scan zero rows.
-        if cur_flags.isEmpty():
-            cur_flags.unpersist()
-            w_cur.unpersist()
-            break
-        # effective-cut existence probe — the same island/subtraction
-        # machinery the cut itself runs, WITHOUT touching text: rows
-        # exist only for docs carrying duplicated windows, and a doc
-        # would change iff some removable island survives keeper
-        # subtraction (cutting >= L tokens always shortens the stream,
-        # so effective span <=> text change, both directions)
-        would_cut = (
-            _merge_islands(
-                cur_flags.select("_id", "pos", "_keep"), L,
-                extra_keys=("_keep",),
+    with persist.Scope() as scope:
+        # pass-1 window sharing lives IN the operator for the fixpoint
+        # case: duplicate_flags reads its window frame twice, and a
+        # caller-built windows hint would be ignored by the adaptive
+        # gate — built here, it exists only on the distributed path
+        if windows is None and flags is None:
+            windows = scope.hold(window_hashes(df, L, id_col, text_col))
+        cur = scope.hold(_cut_once(
+            df, L, id_col, text_col, windows=windows, flags=flags,
+            normalize=normalize,
+        ))
+        for _ in range(iterate - 1):
+            # the round's window frame is held for the round:
+            # duplicate_flags reads it TWICE (the keeper aggregate and the
+            # join-back), so unshared the round's corpus was re-tokenized
+            # twice. Released as superseded once the round's outputs are
+            # materialized: one round's working set regardless of iterate.
+            w_cur = scope.hold(window_hashes(cur, L, id_col, "text"))
+            cur_flags = scope.hold(duplicate_flags(w_cur))
+            # fast converged path: an EMPTY duplicate set trivially
+            # implies no effective cut span, and after a keeper cut it is
+            # the COMMON convergence shape (every duplicated family is down
+            # to its keeper copy, so the next round's duplicate set is
+            # empty unless keeper protection or cut-created adjacencies
+            # left real duplicates). Checking it first skips planning +
+            # compiling the island/subtraction probe below — whose codegen
+            # alone outweighs this isEmpty — in exactly the rounds where
+            # that probe would scan zero rows.
+            if cur_flags.isEmpty():
+                scope.release(cur_flags)
+                scope.release(w_cur)
+                break
+            # effective-cut existence probe — the same island/subtraction
+            # machinery the cut itself runs, WITHOUT touching text: rows
+            # exist only for docs carrying duplicated windows, and a doc
+            # would change iff some removable island survives keeper
+            # subtraction (cutting >= L tokens always shortens the stream,
+            # so effective span <=> text change, both directions)
+            would_cut = (
+                _merge_islands(
+                    cur_flags.select("_id", "pos", "_keep"), L,
+                    extra_keys=("_keep",),
+                )
+                .groupBy("_id")
+                .agg(*_rm_kp_aggs())
+                .filter(F.size(_cuts_expr()) > 0)
             )
-            .groupBy("_id")
-            .agg(*_rm_kp_aggs())
-            .filter(F.size(_cuts_expr()) > 0)
-        )
-        if would_cut.isEmpty():
-            cur_flags.unpersist()
-            w_cur.unpersist()
-            break
-        nxt = _cut_once(
-            cur, L, id_col, "text", flags=cur_flags, normalize=normalize
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-        nxt.count()  # materialize before releasing what its plan reads
-        cur_flags.unpersist()
-        w_cur.unpersist()
-        cur.unpersist()
-        cur = nxt
-    if own_w is not None:
-        # pass 1's windows were consumed by its cut; every later round
-        # hashed its own text (the loop body above), so the frame is
-        # dead the moment the loop ends
-        own_w.unpersist()
-    return cur
+            if would_cut.isEmpty():
+                scope.release(cur_flags)
+                scope.release(w_cur)
+                break
+            nxt = scope.hold(_cut_once(
+                cur, L, id_col, "text", flags=cur_flags, normalize=normalize
+            ))
+            nxt.count()  # materialize before releasing what its plan reads
+            scope.release(cur_flags)
+            scope.release(w_cur)
+            scope.release(cur)
+            cur = nxt
+        # pass 1's windows (when built here) were consumed by its cut;
+        # every later round hashed its own text, so the scope releases
+        # them with the other intermediates at exit
+        return scope.hand_off(cur)
 
 
 def _cut_once(

@@ -21,6 +21,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from go_vectorsearch_spark import persist
 from go_vectorsearch_spark.operators.relational import (
     cascade_delete_survivors,
     dedup_best_by_key,
@@ -63,7 +64,8 @@ def register(name: str, oracle: str | None, doc: str = ""):
 
 def _session_cache(spark: SparkSession, attr: str) -> dict:
     """The one definition of the session-attached cache idiom (used for
-    table plans, the IVF index, and dedup frames)."""
+    table plans, the IVF index, and dedup frames); the frames they
+    serve are held by ``persist.session_scope(spark)``."""
     cache = getattr(spark, attr, None)
     if cache is None:
         cache = {}
@@ -1288,17 +1290,16 @@ def _ivf_index(spark, sf_dir):
     if sf_dir not in cache:
         from go_vectorsearch_spark.plans.ivf import build_index
 
-        from pyspark import StorageLevel
-
         emb = _t(spark, sf_dir, "embeddings")
-        cache[sf_dir] = build_index(emb, max_leaf=100, sample_size=5000)
-        # DESER level: skip the columnar re-encode (see _dedup_cached)
-        cache[sf_dir].assigned.persist(StorageLevel.MEMORY_AND_DISK_DESER).count()
+        index = build_index(emb, max_leaf=100, sample_size=5000)
+        session = persist.session_scope(spark)
+        session.hold(index.assigned).count()
         # centroids are k tiny rows but a LAZY recenter plan: every
         # search collects them (nearest_centroids), so materialize once
-        # here — unpersisted, each consumer re-runs the recenter job;
+        # here — unheld, each consumer re-runs the recenter job;
         # the count doubles as the cached nprobe=all value (below)
-        cache[("n", sf_dir)] = cache[sf_dir].centroids.persist().count()
+        cache[("n", sf_dir)] = session.hold(index.centroids).count()
+        cache[sf_dir] = index
     return cache[sf_dir]
 
 
@@ -1526,25 +1527,17 @@ def _dedup_cached(spark, key: str, sf_dir: str, build, eager: bool = True) -> Da
     cache = _session_cache(spark, "_gvs_dedup_cache")
     k = (key, sf_dir)
     if k not in cache:
-        from pyspark import StorageLevel
-
-        # DESER (row-object) storage: the default MEMORY_AND_DISK level
-        # re-encodes into compressed columnar batches — measured ~4x the
-        # materialization cost of the frame's own compute for these
-        # array-heavy intermediates. They are session-scoped scratch
-        # (a deployment would write parquet), so trade memory for the
-        # encode time.
-        df = build().persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        # session-scoped scratch (a deployment would write parquet),
+        # held at persist.LEVEL: DESER (row-object) storage skips the
+        # columnar re-encode, measured ~4x the materialization cost of
+        # the frame's own compute for these array-heavy intermediates
+        df = persist.session_scope(spark).hold(build())
         if eager:
             # shared builds materialize eagerly so bench.py bills the
-            # compute to the build entry, not to whichever query
-            # touches the frame first
+            # compute to the build entry, not to the first query. Entry-
+            # internal frames (eager=False) are materialized by their
+            # first downstream job, saving the count's own job rounds
             df.count()
-        # eager=False: entry-internal frames (the curate chain's) skip
-        # the count — their first downstream job materializes the cache
-        # while doing real work, saving the count's own job rounds; the
-        # per-partition cache locks make the racing-consumer case
-        # compute-once either way
         cache[k] = df
     return cache[k]
 
@@ -1667,24 +1660,15 @@ def _substr_flags_cached(spark, sf_dir):
         sf_dir,
         lambda: SUB.duplicate_flags(_substr_windows_cached(spark, sf_dir)),
     )
-    # flags is the window frame's ONLY consumer now (both registry
-    # entries read flags) — once flags' eager materialization completes,
-    # release the O(corpus tokens) cached window frame instead of
-    # pinning it for the session. EVICT the cache entry along with the
-    # unpersist: a stale handle left in _gvs_dedup_cache would look
-    # cached but silently recompute the corpus-scale window build per
-    # action for any future caller (the cache contract is "served
-    # frames are materialized"); popping restores it — a later
-    # _substr_windows_cached call rebuilds and re-persists honestly.
-    # ONLY on the cache-miss path that just built flags: a cache-hit
-    # call must not unpersist a window frame some LATER caller
-    # re-cached via _substr_windows_cached (r10 advice — the
-    # unconditional pop was exactly the silent-degradation hazard the
-    # comment above warns about).
+    # flags is the window frame's only consumer: once flags is
+    # materialized, release the corpus-token-sized window frame AND drop
+    # its cache entry (a stale handle would look cached but recompute).
+    # Only on the miss that just built flags: a hit must not release a
+    # window frame a later caller re-cached.
     if fresh_build:
         stale = cache.pop(("substr_windows", sf_dir), None)
         if stale is not None:
-            stale.unpersist()
+            persist.session_scope(spark).release(stale)
     return flags
 
 
@@ -1919,10 +1903,14 @@ FROM v WHERE c / (nx + ny - c) >= 0.2
     "candidates, exact-Jaccard verify (operators/dedup.minhash_lsh_pairs)",
 )
 def q_dedup_minhash_lsh(spark, sf_dir):
+    # the signatures feed both band-join sides + the verify: session-held,
+    # materialized by the entry's first job
+    sigs = _dedup_cached(
+        spark, "signatures", sf_dir,
+        lambda: DD.signature_frame(_shingled_cached(spark, sf_dir)), eager=False,
+    )
     pairs = DD.minhash_lsh_pairs(
-        _t(spark, sf_dir, "documents"),
-        threshold=0.2,
-        shingled=_shingled_cached(spark, sf_dir),
+        _t(spark, sf_dir, "documents"), threshold=0.2, signatures=sigs
     )
     return pairs.select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
 
@@ -2594,12 +2582,11 @@ def q_boilerplate_cut_docs(spark, sf_dir):
         # equivalence-pinned in pytest
         normalize_py=_format_multiline_string,
     )
-    res = out.select("doc_id", F.md5("text").alias("clean_md5"))
-    # the fixpoint returns its result persisted (callers own the
-    # release); a registry entry is consumed once by the driver, so
-    # hand the projection over and release the cache afterwards is the
-    # session's job — matches pipeline_curate_docs' fixpoint usage
-    return res
+    # the fixpoint hands its persisted result off; a registry entry
+    # returns a lazy projection of it, so the session adopts it (the
+    # pipeline_curate_docs fixpoint usage)
+    persist.session_scope(spark).adopt(out)
+    return out.select("doc_id", F.md5("text").alias("clean_md5"))
 
 
 # ---------------------------------------------------------------------------
@@ -3356,23 +3343,20 @@ def q_pipeline_curate_docs(spark, sf_dir):
     # adaptive gate took the corpus driver-local — the operator now
     # builds (and releases) the pass-1 frame itself exactly when its
     # distributed path runs. The fixpoint's return frame comes back
-    # persisted+materialized, so the bench and train splits below read
-    # cache, not a recomputed chain.
-    cut = SUB.exact_substr_cut(stripped, L=_SUBSTR_L, iterate=3)
+    # persisted, so the bench and train splits below read cache, not a
+    # recomputed chain; the session adopts it (a repeat call's
+    # plan-equal result borrows that entry, so repeats add none).
+    cut = persist.session_scope(spark).adopt(
+        SUB.exact_substr_cut(stripped, L=_SUBSTR_L, iterate=3)
+    )
     bench = cut.filter(F.col("doc_id") % 97 == 0)
     train = cut.filter(F.col("doc_id") % 97 != 0)
-    # persist the decontaminated corpus: three downstream consumers
+    # hold the decontaminated corpus: three downstream consumers
     # reference it (the shingle frame, the near-dup anti-join's row
-    # side, the quality/budget stages) — unpersisted, each would re-run
-    # the L=4 window pass + rebuild (~3x the stage's cost; measured
-    # ~4 s at sf0.1). Cached through _dedup_cached so repeated
-    # invocations (bench cold+warm runs, decade sampling) REUSE one
-    # materialized copy per corpus with the family's session-scoped
-    # lifecycle instead of issuing a fresh persist per call (Spark's
-    # CacheManager would dedup the identical plan anyway, but the
-    # session cache makes the lifecycle explicit); the fixpoint's
-    # internal persists dedup the same way. A deployment checkpoints
-    # between stages instead.
+    # side, the quality/budget stages) — unheld, each would re-run the
+    # L=4 window pass + rebuild (~3x the stage's cost; measured ~4 s at
+    # sf0.1). Session-cached, so repeated invocations reuse one copy
+    # per corpus. A deployment checkpoints between stages instead.
     decon = _dedup_cached(
         spark,
         "curate_decon",
@@ -3381,8 +3365,12 @@ def q_pipeline_curate_docs(spark, sf_dir):
         eager=False,  # the shingle pass materializes it (r13)
     )
     # uncapped jaccard = oracle-parity mode (see _jaccard_pairs_cached);
-    # a production run passes the default hot-shingle cap
-    pairs = DD.jaccard_pairs(decon, threshold=0.2, max_shingle_freq=None)
+    # a production run passes the default hot-shingle cap. The shingle
+    # frame is session-held and materialized by the pairs' first job
+    shingled = _dedup_cached(
+        spark, "curate_shingled", sf_dir, lambda: DD.shingled_docs(decon), eager=False
+    )
+    pairs = DD.jaccard_pairs(decon, threshold=0.2, max_shingle_freq=None, shingled=shingled)
     kept = DD.neardup_dedup(decon, pairs)
     staged = kept.join(docs.select("doc_id", "lang"), "doc_id").select(
         "doc_id", "lang", "text", T.ws_tokens(F.col("text")).alias("_toks")
@@ -3723,8 +3711,6 @@ def _pq_cached(spark, sf_dir):
     bench's ``ann_pq_encode_build`` entry, not to the search query."""
     cache = _session_cache(spark, "_gvs_pq_cache")
     if sf_dir not in cache:
-        from pyspark import StorageLevel
-
         from go_vectorsearch_spark.plans.pq import encode_pq, train_pq
 
         emb = _t(spark, sf_dir, "embeddings")
@@ -3743,10 +3729,8 @@ def _pq_cached(spark, sf_dir):
         # single-task regardless of core count — the r13 verdict's
         # "prove it parallelizes" ask. At real scale the input has
         # thousands of splits and spread() is a plan-inspection no-op.
-        coded = (
-            encode_pq(spread(emb), books)
-            .join(assign, "vec_id")
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        coded = persist.session_scope(spark).hold(
+            encode_pq(spread(emb), books).join(assign, "vec_id")
         )
         coded.count()
         cache[sf_dir] = (books, coded)
@@ -3779,8 +3763,6 @@ def _pca_cached(spark, sf_dir):
     ``pca_project_build`` entry, not to the search query."""
     cache = _session_cache(spark, "_gvs_pca_cache")
     if sf_dir not in cache:
-        from pyspark import StorageLevel
-
         from go_vectorsearch_spark.plans.pca import fit_pca, project_pca
 
         from go_vectorsearch_spark.sources.tables import spread
@@ -3793,9 +3775,8 @@ def _pca_cached(spark, sf_dir):
         # projection as ONE partition and every search runs single-task
         # (no-op at real scale — see _pq_cached)
         model = fit_pca(emb, k=16, center=False)
-        proj = (
+        proj = persist.session_scope(spark).hold(
             project_pca(spread(emb.select("vec_id", "embedding")), model)
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
         )
         proj.count()
         cache[sf_dir] = (model, proj)
@@ -3830,8 +3811,6 @@ def _pca_exact_cached(spark, sf_dir):
     and billed like _pca_cached (bench ``pca_exact_build``)."""
     cache = _session_cache(spark, "_gvs_pca_exact_cache")
     if sf_dir not in cache:
-        from pyspark import StorageLevel
-
         from go_vectorsearch_spark.plans.pca import fit_pca, project_pca
 
         from go_vectorsearch_spark.sources.tables import spread
@@ -3841,9 +3820,8 @@ def _pca_exact_cached(spark, sf_dir):
         model = fit_pca(emb, k=d, center=False)
         # spread as in _pca_cached: one-split input would pin the k=d
         # exactness anchor to a single task at any core count
-        proj = (
+        proj = persist.session_scope(spark).hold(
             project_pca(spread(emb.select("vec_id", "embedding")), model)
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
         )
         proj.count()
         cache[sf_dir] = (model, proj)
@@ -4161,7 +4139,9 @@ def _bm25_cached(spark, sf_dir: str):
         from go_vectorsearch_spark.operators.fulltext import build_bm25_index
 
         docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
-        cache[sf_dir] = build_bm25_index(docs, persist=True)
+        index = build_bm25_index(docs, persist=True)
+        persist.session_scope(spark).adopt(index.postings)
+        cache[sf_dir] = index
     return cache[sf_dir]
 
 

@@ -46,8 +46,7 @@ def strip_boilerplate_stream(
     contract), an all-boilerplate document emits ``''``. Returns the
     started StreamingQuery.
     """
-    from pyspark import StorageLevel
-
+    from go_vectorsearch_spark import persist
     from go_vectorsearch_spark.operators.curation import (
         strip_boilerplate_lines,
     )
@@ -56,7 +55,8 @@ def strip_boilerplate_stream(
     require_local_path(checkpoint_dir, "strip_boilerplate_stream checkpoint_dir")
     require_local_path(out_dir, "strip_boilerplate_stream out_dir")
 
-    hot_static = hot.select("_lh").persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # the static side lives as long as the stream: the session holds it
+    hot_static = persist.session_scope(hot.sparkSession).hold(hot.select("_lh"))
     hot_static.count()  # materialize once, before the first batch
 
     def sink(batch_df: DataFrame, epoch_id: int) -> None:

@@ -61,6 +61,7 @@ def decontaminate_filter_stream(
     lifetime — each micro-batch pays only its own window hashing plus a
     broadcast semi-join. Returns the started StreamingQuery.
     """
+    from go_vectorsearch_spark import persist
     from go_vectorsearch_spark.operators import substr as SUB
     from go_vectorsearch_spark.operators.dedup import tokenized_docs
     from go_vectorsearch_spark.streaming import require_local_path
@@ -72,21 +73,20 @@ def decontaminate_filter_stream(
         )
     require_local_path(checkpoint_dir, "decontaminate_filter_stream checkpoint_dir")
     require_local_path(out_dir, "decontaminate_filter_stream out_dir")
-    from pyspark import StorageLevel
-
-    bench_toks = tokenized_docs(benchmark, bench_id_col, bench_text_col).persist(
-        StorageLevel.MEMORY_AND_DISK_DESER
+    # the static side lives as long as the stream: the session holds it
+    session = persist.session_scope(benchmark.sparkSession)
+    bench_toks = session.hold(
+        tokenized_docs(benchmark, bench_id_col, bench_text_col)
     )
     bench_toks.count()  # materialize once, before the first batch
     bench_hashes = None
     if mode == "drop":
-        bench_hashes = (
+        bench_hashes = session.hold(
             SUB.window_hashes(
                 benchmark, L, bench_id_col, bench_text_col, tokenized=bench_toks
             )
             .select("_wh")
             .distinct()
-            .persist(StorageLevel.MEMORY_AND_DISK_DESER)
         )
         bench_hashes.count()
 

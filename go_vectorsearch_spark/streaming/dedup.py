@@ -102,6 +102,7 @@ def neardup_filter_stream(
 
     Returns the started StreamingQuery (AvailableNow trigger).
     """
+    from go_vectorsearch_spark import persist
     from go_vectorsearch_spark.api import N_BAND_BUCKETS, _VersionedTable
     from go_vectorsearch_spark.operators import dedup as DD
     from go_vectorsearch_spark.streaming import require_local_path
@@ -139,11 +140,9 @@ def neardup_filter_stream(
         if batch_df.isEmpty():
             return
         batch = batch_df
-        shingled = DD.shingled_docs(
-            batch, id_col=id_col, text_col=text_col
-        ).persist()
-        new_bands = DD.stored_band_rows(shingled).persist()
-        try:
+        with persist.Scope() as scope:
+            shingled = scope.hold(DD.shingled_docs(batch, id_col=id_col, text_col=text_col))
+            new_bands = scope.hold(DD.stored_band_rows(shingled))
             drop_ids = set()
             # 1) against the admitted corpus (band store + out_dir text)
             if bands_t.exists():
@@ -217,9 +216,8 @@ def neardup_filter_stream(
                     id_col=id_col,
                     text_col=text_col,
                     threshold=threshold,
-                    # the batch's shingle pass is already persisted above
+                    # the batch's shingle pass is already held above
                     shingled=shingled,
-                    persist_signatures=False,
                 ).collect()
             )
             peers: dict[int, list[int]] = {}
@@ -252,9 +250,6 @@ def neardup_filter_stream(
             else:
                 bands_t.write(surv_bands)
             survivors.write.mode("append").parquet(out_dir)
-        finally:
-            new_bands.unpersist()
-            shingled.unpersist()
 
     return (
         docs_stream.writeStream.foreachBatch(sink)

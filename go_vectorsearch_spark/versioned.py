@@ -97,6 +97,12 @@ def manifest(root: str, v: int) -> dict:
         with open(_manifest_path(root, v)) as f:
             return json.load(f)
     except FileNotFoundError:
+        if os.path.isfile(os.path.join(root, f"v{v}")):
+            # tables written before this module named manifests v{N}
+            raise RuntimeError(
+                f"{root}: legacy table layout (manifests named v{{N}}, not "
+                f"v{{N}}.json); rename each v{{N}} to v{{N}}.json once to read it"
+            ) from None
         raise KeyError(
             f"{root}: version {v} not on disk (available: {versions(root)})"
         ) from None

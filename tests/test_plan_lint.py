@@ -326,8 +326,8 @@ def test_fixpoint_entries_distributed_plans_have_no_scale_killers(
     with nothing to lint (substr_cut_docs, normalize-free, is gate-
     eligible too). Their DISTRIBUTED shapes — what a 100 TB corpus runs
     when the gate's bounded probe overflows — must keep the same bar,
-    so this builds them with the gate disabled (the tools/gen_plans.py
-    device) and lints the first distributed pass's plan of each."""
+    so this builds them with the gate disabled (the monkeypatch below)
+    and lints the first distributed pass's plan of each."""
     from go_vectorsearch_spark.operators import curation as CUR
 
     monkeypatch.setattr(CUR, "_bounded_local_rows", lambda *a, **k: None)

@@ -196,6 +196,23 @@ def test_pointer_file_is_owned_by_versioned_only():
     assert offenders == []
 
 
+def test_legacy_manifest_names_get_a_rename_hint(tmp_path):
+    """A table root written before manifests were named v{N}.json: a
+    read names the legacy layout and the one-time rename instead of
+    'version 1 not on disk (available: [])'; after the rename it reads."""
+    root = str(tmp_path)
+    with open(os.path.join(root, versioned.POINTER), "w") as f:
+        f.write("1")
+    for v in (0, 1):
+        with open(os.path.join(root, f"v{v}"), "w") as f:
+            f.write('{"parts": {}}')
+    with pytest.raises(RuntimeError, match=r"legacy.*rename each v\{N\} to v\{N\}\.json"):
+        versioned.snapshot(root)
+    for v in (0, 1):
+        os.rename(os.path.join(root, f"v{v}"), os.path.join(root, f"v{v}.json"))
+    assert versioned.snapshot(root) == (1, {"parts": {}})
+
+
 # -- crash window: the pointer swap dies after the manifest is written ----
 
 
