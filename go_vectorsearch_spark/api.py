@@ -32,8 +32,9 @@ import os
 import threading
 import time
 from collections.abc import Sequence
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from go_vectorsearch_spark import persist, versioned
@@ -52,7 +53,7 @@ from go_vectorsearch_spark.operators.search import (
     brute_force_topk_with_vector,
     mmr_select,
     normalize_search_args,
-    topk_paginated,
+    round6,
 )
 from go_vectorsearch_spark.sources.tables import ensure_package_on_workers
 
@@ -593,7 +594,71 @@ def _rank_probe_ids(
         return []
     ids = np.array([c[0] for c in cent_rows], dtype=np.int64)
     mat = np.array([c[1] for c in cent_rows], dtype=np.float64)
-    return _rank_centroids(ids, mat, list(query_vec), nprobe, round_decimals=6)
+    return _rank_centroids(ids, mat, list(query_vec), nprobe, rounded=True)
+
+
+def _rank_key(row) -> tuple[float, int]:
+    """The engine's (round(score, 6) desc, id asc) total order, on the
+    driver."""
+    return (-round6(row["score"]), row["document_id"])
+
+
+def _cut_per_query(scored: DataFrame, n: int) -> DataFrame:
+    """Each query's top-``n`` rows of a (q_ix, document_id, score)
+    frame, cut by one window in the (round(score, 6) desc, id asc)
+    order."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("q_ix").orderBy(
+        F.desc(F.round("score", 6)), F.asc("document_id")
+    )
+    return scored.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= n
+    )
+
+
+def _collect_by_query(legs: dict[str, DataFrame]) -> dict[str, dict[int, list]]:
+    """Collect ranked (q_ix, document_id, score[, vector]) frames in ONE
+    Spark action, unioned under a leg tag, and return per leg
+    {q_ix: rows in (round(score, 6) desc, id asc) order}."""
+    union = reduce(
+        lambda a, b: a.unionByName(b, allowMissingColumns=True),
+        [frame.withColumn("_leg", F.lit(leg)) for leg, frame in legs.items()],
+    )
+    out: dict[str, dict[int, list]] = {leg: {} for leg in legs}
+    for r in sorted(union.collect(), key=lambda r: (r["q_ix"], _rank_key(r))):
+        out[r["_leg"]].setdefault(r["q_ix"], []).append(r)
+    return out
+
+
+def _merge_top(a: list, b: list, n: int) -> list:
+    """The top-``n`` of two ranked row lists by per-document max score.
+    Exact for probe widening (the incremental top-k merge): a document's
+    best chunk lies in one round's lists, and that round's top-n holds
+    the document whenever the union's top-n does."""
+    best: dict[int, object] = {}
+    for r in (*a, *b):
+        d = r["document_id"]
+        if d not in best or r["score"] > best[d]["score"]:
+            best[d] = r
+    return sorted(best.values(), key=_rank_key)[:n]
+
+
+def _rrf(legs: Sequence[list], c: int) -> list:
+    """Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009)
+    of ranked (document_id, score) row lists, on the driver: fused(d) =
+    Σ 1/(c + rank) over the legs that hold d, each leg already in the
+    (round(score, 6) desc, id asc) order that ranks it. Returns
+    (document_id, score) rows in that order (fulltext.rrf_fuse is the
+    same fusion as a Spark plan)."""
+    fused: dict[int, float] = {}
+    for leg in legs:
+        for rank, r in enumerate(leg, start=1):
+            d = r["document_id"]
+            fused[d] = fused.get(d, 0.0) + 1.0 / (c + rank)
+    return sorted(
+        (Row(document_id=d, score=s) for d, s in fused.items()), key=_rank_key
+    )
 
 
 class _TTLCache:
@@ -760,26 +825,8 @@ class Engine:
         )
 
     def _embed_query(self, qtext: str) -> list[float]:
-        """One query vector, driver-side (the reference embeds the query
-        with the same provider call as uploads, server/search.go:124-147).
-        HTTP mode posts a single-text batch; noop mode hashes the text
-        in-process with the expression's pure-Python twin
-        (documents.noop_embed_text) and runs no Spark job."""
-        if self.provider:
-            import numpy as np
-
-            # same request shape AND options as the upload path (shared
-            # helper — the reference embeds the query with the same
-            # provider call as uploads, server/search.go:124-147)
-            codes, lo, hi = self._embed_once_failover([qtext])
-            # quantize-at-decode round-trip: the reference scores the
-            # query against dequantized stored vectors with the query
-            # itself having passed through the same u8 codec
-            span = np.float32(hi[0]) - np.float32(lo[0])
-            return (
-                np.float32(lo[0]) + codes[0].astype(np.float32) / np.float32(255.0) * span
-            ).astype(float).tolist()
-        return noop_embed_text(qtext, dim=self.embed_dim)
+        """One query vector: :meth:`_embed_queries` of one text."""
+        return self._embed_queries([qtext])[0]
 
     # -- id allocation ----------------------------------------------------
     def _next_id(self, table: str, id_col: str) -> int:
@@ -1029,6 +1076,10 @@ class Engine:
         return ids
 
     # -- search (server/search.go:115-334) ---------------------------------
+    # The five search forms share one retrieval core: _embed_queries,
+    # then _retrieve (driver-side probe ranking, _score, the widening
+    # loop), then each form's own driver step (a slice, mmr_select or
+    # _rrf) and _hydrate.
     def search(
         self,
         owner: str,
@@ -1039,53 +1090,19 @@ class Engine:
         nprobe: int = 0,
         where=None,
     ) -> DataFrame:
-        """Vector search (server/search.go:115-334). ``where`` — an
-        optional Column predicate over the documents table — PRE-filters
-        the probed scan through a doc-id semi-join (same contract as
-        :meth:`search_hybrid` and plans/ivf.ivf_search(where=)): the
-        page holds ``count`` matching documents whenever that many
-        matches exist in the probed lists."""
+        """Vector search (server/search.go:115-334): the page
+        ``[offset, offset + count)`` of :meth:`_retrieve`'s ranking.
+        ``where`` — an optional Column predicate over the documents
+        table — pre-filters and widens as :meth:`_retrieve` describes,
+        so the page holds ``count`` matching documents whenever that
+        many matches exist."""
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None:  # missing owner/category -> empty result
             return self._page_frame([])  # (server/search.go:156-177)
-        allowed = None if where is None else self._allowed_docs(scope, where)
-        qtext = f"{SEARCH_QUERY_PREFIX}{text}"
-        qvec = self._embed_query(qtext)
-        topk = self._vector_topk(scope, qvec, count + offset, nprobe, allowed=allowed)
-        if topk is None:
-            return self._page_frame([])
-        # collect the full top-(count+offset) once; the page is a local
-        # slice (brute_force_topk already emitted the exact total order)
-        # and the widening loop merges against these rows
-        top_rows = topk.collect()
-        page_rows = top_rows[offset : offset + count]
-        # adaptive probe widening under a predicate (the serving twin of
-        # plans/ivf.ivf_search_adaptive): a selective where= can thin
-        # the probed lists below a full page while matches sit in
-        # unprobed lists — double nprobe until the page fills or the
-        # probe set is exhausted. INCREMENTAL (r6): each round scores
-        # only the newly added lists and merges driver-side
-        # (_widen_vector_rows — exact, not an approximation). The fill
-        # target is clamped to |allowed| — computed LAZILY, only when
-        # the first page underfills — so a predicate with fewer than
-        # count matches in total stops the loop as soon as every
-        # existing match is found. Like every stop-on-fill ANN loop,
-        # scores of matches found in the last widening step are
-        # probe-limited (the doc is present; a better-scoring chunk of
-        # it may sit in an unprobed list) — identical semantics across
-        # search/search_many/search_hybrid. Without a predicate the
-        # reference semantics (fixed nprobe) stand.
-        if where is not None and len(page_rows) < count:
-            n_cent = len(self._category_centroids(scope))
-            target = min(count, max(0, allowed.count() - offset))
-            if len(page_rows) < target and nprobe < n_cent:
-                merged = self._widen_vector_rows(
-                    scope, qvec, count + offset, nprobe, allowed,
-                    first_rows=top_rows, needed=offset + target,
-                )
-                page_rows = topk_paginated(merged, count, offset).collect()
-        return self._hydrate(page_rows, scope)
+        qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
+        top, _ = self._retrieve(scope, [qvec], count + offset, nprobe, where)
+        return self._hydrate(top.get(0, [])[offset:], scope)
 
     def search_many(
         self,
@@ -1097,34 +1114,13 @@ class Engine:
         nprobe: int = 0,
         where=None,
     ) -> DataFrame:
-        """Batched search: N query texts answered with ONE embed call
-        and ONE Spark plan (engine extension; the reference serves one
-        request per HTTP call). Returns (q_ix, document_id, name,
-        external_id, payload_json, score) where ``q_ix`` indexes into
-        ``texts``; per-query pages match :meth:`search` exactly
-        (same probe ranking, scoring, dedup-by-document, (round-6
-        desc, id asc) order and ``offset`` pagination — asserted in
-        tests). ``where`` pre-filters
-        the probed scan exactly like :meth:`search`'s (shared allowed
-        semi-join), including the adaptive probe widening: after the
-        fused pass, ONLY the underfilled queries (page < count rows,
-        with count clamped to |allowed| — a selective predicate may not
-        have count matches in total) re-probe with doubled nprobe, so
-        batched filtered pages match the single form's
-        ``search(where=)`` pages and the extra work stays
-        Σ-probed-lists of the underfilled subset.
-
-        Shape (plans/ivf.ivf_search_batch applied to the managed
-        store): all texts embed in one provider round-trip (the upload
-        path already batches, server/upload.go:134-152); probe ranking
-        runs driver-side per query over the TTL-cached centroid set;
-        the UNION of probed lists is read once (manifest-pruned) and
-        the (q_ix, qvec, centroid) probe frame broadcasts into it, so
-        a chunk is scored once per query probing its list — candidate
-        work = Σ_q |probed lists of q|, never N × corpus. One shuffle:
-        the per-query dedup + top-k."""
-        from pyspark.sql import Window
-
+        """Batched search (engine extension; the reference serves one
+        request per HTTP call): N query texts embedded in one provider
+        round-trip and ranked by ONE :meth:`_retrieve` call, whose
+        broadcast-probe plan scores a chunk once per query probing its
+        list. Returns (q_ix, document_id, name, external_id,
+        payload_json, score), ``q_ix`` indexing ``texts``; each query's
+        page equals :meth:`search`'s (tested), ``where`` included."""
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
         if scope is None or not texts:
@@ -1132,122 +1128,56 @@ class Engine:
         qvecs = self._embed_queries(
             [f"{SEARCH_QUERY_PREFIX}{t}" for t in texts]
         )
-        best = self._vector_best_many(scope, qvecs, nprobe, where)
-        if best is None:
-            return self._page_frame([], batched=True)
-        w = Window.partitionBy("q_ix").orderBy(
-            F.desc(F.round("score", 6)), F.asc("document_id")
+        top, _ = self._retrieve(scope, qvecs, count + offset, nprobe, where)
+        return self._hydrate(
+            {ix: rows[offset:] for ix, rows in top.items()}, scope, batched=True
         )
 
-        def _page(frame: DataFrame) -> list:
-            return (
-                frame.withColumn("_rn", F.row_number().over(w))
-                .filter((F.col("_rn") > offset) & (F.col("_rn") <= count + offset))
-                .select("q_ix", "document_id", "score", "_rn")
-                .collect()
-            )
-
-        page_rows = _page(best)
-        if where is not None:
-            # adaptive widening, restricted to the underfilled queries
-            # (the batch twin of search()'s loop — same clamp, same
-            # probe-limited-score caveat, so both forms page
-            # identically): target clamped to |allowed| so a predicate
-            # with fewer than count matches in total stops the loop as
-            # soon as every existing match is found, instead of
-            # escalating to probing all centroids. The |allowed| count
-            # job runs LAZILY — only when some query actually
-            # underfilled, so the common filled-first-pass request pays
-            # nothing extra.
-            from collections import Counter
-
-            n_cent = len(self._category_centroids(scope))
-            filled = Counter(r["q_ix"] for r in page_rows)
-            under = [ix for ix in range(len(texts)) if filled[ix] < count]
-            if under:
-                allowed_n = self._allowed_docs(scope, where).count()
-                target = min(count, max(0, allowed_n - offset))
-                under = [ix for ix in under if filled[ix] < target]
-            cur = nprobe
-            while under and cur < n_cent:
-                cur = min(cur * 2, n_cent)
-                sub = self._vector_best_many(
-                    scope,
-                    [qvecs[i] for i in under],
-                    cur,
-                    where,
-                    q_ixs=under,
-                )
-                if sub is None:
-                    break
-                sub_rows = _page(sub)
-                under_set = set(under)
-                page_rows = [
-                    r for r in page_rows if r["q_ix"] not in under_set
-                ] + sub_rows
-                filled = Counter(r["q_ix"] for r in sub_rows)
-                under = [ix for ix in under if filled[ix] < target]
-        return self._hydrate(page_rows, scope, batched=True)
-
-    def _allowed_docs(self, scope: int, where) -> DataFrame:
-        """The category-scoped allowed-document frame for a ``where``
-        predicate — the one definition of the pre-filter every search
-        path semi-joins (document_id only; caller-sized, AQE decides
-        broadcast)."""
-        return (
-            self.t["documents"]
-            .read()
-            .filter(F.col("category_id") == scope)
-            .filter(where)
-            .select("document_id")
-        )
-
-    def _vector_best_many(
+    def search_diverse(
         self,
-        scope: int,
-        qvecs: list,
-        nprobe: int,
+        owner: str,
+        category: str,
+        text: str,
+        count: int = 10,
+        offset: int = 0,
+        nprobe: int = 0,
+        mmr_lambda: float = 0.5,
+        pool: int = 50,
         where=None,
-        q_ixs: list[int] | None = None,
-    ) -> DataFrame | None:
-        """Batched vector scoring core: per-query best-chunk-per-
-        document frame (q_ix, document_id, score) over the UNION of
-        probed lists (one manifest-pruned read; the probe frame
-        broadcasts in so a chunk scores once per query probing its
-        list). None when no probes (empty category). ``q_ixs`` relabels
-        the output q_ix values (the widening re-probe passes only the
-        underfilled subset but keeps the original indices)."""
-        cents = self._category_centroids(scope)
-        labels = list(range(len(qvecs))) if q_ixs is None else list(q_ixs)
-        probe_rows = [
-            (ix, [float(x) for x in qv], int(cid))
-            for ix, qv in zip(labels, qvecs)
-            for cid in _rank_probe_ids(cents, qv, nprobe)
-        ]
-        if not probe_rows:
-            return None
-        probe = self.spark.createDataFrame(
-            probe_rows, "q_ix long, _qvec array<double>, centroid_id long"
-        )
-        all_probed = sorted({r[2] for r in probe_rows})
-        from go_vectorsearch_spark.functions.vector import cosine_similarity
+    ) -> DataFrame:
+        """Diversified vector search: Maximal Marginal Relevance re-rank
+        (Carbonell & Goldstein 1998) of :meth:`_retrieve`'s
+        top-``pool`` candidates, which carry their best-chunk vectors —
+        the page trades pure relevance for coverage, so a corpus with
+        many near-identical top hits doesn't fill the page with copies.
 
-        raw = (
-            self.t["embeddings"]
-            .read(partition_values=all_probed)
-            .filter(F.col("centroid_id").isin(all_probed))
+        ``mmr_lambda`` in [0, 1]: 1 = pure relevance (reproduces
+        :meth:`search`'s ranking exactly, pool permitting), 0 = pure
+        diversity. The reported ``score`` stays the ORIGINAL cosine
+        relevance; the page order is the MMR selection order. The greedy
+        loop runs on the driver over the page-scale pool (see
+        operators/search.mmr_select)."""
+        if not 0.0 <= mmr_lambda <= 1.0:
+            raise ValueError(f"search_diverse: mmr_lambda {mmr_lambda} not in [0, 1]")
+        count, offset, nprobe = normalize_search_args(count, offset, nprobe)
+        pool = max(int(pool), count + offset)
+        scope = self._category_id(owner, category)
+        if scope is None:
+            return self._page_frame([])
+        qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
+        top, _ = self._retrieve(scope, [qvec], pool, nprobe, where, with_vector=True)
+        rows = top.get(0, [])
+        # relevance = Spark's round(score, 6), the engine's ranking
+        # precision, so lambda=1 reproduces search()'s order including
+        # its rounded-tie id-ascending resolution (the pool arrives in
+        # that order and argmax keeps the first max)
+        picks = mmr_select(
+            [round6(r["score"]) for r in rows],
+            [r["vector"] for r in rows],
+            count + offset,
+            mmr_lambda,
         )
-        if where is not None:
-            raw = raw.join(
-                self._allowed_docs(scope, where), "document_id", "left_semi"
-            )
-        emb = dequantized_vector(raw)
-        scored = emb.join(F.broadcast(probe), "centroid_id").withColumn(
-            "_s", cosine_similarity(F.col("vector"), F.col("_qvec"))
-        )
-        return scored.groupBy("q_ix", "document_id").agg(
-            F.max("_s").alias("score")
-        )
+        return self._hydrate([rows[i] for i in picks[offset:]], scope)
 
     def search_many_hybrid(
         self,
@@ -1260,25 +1190,20 @@ class Engine:
         fuse_depth: int = 60,
         rrf_c: int = 60,
     ) -> DataFrame:
-        """Batched hybrid search: N query texts fused (vector + BM25 by
-        RRF) in ONE embed call and one plan per leg — the batch form of
-        :meth:`search_hybrid`, per-query pages identical to it (tested).
-
-        The vector leg reuses the batched probe core
-        (:meth:`_vector_best_many`); the lexical leg scores ALL queries
-        against ONE postings scan pruned to the union of every query's
-        term buckets, with a broadcast (q_ix, term) frame fanning each
-        posting to the queries that contain its term — per-term idf/df
-        and the corpus scalars are identical to the single-query
-        scorer, so scores match bm25_search_stored exactly. Fusion
-        ranks per (leg, q_ix) with partitioned windows over the two
-        bounded top-fuse_depth frames and sums 1/(c + rank)."""
+        """Batched hybrid search: the batch form of
+        :meth:`search_hybrid`, with per-query pages identical to it
+        (tested). The vector leg is one batched :meth:`_retrieve`; the
+        lexical leg scores ALL queries against ONE postings scan pruned
+        to the union of their term buckets (fulltext.bm25_score_many,
+        whose idf/df and corpus scalars are the single-query scorer's).
+        Both legs are collected in one Spark action, and each query's two
+        top-``fuse_depth`` legs fuse in :func:`_rrf`."""
         import re as _re
-
-        from pyspark.sql import Window
 
         from go_vectorsearch_spark.operators.fulltext import (
             TOKEN_SPLIT_RE,
+            bm25_score_many,
+            bucket_pruned,
             read_postings,
         )
 
@@ -1292,26 +1217,12 @@ class Engine:
                 f"search_many_hybrid: no text index for {owner}/{category}; "
                 "run build_text_index first"
             )
-        cut = Window.partitionBy("q_ix").orderBy(
-            F.desc(F.round("score", 6)), F.asc("document_id")
-        )
-
-        # -- lexical leg: one pruned scan for every query, scored by
-        # the SHARED batched BM25 core (fulltext.bm25_score_many reuses
-        # bm25_search's idf/contribution definitions, so a tuning change
-        # to the canonical scorer reaches this path by construction) --
-        from go_vectorsearch_spark.operators.fulltext import (
-            bm25_score_many,
-            bucket_pruned,
-        )
-
         index, n_buckets = read_postings(self.spark, path)
         q_terms = [
             sorted({t for t in _re.split(TOKEN_SPLIT_RE, t.lower()) if t})
             for t in texts
         ]
         all_terms = sorted({t for ts in q_terms for t in ts})
-        legs = []
         scored = (
             bm25_score_many(
                 self.spark, bucket_pruned(index, n_buckets, all_terms), q_terms
@@ -1319,55 +1230,38 @@ class Engine:
             if all_terms
             else None
         )
-        if scored is not None:
-            lex = (
-                scored.withColumnRenamed("doc_id", "document_id")
-                .withColumn("_rn", F.row_number().over(cut))
-                .filter(F.col("_rn") <= fuse_depth)
-                .select("q_ix", "document_id", "score")
-            )
-            legs.append(lex)
-
-        # -- vector leg ---------------------------------------------------
         qvecs = self._embed_queries(
             [f"{SEARCH_QUERY_PREFIX}{t}" for t in texts]
         )
-        best = self._vector_best_many(scope, qvecs, nprobe)
-        if best is not None:
-            legs.append(
-                best.withColumn("_rn", F.row_number().over(cut))
-                .filter(F.col("_rn") <= fuse_depth)
-                .select("q_ix", "document_id", "score")
-            )
-        if not legs:
-            return self._page_frame([], batched=True)
-
-        # -- fusion: rank per (leg, q_ix), sum 1/(c + rank) ---------------
-        tagged = []
-        for leg_ix, leg in enumerate(legs):
-            wl = Window.partitionBy("q_ix").orderBy(
-                F.desc(F.round("score", 6)), F.asc("document_id")
-            )
-            tagged.append(
-                leg.withColumn("_rank", F.row_number().over(wl)).select(
-                    "q_ix",
-                    "document_id",
-                    (1.0 / (F.lit(rrf_c) + F.col("_rank"))).alias("_rrf"),
-                )
-            )
-        allr = tagged[0]
-        for t in tagged[1:]:
-            allr = allr.unionByName(t)
-        fused_rows = (
-            allr.groupBy("q_ix", "document_id")
-            .agg(F.sum("_rrf").alias("score"))
-            .withColumn("_rn", F.row_number().over(cut))
-            .filter(F.col("_rn") <= count + offset)
-            .select("q_ix", "document_id", "score", "_rn")
-            .collect()
+        vector, lexical = self._retrieve(
+            scope, qvecs, fuse_depth, nprobe,
+            lexical=None if scored is None else _cut_per_query(
+                scored.withColumnRenamed("doc_id", "document_id"), fuse_depth
+            ),
         )
-        page_rows = [r for r in fused_rows if r["_rn"] > offset]
-        return self._hydrate(page_rows, scope, batched=True)
+        return self._hydrate(
+            {
+                ix: _rrf([lexical.get(ix, []), vector.get(ix, [])], rrf_c)[
+                    offset : offset + count
+                ]
+                for ix in range(len(texts))
+            },
+            scope,
+            batched=True,
+        )
+
+    def _allowed_docs(self, scope: int, where) -> DataFrame:
+        """The category-scoped allowed-document frame for a ``where``
+        predicate — the one definition of the pre-filter every search
+        path semi-joins (document_id only; caller-sized, AQE decides
+        broadcast)."""
+        return (
+            self.t["documents"]
+            .read()
+            .filter(F.col("category_id") == scope)
+            .filter(where)
+            .select("document_id")
+        )
 
     def _embed_once_failover(self, qtexts: list[str]):
         """embed_texts_once across the provider's api_bases IN ORDER —
@@ -1394,9 +1288,14 @@ class Engine:
         raise last
 
     def _embed_queries(self, qtexts: list[str]) -> list[list[float]]:
-        """All query vectors in ONE provider round-trip (the batch form
-        of :meth:`_embed_query` — same request shape, same
-        quantize-at-decode round-trip per vector)."""
+        """All query vectors, driver-side, in ONE provider round-trip
+        (the reference embeds the query with the same provider call as
+        uploads, server/search.go:124-147). HTTP mode posts one batch
+        and dequantizes each vector: the reference scores the query
+        against dequantized stored vectors with the query itself having
+        passed through the same u8 codec. Noop mode hashes each text
+        in-process with the expression's pure-Python twin
+        (documents.noop_embed_text) and runs no Spark job."""
         if not self.provider:
             return [noop_embed_text(t, dim=self.embed_dim) for t in qtexts]
         import numpy as np
@@ -1409,206 +1308,168 @@ class Engine:
         )
         return [row.astype(float).tolist() for row in deq]
 
-    def _widen_vector_rows(
+    def _retrieve(
         self,
         scope: int,
-        qvec: list,
+        qvecs: list,
         n: int,
         nprobe: int,
-        allowed: DataFrame,
-        first_rows: list,
-        needed: int,
-    ) -> DataFrame:
-        """INCREMENTAL probe widening shared by search()/search_hybrid():
-        the full centroid ranking is computed once (driver-side, cached
-        set); each doubling round scores ONLY the newly added inverted
-        lists and merges driver-side by per-document max — exact,
-        because the global best-chunk score is the max of per-round
-        partials and top-n(A∪B) = top-n(top-n(A) ∪ top-n(B)) under the
-        (round-6 desc, id asc) order both cuts use. The old loop
-        re-scanned and re-scored every already-probed list each round,
-        multiplying scan I/O by log2(n_cent) on the latency path.
-        Stops when ``needed`` documents are found or every list is
-        probed; returns the merged (document_id, score) candidates as a
-        small DataFrame so the FINAL page ordering runs in Spark (same
-        HALF_UP rounding as every other page)."""
-        ranked = _rank_probe_ids(
-            self._category_centroids(scope),
-            qvec,
-            len(self._category_centroids(scope)),
-        )
-        merged: dict[int, float] = {}
-        for r in first_rows:
-            d, s = int(r["document_id"]), float(r["score"])
-            if d not in merged or s > merged[d]:
-                merged[d] = s
-        prev = min(max(nprobe, 1), len(ranked))
-        while len(merged) < needed and prev < len(ranked):
-            nxt = min(prev * 2, len(ranked))
-            sub = self._vector_topk(
-                scope, qvec, n, nprobe=0,
-                allowed=allowed, probe_ids=ranked[prev:nxt],
-            )
-            if sub is not None:
-                for r in sub.collect():
-                    d, s = int(r["document_id"]), float(r["score"])
-                    if d not in merged or s > merged[d]:
-                        merged[d] = s
-            prev = nxt
-        if not merged:
-            return self.spark.createDataFrame([], "document_id long, score double")
-        return self.spark.createDataFrame(
-            sorted(merged.items()), "document_id long, score double"
-        )
-
-    def _vector_topk(
-        self,
-        scope: int,
-        qvec: list,
-        n: int,
-        nprobe: int,
-        allowed: DataFrame | None = None,
-        probe_ids: list[int] | None = None,
-        with_vector: bool = False,
-    ) -> DataFrame | None:
-        """Document-level vector top-n for a category, or None when no
-        centroid probes (empty category).
-
-        T1 centroid pruning runs DRIVER-SIDE over the TTL-cached
-        centroid set — exactly the reference's in-process V2 cosine
-        over cached centroids (server/search.go:202-227). With the
-        query embedded in-process too (noop, or one HTTP call), a
-        repeat search launches zero Spark jobs before the probed scan.
-        ``probe_ids`` overrides the ranking with an explicit list set —
-        the incremental widening loop passes only the NEWLY added
-        lists of each round."""
-        if probe_ids is None:
-            probe_ids = _rank_probe_ids(
-                self._category_centroids(scope), qvec, nprobe
-            )
-        if not probe_ids:
-            return None
-        # probed partitions only — pruned at the MANIFEST level, so the
-        # unprobed inverted lists are never even listed; scoring
-        # dequantizes the stored codes inside the cosine expression
-        # (no float table ever materialized)
-        raw = (
-            self.t["embeddings"]
-            .read(partition_values=probe_ids)
-            .filter(F.col("centroid_id").isin(probe_ids))  # belt-and-braces
-        )
-        if allowed is not None:
-            # PRE-filter (plans/ivf.ivf_search(where=) semantics): only
-            # allowed documents' chunks are scored, so the top-n holds n
-            # allowed docs. Allowed set is caller-sized — no broadcast
-            # hint, AQE decides.
-            raw = raw.join(
-                allowed.select("document_id"), "document_id", "left_semi"
-            )
-        emb = dequantized_vector(raw)
-        if with_vector:
-            return brute_force_topk_with_vector(
-                emb, qvec, n, id_col="embedding_id",
-                vec_col="vector", doc_col="document_id",
-            )
-        return brute_force_topk(
-            emb, qvec, n, id_col="embedding_id",
-            vec_col="vector", doc_col="document_id",
-        )
-
-    def search_diverse(
-        self,
-        owner: str,
-        category: str,
-        text: str,
-        count: int = 10,
-        offset: int = 0,
-        nprobe: int = 0,
-        mmr_lambda: float = 0.5,
-        pool: int = 50,
         where=None,
-    ) -> DataFrame:
-        """Diversified vector search: Maximal Marginal Relevance re-rank
-        (Carbonell & Goldstein 1998) of a top-``pool`` candidate set —
-        the page trades pure relevance for coverage, so a corpus with
-        many near-identical top hits doesn't fill the page with copies.
+        with_vector: bool = False,
+        lexical: DataFrame | None = None,
+    ) -> tuple[dict[int, list], dict[int, list]]:
+        """THE retrieval core: each query's top-``n`` documents by
+        best-chunk cosine, as :meth:`_score` returns them, keyed by the
+        query's index in ``qvecs`` (a query with no hit is absent); the
+        hybrid forms' ``lexical`` leg rides in the first scoring action
+        and comes back second, like :meth:`_score`'s.
 
-        ``mmr_lambda`` in [0, 1]: 1 = pure relevance (reproduces
-        :meth:`search`'s ranking exactly, pool permitting), 0 = pure
-        diversity. The reported ``score`` stays the ORIGINAL cosine
-        relevance (the page's order, not its scores, is what MMR
-        changes); the page order is the MMR selection order.
+        T1 probe ranking runs on the driver over the TTL-cached
+        centroids — the reference's in-process V2 cosine
+        (server/search.go:202-227) — so a repeat search runs no Spark
+        job before the probed scan.
 
-        Plan shape: the distributed part is identical to :meth:`search`
-        (probed manifest-pruned scan -> per-document max -> TakeOrdered
-        top-pool), except the candidate rows carry their best-chunk
-        vector; the greedy MMR loop runs driver-side over the collected
-        page-scale pool (see operators/search.mmr_select for why that
-        is the right side of the boundary).
-        """
-        if not 0.0 <= mmr_lambda <= 1.0:
-            raise ValueError(f"search_diverse: mmr_lambda {mmr_lambda} not in [0, 1]")
-        count, offset, nprobe = normalize_search_args(count, offset, nprobe)
-        pool = max(int(pool), count + offset)
-        scope = self._category_id(owner, category)
-        if scope is None:
-            return self._page_frame([])
+        ``where`` (a Column predicate over the documents table)
+        PRE-filters the scored chunks through a doc-id semi-join
+        (plans/ivf.ivf_search(where=) semantics), then widens: a
+        selective predicate can thin the probed lists below ``n`` while
+        matches sit in unprobed lists, so the probe set of each
+        underfilled query doubles until it holds min(n, |allowed|)
+        documents or every list is probed. |allowed| is counted lazily,
+        once, only when some query underfills. Each round scores only
+        the newly added lists and merges on the driver by per-document
+        max (:func:`_merge_top`, the incremental top-k merge). Like
+        every stop-on-fill ANN loop, a match found in the last round
+        carries its probe-limited score (a better chunk of it may sit in
+        a list still unprobed). Without ``where`` the reference's fixed
+        nprobe stands."""
+        cents = self._category_centroids(scope)
         allowed = None if where is None else self._allowed_docs(scope, where)
-        qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
-        topk = self._vector_topk(
-            scope, qvec, pool, nprobe, allowed=allowed, with_vector=True
+        top, lexical = self._score(
+            [(ix, qv, _rank_probe_ids(cents, qv, nprobe)) for ix, qv in enumerate(qvecs)],
+            n,
+            allowed,
+            with_vector,
+            lexical,
         )
-        if topk is None:
-            return self._page_frame([])
-        rows = topk.collect()
-        # filtered underfill: like search()'s adaptive widening, a
-        # selective where= can thin the probed lists below the pool
-        # while matches sit in unprobed lists. The pool is a candidate
-        # set (not a page), so one escalation to nprobe=all replaces
-        # the incremental loop — exact scores, same worst case as the
-        # loop's final doubling, and only under a predicate.
-        if where is not None and len(rows) < pool:
-            n_cent = len(self._category_centroids(scope))
-            if len(rows) < min(pool, allowed.count()) and nprobe < n_cent:
-                rows = self._vector_topk(
-                    scope, qvec, pool, 2**31 - 1, allowed=allowed,
-                    with_vector=True,
-                ).collect()
-        # rel = round(score, 6): the engine's ranking precision
-        # everywhere (brute_force_topk, pagination, hydration), so
-        # lambda=1 reproduces search()'s order INCLUDING its rounded-tie
-        # id ascending resolution (the pool arrives in that order and
-        # argmax keeps the first max). Reported scores stay raw.
-        picks = mmr_select(
-            [round(r["score"], 6) for r in rows],
-            [r["vector"] for r in rows],
-            count + offset,
-            mmr_lambda,
-        )
-        page = [rows[i] for i in picks[offset : offset + count]]
-        return self._hydrate(page, scope)
+        if where is None:
+            return top, lexical
+        target, ranked = None, {}
+        probed = min(nprobe, len(cents))
+        while probed < len(cents):
+            under = [ix for ix in range(len(qvecs)) if len(top.get(ix, ())) < n]
+            if under and target is None:
+                target = min(n, allowed.count())
+            under = [ix for ix in under if len(top.get(ix, ())) < target]
+            if not under:
+                break
+            if not ranked:  # the underfilled set only shrinks
+                ranked = {
+                    ix: _rank_probe_ids(cents, qvecs[ix], len(cents)) for ix in under
+                }
+            nxt = min(probed * 2, len(cents))
+            sub, _ = self._score(
+                [(ix, qvecs[ix], ranked[ix][probed:nxt]) for ix in under],
+                n,
+                allowed,
+                with_vector,
+            )
+            for ix, rows in sub.items():
+                top[ix] = _merge_top(top.get(ix, []), rows, n)
+            probed = nxt
+        return top, lexical
+
+    def _score(
+        self,
+        probes: list[tuple[int, list, list[int]]],
+        n: int,
+        allowed: DataFrame | None = None,
+        with_vector: bool = False,
+        lexical: DataFrame | None = None,
+    ) -> tuple[dict[int, list], dict[int, list]]:
+        """THE scorer entry: ``probes`` are (q_ix, qvec, list_ids)
+        triples; returns each query's top-``n`` documents by best-chunk
+        cosine over its lists as (document_id, score[, vector]) rows in
+        (round(score, 6) desc, id asc) order, keyed by q_ix.
+
+        The scan reads only the probed lists, pruned at the MANIFEST
+        level, and dequantizes the stored codes inside the cosine
+        expression; ``allowed`` (a document_id frame) semi-joins in
+        before scoring. One query folds its vector into the plan as a
+        literal (brute_force_topk: groupBy-max + TakeOrdered; with
+        ``with_vector`` the best chunk's vector rides along). Several
+        queries broadcast a (q_ix, qvec, centroid_id) frame into the
+        union of their lists, so a chunk scores once per query probing
+        its list, and one window cuts each query's top-n.
+
+        ``lexical`` — a hybrid form's BM25 leg, a (q_ix, document_id,
+        score) frame already cut to each query's top-n — is collected in
+        the same Spark action, so the two legs pay one result stage; its
+        rows come back second, ranked and keyed the same way ({} without
+        it)."""
+        probes = [p for p in probes if p[2]]
+        legs = {} if lexical is None else {"lexical": lexical}
+        if probes:
+            lists = sorted({c for _, _, ids in probes for c in ids})
+            raw = (
+                self.t["embeddings"]
+                .read(partition_values=lists)
+                .filter(F.col("centroid_id").isin(lists))  # belt-and-braces
+            )
+            if allowed is not None:
+                raw = raw.join(allowed, "document_id", "left_semi")
+            emb = dequantized_vector(raw)
+            if len(probes) == 1:
+                (q_ix, qvec, _ids), = probes
+                topk = (brute_force_topk_with_vector if with_vector else brute_force_topk)(
+                    emb, qvec, n, id_col="embedding_id",
+                    vec_col="vector", doc_col="document_id",
+                )
+                if not legs:  # a root TakeOrdered: its collect needs no cut stage
+                    return {q_ix: topk.collect()}, {}
+                legs["vector"] = topk.withColumn("q_ix", F.lit(q_ix))
+            else:
+                from go_vectorsearch_spark.functions.vector import cosine_similarity
+
+                probe = self.spark.createDataFrame(
+                    [(ix, [float(x) for x in qv], c) for ix, qv, ids in probes for c in ids],
+                    "q_ix long, _qvec array<double>, centroid_id long",
+                )
+                legs["vector"] = _cut_per_query(
+                    emb.join(F.broadcast(probe), "centroid_id")
+                    .groupBy("q_ix", "document_id")
+                    .agg(
+                        F.max(cosine_similarity(F.col("vector"), F.col("_qvec"))).alias("score")
+                    ),
+                    n,
+                )
+        got = _collect_by_query(legs) if legs else {}
+        return got.get("vector", {}), got.get("lexical", {})
 
     def _hydrate(
-        self, page_rows: list, scope: int, batched: bool = False
+        self, page_rows, scope: int, batched: bool = False
     ) -> DataFrame:
-        """Hydrate a collected, ranked page of (document_id, score) rows
-        — plus (q_ix, _rn) when ``batched`` — into the search result.
+        """Hydrate a ranked page of (document_id, score) rows — when
+        ``batched``, a {q_ix: page} dict — into the search result.
 
         The reference collects the page's ids and hydrates them with a
         separate point query (server/search.go:285-308); so does this:
         one documents scan pruned at the manifest level to the page
         ids' HASH BUCKETS and filtered to the ids and the category is
         collected (one job) and joined to the page on the driver. The
-        rows keep the caller's order, which is already the rank: Spark's
-        (round(score, 6) desc, id asc) top-k order, the MMR selection
-        order, or per query the ``_rn`` a batched page is sorted by. A
-        page id whose document was deleted after the top-k is dropped.
+        rows keep the caller's order, which is already the rank: the
+        (round(score, 6) desc, id asc) order, the MMR selection order
+        or the fused order; batched pages follow in q_ix order. A page
+        id whose document was deleted after the top-k is dropped.
         """
-        if not page_rows:
+        pages = (
+            [((ix,), page) for ix, page in sorted(page_rows.items())]
+            if batched
+            else [((), page_rows)]
+        )
+        ids = sorted({int(r["document_id"]) for _, page in pages for r in page})
+        if not ids:
             return self._page_frame([], batched)
-        if batched:
-            page_rows = sorted(page_rows, key=lambda r: (r["q_ix"], r["_rn"]))
-        ids = sorted({int(r["document_id"]) for r in page_rows})
         docs = {
             d["document_id"]: d
             for d in self.t["documents"]
@@ -1619,8 +1480,9 @@ class Engine:
         }
         return self._page_frame(
             [
-                ((r["q_ix"],) if batched else ()) + tuple(d) + (float(r["score"]),)
-                for r in page_rows
+                q_ix + tuple(d) + (float(r["score"]),)
+                for q_ix, page in pages
+                for r in page
                 if (d := docs.get(r["document_id"])) is not None
             ],
             batched,
@@ -2689,29 +2551,25 @@ class Engine:
         rrf_c: int = 60,
         where=None,
     ) -> DataFrame:
-        """Hybrid search: vector top-``fuse_depth`` and BM25
-        top-``fuse_depth`` fused by reciprocal-rank fusion, then paged
-        and hydrated exactly like :meth:`search`. Requires
-        :meth:`build_text_index` to have run for the category (the same
-        explicit-build contract as the centroid index). Lexical-only
-        and vector-only corner cases degrade gracefully: a ranking with
-        no hits simply contributes nothing to the fusion.
+        """Hybrid search: the BM25 top-``fuse_depth`` and
+        :meth:`_retrieve`'s vector top-``fuse_depth`` fused on the
+        driver by :func:`_rrf` (both legs collected in one Spark
+        action), then paged and hydrated like
+        :meth:`search`. Requires :meth:`build_text_index` to have run
+        for the category (the same explicit-build contract as the
+        centroid index). A leg with no hits contributes nothing to the
+        fusion.
 
         ``where`` (an optional Column predicate over the documents
         table: name/external_id/payload_json/document_id) PRE-filters
-        BOTH legs — the allowed doc-id frame is computed once from the
-        category-scoped documents scan, semi-joined into the probed
-        embeddings before vector scoring and into the term-pruned
-        postings before BM25 ranking — so a filtered page holds
-        ``count`` matching documents whenever that many live matches
-        exist (post-filtering the fused page would underfill). The
-        same generalization of the reference's category scoping
-        (server/search.go:229-233) that plans/ivf.ivf_search(where=)
-        makes for raw stores."""
-        from go_vectorsearch_spark.operators.fulltext import (
-            bm25_search_stored,
-            rrf_fuse,
-        )
+        BOTH legs — the category-scoped allowed doc ids semi-join into
+        the probed embeddings before vector scoring (with the core's
+        widening) and into the term-pruned postings before BM25
+        ranking — so a filtered page holds ``count`` matching documents
+        whenever that many live matches exist. The same generalization
+        of the reference's category scoping (server/search.go:229-233)
+        that plans/ivf.ivf_search(where=) makes for raw stores."""
+        from go_vectorsearch_spark.operators.fulltext import bm25_search_stored
 
         count, offset, nprobe = normalize_search_args(count, offset, nprobe)
         scope = self._category_id(owner, category)
@@ -2723,49 +2581,16 @@ class Engine:
                 f"search_hybrid: no text index for {owner}/{category}; "
                 "run build_text_index first"
             )
-        allowed = None if where is None else self._allowed_docs(scope, where)
         lexical = bm25_search_stored(
-            self.spark, path, text, k=fuse_depth, allowed=allowed
-        ).withColumnRenamed("doc_id", "document_id")
+            self.spark, path, text, k=fuse_depth,
+            allowed=None if where is None else self._allowed_docs(scope, where),
+        ).select(F.lit(0).alias("q_ix"), F.col("doc_id").alias("document_id"), "score")
         qvec = self._embed_query(f"{SEARCH_QUERY_PREFIX}{text}")
-        vector = self._vector_topk(scope, qvec, fuse_depth, nprobe, allowed=allowed)
-        # same adaptive widening as search(): under a predicate the
-        # vector leg must not cede fused-rank mass just because the
-        # initial probe set was thin (the count is over a <= fuse_depth
-        # frame, not the corpus). The target is clamped to |allowed| —
-        # a selective predicate with fewer than fuse_depth matches IN
-        # TOTAL would otherwise force the full log2(n_cent) escalation
-        # even when no further matches exist anywhere; the clamp count
-        # runs LAZILY (only when the first probe underfills). The
-        # widening is INCREMENTAL like search()'s (each round scores
-        # only the newly added lists — _widen_vector_rows), and the
-        # collected leg re-materializes as a literal frame so the RRF
-        # fusion never rescans the probed partitions. Like the other
-        # stop-on-fill loops, a match found in the last widening step
-        # carries its probe-limited best-chunk score into the fusion.
-        if where is not None and vector is not None:
-            n_cent = len(self._category_centroids(scope))
-            first_rows = vector.collect()
-            vector = self.spark.createDataFrame(
-                [(int(r["document_id"]), float(r["score"])) for r in first_rows],
-                "document_id long, score double",
-            )
-            if len(first_rows) < fuse_depth and nprobe < n_cent:
-                target = min(fuse_depth, allowed.count())
-                if len(first_rows) < target:
-                    merged = self._widen_vector_rows(
-                        scope, qvec, fuse_depth, nprobe, allowed,
-                        first_rows=first_rows, needed=target,
-                    )
-                    # cut back to the top-fuse_depth leg the fusion
-                    # contract expects (merged may hold a few more)
-                    vector = topk_paginated(merged, fuse_depth, 0)
-        rankings = [lexical] + ([vector] if vector is not None else [])
-        fused = rrf_fuse(
-            rankings, k=count + offset, c=rrf_c, id_col="document_id"
+        vector, lexical = self._retrieve(
+            scope, [qvec], fuse_depth, nprobe, where, lexical=lexical
         )
-        page_rows = fused.collect()[offset:]
-        return self._hydrate(page_rows, scope)
+        fused = _rrf([lexical.get(0, []), vector.get(0, [])], rrf_c)
+        return self._hydrate(fused[offset : offset + count], scope)
 
     # -- chat (server/chat.go:109-181, minus the LLM call) -------------------
     def chat_messages(

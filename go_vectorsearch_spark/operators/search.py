@@ -20,6 +20,7 @@ is order-dependent in edge cases; we implement the clean set semantics
 from __future__ import annotations
 
 from collections.abc import Sequence
+from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
 from pyspark import SparkContext
@@ -27,6 +28,40 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from go_vectorsearch_spark.functions.vector import cosine_similarity
+
+
+# enough digits to quantize any finite double to 6 places exactly
+_ROUND6_CTX = Context(prec=400)
+_E6 = Decimal("1e-6")
+
+
+def round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double, computed on the driver:
+    HALF_UP on the decimal repr (Spark rounds
+    ``BigDecimal.valueOf(x)``), where Python's ``round`` and
+    ``np.round`` round half-even on the binary value — 0.1234565 is
+    0.123457 here and in Spark, 0.123456 there. Every driver-side
+    ordering that must agree with Spark's ``(round(score, 6) desc, id
+    asc)`` order keys on it."""
+    if not np.isfinite(x):
+        return x
+    return float(
+        Decimal(repr(float(x))).quantize(_E6, ROUND_HALF_UP, _ROUND6_CTX)
+    )
+
+
+def round6_array(a) -> np.ndarray:
+    """:func:`round6` over an array, vectorised: ``np.round``
+    everywhere, then the exact form only where the two can disagree —
+    x·1e6 within 1e-6 of a half, or |x| >= 1e3, where that product's
+    own rounding error could reach the tolerance."""
+    a = np.asarray(a, dtype=np.float64)
+    with np.errstate(over="ignore", invalid="ignore"):  # huge |x|: exact path
+        out = np.round(a, 6)
+        near = (np.abs(np.abs(a * 1e6) % 1.0 - 0.5) < 1e-6) | (np.abs(a) >= 1e3)
+    for i in np.flatnonzero(near):
+        out[i] = round6(a[i])
+    return out
 
 
 def query_vec_lit(query_vec: Sequence[float]) -> Column:

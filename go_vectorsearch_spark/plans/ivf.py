@@ -44,7 +44,7 @@ from pyspark.sql import functions as F
 
 from go_vectorsearch_spark.functions.vector import as_double, vector_mean
 from go_vectorsearch_spark.operators.assign import assign_nearest
-from go_vectorsearch_spark.operators.search import brute_force_topk
+from go_vectorsearch_spark.operators.search import brute_force_topk, round6_array
 
 CENTROID_SCHEMA = "centroid_id long, centroid_vec array<double>"
 
@@ -762,12 +762,13 @@ def _rank_centroids(
     mat: np.ndarray,
     query_vec,
     nprobe: int,
-    round_decimals: int | None = None,
+    rounded: bool = False,
 ) -> list[int]:
     """THE driver-side probe ranker (also behind api._rank_probe_ids —
     one implementation, so zero-norm and tie handling can't drift).
-    ``round_decimals`` ranks on a rounded score (the engine's 6-decimal
-    edge convention) instead of the raw double."""
+    ``rounded`` ranks on Spark's ``round(score, 6)`` (the engine's
+    6-decimal edge convention, via search.round6_array) instead of the
+    raw double."""
     if len(ids) == 0:
         return []
     q = np.array(query_vec, dtype=np.float64)
@@ -776,7 +777,7 @@ def _rank_centroids(
     # design point k reaches ~10^6 driver-side rows
     denom = qn * np.linalg.norm(mat, axis=1)
     sims = np.divide(mat @ q, denom, out=np.zeros(len(ids)), where=denom != 0.0)
-    key = sims if round_decimals is None else np.round(sims, round_decimals)
+    key = round6_array(sims) if rounded else sims
     order = np.lexsort((ids, -key))  # score desc, id asc tie-break
     return [int(ids[i]) for i in order[:nprobe]]
 

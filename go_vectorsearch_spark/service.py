@@ -304,6 +304,21 @@ def generate_stream(
         conn.close()
 
 
+def _documents_json(rows) -> list[dict]:
+    """Search result rows as the reference's DocumentSearch list
+    (server/search.go:26-43), payload deserialized."""
+    return [
+        {
+            "name": r["name"],
+            "external_id": r["external_id"],
+            "document": json.loads(r["payload_json"]),
+            "document_id": r["document_id"],
+            "document_similarity": r["score"],
+        }
+        for r in rows
+    ]
+
+
 class Service:
     """The engine + its LLM provider config, shared by all requests."""
 
@@ -520,18 +535,7 @@ class Service:
             ).collect()
         else:
             rows = self.engine.search(*args, **kwargs).collect()
-        return {
-            "documents": [
-                {
-                    "name": r["name"],
-                    "external_id": r["external_id"],
-                    "document": json.loads(r["payload_json"]),
-                    "document_id": r["document_id"],
-                    "document_similarity": r["score"],
-                }
-                for r in rows
-            ]
-        }
+        return {"documents": _documents_json(rows)}
 
     def categories(self, req: dict) -> dict:
         return {
@@ -589,18 +593,7 @@ class Service:
             nprobe=self._int_field(req, "centroids"),
             where=where,
         ).collect()
-        return {
-            "documents": [
-                {
-                    "name": r["name"],
-                    "external_id": r["external_id"],
-                    "document": json.loads(r["payload_json"]),
-                    "document_id": r["document_id"],
-                    "document_similarity": r["score"],
-                }
-                for r in rows
-            ]
-        }
+        return {"documents": _documents_json(rows)}
 
     def search_batch(self, req: dict) -> dict:
         """N query texts in one request → one embed round-trip + one
@@ -641,18 +634,10 @@ class Service:
                 # search_many(where=))
                 where=where,
             ).collect()
-        results: list[list[dict]] = [[] for _ in texts]
+        results: list[list] = [[] for _ in texts]
         for r in rows:
-            results[r["q_ix"]].append(
-                {
-                    "name": r["name"],
-                    "external_id": r["external_id"],
-                    "document": json.loads(r["payload_json"]),
-                    "document_id": r["document_id"],
-                    "document_similarity": r["score"],
-                }
-            )
-        return {"results": [{"documents": d} for d in results]}
+            results[r["q_ix"]].append(r)
+        return {"results": [{"documents": _documents_json(d)} for d in results]}
 
     def admin_refresh(self, req: dict) -> dict:
         """Centroid-index refresh: per (owner, category) when given,

@@ -72,10 +72,8 @@ def test_hybrid_matches_independent_python_fusion(hybrid_engine, spark):
 
     _c, _o, nprobe = normalize_search_args(depth, 0, 0)
     qvec = eng._embed_query(SEARCH_QUERY_PREFIX + query)
-    vec = [
-        (r["document_id"], round(r["score"], 6))
-        for r in eng._vector_topk(cid, qvec, depth, nprobe).collect()
-    ]
+    top, _ = eng._retrieve(cid, [qvec], depth, nprobe)
+    vec = [(r["document_id"], round(r["score"], 6)) for r in top[0]]
 
     acc: dict[int, float] = {}
     for ranking in (lex, vec):
@@ -291,7 +289,8 @@ def test_hybrid_filtered_where_prefilters_both_legs(spark, tmp_path):
     ).withColumnRenamed("doc_id", "document_id")
     _c, _o, nprobe = normalize_search_args(4, 0, 0)
     qvec = eng._embed_query(SEARCH_QUERY_PREFIX + "spark shuffle")
-    vec = eng._vector_topk(cid, qvec, 60, nprobe, allowed=allowed)
+    top, _ = eng._retrieve(cid, [qvec], 60, nprobe, where=pred)
+    vec = spark.createDataFrame([tuple(r) for r in top[0]], "document_id long, score double")
     want = [r["document_id"] for r in rrf_fuse(
         [lex, vec], k=4, c=60, id_col="document_id").collect()]
     assert [r["document_id"] for r in page] == want

@@ -1,7 +1,8 @@
 """The page-sized ends of the serving search path: query embedding and
 page hydration run on the driver, so a warm-cache search costs only the
 probed scan and the top-k in Spark (plus one point read of the page's
-documents)."""
+documents). All five search forms share one retrieval core; their job
+counts and pages are pinned here."""
 
 from __future__ import annotations
 
@@ -10,11 +11,20 @@ import uuid
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from go_vectorsearch_spark.api import Engine
-from go_vectorsearch_spark.operators.search import query_vec_lit, score_cosine
+from go_vectorsearch_spark.api import SEARCH_QUERY_PREFIX, Engine
+from go_vectorsearch_spark.operators.fulltext import bm25_search_stored
+from go_vectorsearch_spark.operators.search import (
+    mmr_select,
+    query_vec_lit,
+    round6,
+    round6_array,
+    score_cosine,
+)
 
 TWIN_TEXT = {"body": "twin payload shared word for word"}
 
@@ -37,6 +47,7 @@ def page_engine(spark, tmp_path_factory):
                  "document": json.dumps({"body": "victim document deleted mid search"})})
     ids = eng.upload("acme", "wiki", docs)
     assert eng.refresh_index("acme", "wiki", max_leaf=8) > 1
+    eng.build_text_index("acme", "wiki")
     return eng, ids
 
 
@@ -182,3 +193,158 @@ def test_engine_ships_package_to_workers(spark, tmp_path, monkeypatch):
     # idempotent: a second Engine on the same session ships nothing new
     Engine(spark, str(tmp_path / "root2"))
     assert len(shipped) == 1
+
+
+PIN_TEXTS = ["word1 spark", "page test doc", "twin payload shared", "word4"]
+
+
+@pytest.mark.parametrize(
+    "form, limit",
+    [
+        ("search_diverse", 3),
+        ("search_many", 5),
+        ("search_hybrid", 7),
+        ("search_many_hybrid", 11),
+    ],
+)
+def test_warm_search_form_job_counts(spark, page_engine, form, limit):
+    eng, _ = page_engine
+    arg = PIN_TEXTS if "many" in form else "word3 spark"
+
+    def call():
+        return getattr(eng, form)("acme", "wiki", arg, count=10, nprobe=2).collect()
+
+    warm = call()
+    rows, jobs = _jobs_of(spark, call)
+    assert rows == warm and rows
+    assert jobs <= limit, jobs
+
+
+def _twin_chunks(eng):
+    """Every live chunk of the category as (document_id, vector), in
+    embedding-id order, dequantized in float32 step for step as
+    functions.vector.dequantize does."""
+    scope = eng._category_id("acme", "wiki")
+    live = {
+        r["document_id"]
+        for r in eng.t["documents"].read().filter(F.col("category_id") == scope).collect()
+    }
+    out = []
+    for r in sorted(eng.t["embeddings"].read().collect(), key=lambda r: r["embedding_id"]):
+        if r["document_id"] in live:
+            lo, hi = np.float32(r["lo"]), np.float32(r["hi"])
+            codes = np.asarray(r["codes"], dtype=np.float32)
+            out.append((r["document_id"], lo + (codes / np.float32(255.0)) * (hi - lo)))
+    return out
+
+
+def _twin_rank(eng, chunks, text, allowed=None):
+    """Numpy brute force over every list: cosine in float64, per-document
+    max (best chunk: highest score, then lowest embedding id), ordered
+    (round6 desc, id asc). Returns [(document_id, score, vector)]."""
+    q = np.asarray(eng._embed_query(SEARCH_QUERY_PREFIX + text), dtype=np.float64)
+    best: dict[int, tuple] = {}
+    for d, v32 in chunks:
+        if allowed is not None and d not in allowed:
+            continue
+        v = v32.astype(np.float64)
+        denom = np.linalg.norm(v) * np.linalg.norm(q)
+        score = 0.0 if denom == 0.0 else float(v @ q / denom)
+        if d not in best or score > best[d][1]:
+            best[d] = (d, score, v)
+    return sorted(best.values(), key=lambda t: (-round6(t[1]), t[0]))
+
+
+def _twin_rrf(legs, c=60):
+    acc: dict[int, float] = {}
+    for leg in legs:
+        for rank, (d, _s) in enumerate(leg, start=1):
+            acc[d] = acc.get(d, 0.0) + 1.0 / (c + rank)
+    return [d for d, _ in sorted(acc.items(), key=lambda t: (-round6(t[1]), t[0]))]
+
+
+@pytest.mark.parametrize("offset", [0, 3])
+@pytest.mark.parametrize("filtered", [False, True])
+def test_every_form_matches_numpy_brute_force(spark, page_engine, offset, filtered):
+    """At nprobe = all every form's page is fixed by exact scores: the
+    core's pages must equal a numpy twin's, the score ties of the two
+    Twin documents included."""
+    eng, ids = page_engine
+    count, pool, depth = 4, 8, 60
+    keep = {ids[i] for i in (1, 5, 7, 13, 19, 24, 25)} if filtered else None
+    where = F.col("document_id").isin(sorted(keep)) if filtered else None
+    scope = eng._category_id("acme", "wiki")
+    allowed = None if keep is None else spark.createDataFrame(
+        [(d,) for d in sorted(keep)], "document_id long"
+    )
+    many = eng.search_many(
+        "acme", "wiki", PIN_TEXTS, count=count, offset=offset, nprobe=-1, where=where
+    ).collect()
+    many_hybrid = (
+        None if filtered else eng.search_many_hybrid(
+            "acme", "wiki", PIN_TEXTS, count=count, offset=offset, nprobe=-1
+        ).collect()
+    )
+    chunks = _twin_chunks(eng)
+    for ix, text in enumerate(PIN_TEXTS):
+        twin = _twin_rank(eng, chunks, text, keep)
+        want = twin[offset : offset + count]
+        got = eng.search(
+            "acme", "wiki", text, count=count, offset=offset, nprobe=-1, where=where
+        ).collect()
+        assert [r["document_id"] for r in got] == [t[0] for t in want], (text, offset)
+        assert [r["score"] for r in got] == pytest.approx([t[1] for t in want], abs=1e-12)
+        assert [tuple(r)[1:] for r in many if r["q_ix"] == ix] == [tuple(r) for r in got]
+
+        picks = mmr_select(
+            [round6(t[1]) for t in twin[:pool]], [t[2] for t in twin[:pool]],
+            count + offset, 0.5,
+        )
+        diverse = eng.search_diverse(
+            "acme", "wiki", text, count=count, offset=offset, nprobe=-1,
+            pool=pool, where=where,
+        ).collect()
+        assert [r["document_id"] for r in diverse] == [
+            twin[i][0] for i in picks[offset : offset + count]
+        ]
+
+        lexical = [
+            (r["doc_id"], r["score"])
+            for r in bm25_search_stored(
+                spark, eng._text_index_path(scope), text, k=depth, allowed=allowed
+            ).collect()
+        ]
+        fused = _twin_rrf([lexical, [(t[0], t[1]) for t in twin[:depth]]])
+        hybrid = eng.search_hybrid(
+            "acme", "wiki", text, count=count, offset=offset, nprobe=-1, where=where
+        ).collect()
+        assert [r["document_id"] for r in hybrid] == fused[offset : offset + count]
+        if many_hybrid is not None:
+            assert [tuple(r)[1:] for r in many_hybrid if r["q_ix"] == ix] == [
+                tuple(r) for r in hybrid
+            ]
+
+
+ROUND6_EDGES = [0.1234565, 5e-7, 0.7071065, -0.1234565, -5e-7, 2.5e-6, 0.9999995]
+
+
+@given(
+    st.lists(
+        st.one_of(
+            # values whose decimal repr sits exactly on a 7th-digit half
+            st.integers(-10**7, 10**7).map(lambda k: (2 * k + 1) / 2e6),
+            st.floats(-1.0, 1.0),
+            st.floats(allow_nan=False, allow_infinity=False),
+        ),
+        min_size=1,
+        max_size=300,
+    )
+)
+@settings(max_examples=8, deadline=None)
+def test_round6_matches_spark_round(spark, xs):
+    xs = ROUND6_EDGES + xs
+    df = spark.createDataFrame([(i, x) for i, x in enumerate(xs)], "i int, x double")
+    want = [r["r"] for r in df.orderBy("i").select(F.round("x", 6).alias("r")).collect()]
+    assert [round6(x) for x in xs] == want
+    assert round6_array(xs).tolist() == want
+    assert want[:3] == [0.123457, 1e-06, 0.707107]

@@ -103,6 +103,7 @@ def test_upload_search_roundtrip_matches_engine(served):
 @pytest.mark.slow
 def test_categories_and_deletes(served):
     eng, port, _ = served
+    _call(port, "/api/upload", {"owner": "acme", "category": "wiki", "documents": DOCS})
     _call(port, "/api/upload", {"owner": "acme", "category": "blog", "documents": [DOCS[0]]})
     _call(port, "/api/upload", {"owner": "other", "category": "misc", "documents": [DOCS[1]]})
     resp, data = _call(port, "/api/categories", {"owner": "acme"})
