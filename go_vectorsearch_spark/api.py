@@ -207,10 +207,17 @@ class _VersionedTable:
     regardless of concurrent writers; time travel = reading an older
     manifest.
 
+    Rows leave a table through ONE path, :meth:`replace_rows`: remove
+    the rows whose key is in a frame, append replacements, rewrite only
+    the partitions that held a removed row. Upsert, the Engine's
+    document delete, category cascade, re-embed and band-store rewrite
+    are each one call of it.
+
     ``partition_expr`` is a SQL expression string (e.g. ``centroid_id``
     or ``pmod(document_id, 32)``) evaluated at write time to route rows
     to partitions; callers pass plain Python values of that expression
-    to :meth:`read`'s ``partition_values`` / :meth:`overwrite_partitions`.
+    to :meth:`read`'s ``partition_values`` / :meth:`replace_rows`'
+    ``parts``.
     """
 
     def __init__(
@@ -375,7 +382,7 @@ class _VersionedTable:
     def write(self, df: DataFrame, keep_versions: int = 2) -> None:
         """Full-snapshot rewrite — for tiny metadata tables and whole-
         table transformations (index refresh reassigns every row). Data-
-        plane mutations use :meth:`append` / :meth:`overwrite_partitions`."""
+        plane mutations use :meth:`append` / :meth:`replace_rows`."""
         with self._write_lock():
             v = self._version() + 1
             self._commit(v, self._write_batch(df, v), keep_versions)
@@ -443,6 +450,57 @@ class _VersionedTable:
                 parts[key] = parts.get(key, []) + dirs
             self._commit(v, parts, keep_versions)
 
+    def replace_rows(
+        self,
+        key: str,
+        keys: DataFrame,
+        rows: DataFrame | None = None,
+        parts: Sequence | None = None,
+        keep_versions: int = 2,
+    ) -> None:
+        """Remove every row whose ``key`` value is in the one-column
+        frame ``keys`` and append ``rows`` to the partitions they route
+        to, in ONE commit — the table's only row-removal path (DELETE,
+        UPDATE and MERGE as one copy-on-write routine, Delta Lake's
+        shape): upserts, deletes, cascades and re-derivations all land
+        here.
+
+        Only the partitions that held a removed row are rewritten
+        (their survivors, anti-joined on ``keys``); every other
+        partition carries over by reference, and ``rows`` join
+        whichever partitions they route to through
+        :meth:`replace_partitions`. One key-semi-join scan finds the
+        holding partitions, unless the caller passes ``parts`` because
+        it already holds them (the ids' hash buckets): any superset of
+        the holding set gives the same rows. Unpartitioned tables
+        rewrite whole (they are metadata-sized)."""
+        with self._write_lock():
+            if not self.partition_expr:
+                kept = _keyed(self.read(), keys, key, "left_anti")
+                self.write(
+                    kept if rows is None else kept.unionByName(rows),
+                    keep_versions=keep_versions,
+                )
+                return
+            if parts is None:
+                parts = [
+                    r[0]
+                    for r in _keyed(self.read(), keys, key, "left_semi")
+                    .select(F.expr(self.partition_expr))
+                    .distinct()
+                    .collect()
+                ]
+            if not parts and rows is None:
+                return
+            kept = _keyed(
+                self.read(partition_values=parts), keys, key, "left_anti"
+            )
+            self.replace_partitions(
+                kept if rows is None else kept.unionByName(rows),
+                parts,
+                keep_versions=keep_versions,
+            )
+
     def changes(
         self,
         from_version: int,
@@ -504,48 +562,12 @@ class _VersionedTable:
     def upsert(self, df: DataFrame, key: str, keep_versions: int = 2) -> None:
         """MERGE by unique key: rows whose ``key`` exists are replaced,
         new keys are inserted — the reference's GORM ``Save`` upsert
-        (dnc/dnc.go:159-162) generalized to any table. Partition-scoped:
-        only partitions the INCOMING rows land in are rewritten (their
-        survivors = old rows anti-joined on the incoming key set), every
-        other partition is carried by reference; unpartitioned tables
-        fall back to a full anti-join rewrite (they are metadata-sized).
-
-        Assumes ``key`` is unique per snapshot. A row MAY move
-        partitions (an embedding reassigned to a new centroid): the
-        touched set is the union of the partitions the incoming rows
-        land in and the partitions currently holding the incoming keys
-        (one key-semi-join scan — the match-finding pass every MERGE
-        pays), so no stale twin is left behind."""
-        with self._write_lock():
-            self._upsert_locked(df, key, keep_versions)
-
-    def _upsert_locked(self, df: DataFrame, key: str, keep_versions: int) -> None:
-        if not self.partition_expr:
-            old = self.read()
-            self.write(
-                old.join(df.select(key), key, "left_anti").unionByName(df),
-                keep_versions=keep_versions,
-            )
-            return
-        part = F.expr(self.partition_expr)
-        new_parts = {r[0] for r in df.select(part).distinct().collect()}
-        old_parts = {
-            r[0]
-            for r in self.read()
-            .join(df.select(key), key, "left_semi")
-            .select(part)
-            .distinct()
-            .collect()
-        }
-        touched = sorted(new_parts | old_parts)
-        if not touched:
-            return
-        survivors = self.read(partition_values=touched).join(
-            df.select(key), key, "left_anti"
-        )
-        self.overwrite_partitions(
-            survivors.unionByName(df), touched, keep_versions=keep_versions
-        )
+        (dnc/dnc.go:159-162) generalized to any table, as one
+        :meth:`replace_rows` call. Assumes ``key`` is unique per
+        snapshot; a row MAY move partitions (an embedding reassigned to
+        a new centroid) — the partition that held its old version is
+        rewritten, so no stale twin is left behind."""
+        self.replace_rows(key, df.select(key), df, keep_versions=keep_versions)
 
     def compact(self, min_dirs: int = 2, keep_versions: int = 2) -> list[str]:
         """Collapse every partition whose manifest lists >= ``min_dirs``
@@ -715,6 +737,19 @@ class _TTLCache:
             self._gen += 1
 
 
+def _keyed(df: DataFrame, keys: DataFrame, key: str, how: str) -> DataFrame:
+    """``df`` semi- (``how="left_semi"``) or anti-joined (``"left_anti"``)
+    on ``key`` against the one-column frame ``keys``. A driver-local
+    ``keys`` (a LocalRelation, e.g. :func:`_local_frame`) becomes an
+    ``IN`` literal instead: collecting it runs no job, the literal
+    prunes parquet row groups, and no broadcast job ships it."""
+    plan = keys._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() != "LocalRelation":
+        return df.join(keys, key, how)
+    hit = F.col(key).isin([r[0] for r in keys.collect()])
+    return df.filter(hit if how == "left_semi" else ~hit)
+
+
 def _local_frame(spark: SparkSession, schema, rows: Sequence[tuple]) -> DataFrame:
     """``rows`` as a DataFrame over an Arrow table with ``schema`` (a
     pyarrow schema). Spark plans it as a LocalRelation, so building it
@@ -730,19 +765,34 @@ def _local_frame(spark: SparkSession, schema, rows: Sequence[tuple]) -> DataFram
     )
 
 
+def _id_frame(
+    spark: SparkSession, ids: Sequence[int], col: str = "document_id"
+) -> DataFrame:
+    """A driver-local one-column frame of ``ids``: the keys of a point
+    rewrite, which :func:`_keyed` turns into an ``IN`` literal."""
+    import pyarrow as pa
+
+    return _local_frame(spark, pa.schema([(col, pa.int64())]), [(i,) for i in ids])
+
+
 def assign_embedding_ids(
-    chunks: DataFrame, base_emb: int, base_doc: int, stride: int | None = None
+    chunks: DataFrame,
+    base_emb: int,
+    base_doc: int | None = None,
+    stride: int | None = None,
 ) -> DataFrame:
     """Unique, deterministic embedding_id per (doc_id, chunk_idx) with NO
     global sort: id = base + (doc_id - base_doc) * stride + chunk_idx,
-    stride = max chunks per doc in the batch (one tiny agg job unless
-    the caller passes it). A
+    base_doc = the batch's min doc_id and stride = max chunks per doc in
+    the batch (one tiny agg job for whichever the caller omits). A
     row_number over an unpartitioned Window would funnel the whole batch
     through one task — fine for request-sized uploads, the wrong shape
     for bulk ingest. Ids are gappy (stride over-allocates); id allocation
     is max+1 so gaps are harmless."""
-    if stride is None:
-        stride = (chunks.agg(F.max("chunk_idx")).head()[0] or 0) + 1
+    if base_doc is None or stride is None:
+        lo, hi = chunks.agg(F.min("doc_id"), F.max("chunk_idx")).head()
+        base_doc = lo if base_doc is None else base_doc
+        stride = (hi or 0) + 1 if stride is None else stride
     return chunks.withColumn(
         "embedding_id",
         F.lit(base_emb)
@@ -1203,7 +1253,6 @@ class Engine:
         from go_vectorsearch_spark.operators.fulltext import (
             TOKEN_SPLIT_RE,
             bm25_score_many,
-            bucket_pruned,
             read_postings,
         )
 
@@ -1217,7 +1266,6 @@ class Engine:
                 f"search_many_hybrid: no text index for {owner}/{category}; "
                 "run build_text_index first"
             )
-        index, n_buckets = read_postings(self.spark, path)
         q_terms = [
             sorted({t for t in _re.split(TOKEN_SPLIT_RE, t.lower()) if t})
             for t in texts
@@ -1225,7 +1273,7 @@ class Engine:
         all_terms = sorted({t for ts in q_terms for t in ts})
         scored = (
             bm25_score_many(
-                self.spark, bucket_pruned(index, n_buckets, all_terms), q_terms
+                self.spark, read_postings(self.spark, path, all_terms)[0], q_terms
             )
             if all_terms
             else None
@@ -1589,6 +1637,7 @@ class Engine:
         from go_vectorsearch_spark.operators.fulltext import (
             append_postings,
             build_bm25_index,
+            compact_postings,
         )
 
         cid = self._category_id(owner, category)
@@ -1602,6 +1651,14 @@ class Engine:
             )
         if not document_ids:
             return 0
+        # a tombstoned id hides its postings until a compaction clears
+        # the list — and ids do come back: allocation is max+1 over the
+        # surviving rows, so deleting the newest document hands its id
+        # to the next upload. Purge first whenever an appended id is
+        # tombstoned (a driver-side manifest read, no job otherwise)
+        tombstones = versioned.snapshot(path)[1].get("tombstones", [])
+        if set(document_ids) & set(tombstones):
+            compact_postings(self.spark, path)
         docs = (
             self.t["documents"]
             .read(
@@ -1677,7 +1734,7 @@ class Engine:
         flatten(payload_json) every other text consumer sees. An id LIST
         prunes the read to the ids' hash buckets at the manifest level
         (the point-lookup shape, bounded driver literals); an id FRAME
-        semi-joins instead — the bulk shape, no O(ids) driver
+        goes through :func:`_keyed` — the bulk shape, no O(ids) driver
         materialization — optionally pruned by a precomputed ``buckets``
         list (bounded by N_DOC_BUCKETS regardless of id count)."""
         from go_vectorsearch_spark.operators.documents import flatten_json_udf
@@ -1685,8 +1742,11 @@ class Engine:
         if document_ids is None:
             base = self.t["documents"].read()
         elif isinstance(document_ids, DataFrame):
-            base = self.t["documents"].read(partition_values=buckets).join(
-                document_ids.select("document_id"), "document_id", "left_semi"
+            base = _keyed(
+                self.t["documents"].read(partition_values=buckets),
+                document_ids.select("document_id"),
+                "document_id",
+                "left_semi",
             )
         else:
             base = self.t["documents"].read(
@@ -1825,38 +1885,32 @@ class Engine:
         """Apply a cleaned-text frame (document_id, text) to a stored
         category — the shared write machinery of :meth:`substr_dedup_cut`
         and :meth:`decontaminate_cut`: detect changed documents against
-        the current flattened texts, rewrite ONLY them through the
-        partition-scoped upsert (payload = JSON string literal of the
-        cleaned text), and keep the text index and band store consistent.
+        the current flattened texts, rewrite ONLY them with one
+        :meth:`_VersionedTable.replace_rows` per store (payload = JSON
+        string literal of the cleaned text), and keep the text index and
+        band store consistent.
 
         ``re_embed=True`` additionally re-runs the upload path's
         chunk → embed → quantize → assign stages for the changed
         documents and swaps their embedding rows in ONE atomic
-        replace_partitions commit (survivors of the touched centroid
+        replace_rows commit (survivors of the touched centroid
         partitions + the fresh rows) — vector search then serves the cut
         content instead of the pre-cut embeddings. Costs one embed call
         per changed chunk; assignment reuses the category's existing
         centroids (run refresh_index after bulk cuts if drift matters).
 
-        Scale shape: the CHANGED set stays a DataFrame end-to-end. The
-        only driver-side materializations are bounded regardless of how
-        many documents a cut touches — the distinct bucket keys
-        (≤ N_DOC_BUCKETS), the touched centroid partitions, and one
-        min-id scalar. At or below :data:`BULK_REWRITE_CAP` changed
-        documents the derived stores take the point-delete route
-        (manifest tombstones + pruned isin literals — the right shape
-        for a targeted cut); above it the text index REBUILDS over the
-        cut snapshot (a whole-corpus cut changes a constant fraction of
-        documents, so the rebuild is proportional work and scores
-        bit-identically to tombstone + compact + append) and the band
-        store rewrite anti-joins the changed frame. Cleaned text is
+        Scale shape: at or below :data:`BULK_REWRITE_CAP` changed
+        documents the ids come to the driver (manifest tombstones in the
+        text index, IN literals in every keyed scan). Above it the
+        changed set stays a DataFrame end-to-end — the driver holds only
+        each store's touched partitions — and the text index REBUILDS
+        over the cut snapshot: a whole-corpus cut changes a constant
+        fraction of documents, so the rebuild is proportional work and
+        scores bit-identically. Cleaned text is
         :func:`~go_vectorsearch_spark.operators.documents.format_text_udf`
         normalized before storage, so flatten(new payload) round-trips
-        to EXACTLY the stored text. Both cut callers also normalize
-        INSIDE the cut itself (the ``normalize=format_rejoined_text``
-        hook), so the frame arriving here already carries storage-form
-        text and the UDF below is an idempotent final truth — the r9
-        pre-normalization fixpoint caveat is closed at the source.
+        to EXACTLY the stored text; both cut callers already normalize
+        inside the cut, so the UDF is an idempotent final truth.
         Returns the number of rewritten documents."""
         from go_vectorsearch_spark.operators.documents import (
             format_text_udf,
@@ -1872,14 +1926,9 @@ class Engine:
         changed = scope.hold(
             cut.join(texts, "document_id")
             .filter(F.col("text") != F.col("_text"))
-            # _dl: the PRE-cut token count — the text-index tombstone
-            # needs it to shrink the corpus stats exactly (the
-            # delete_documents pattern). Computed on BOTH paths even
-            # though only the point path reads it: which path runs is
-            # known only after the count below, and deriving it later
-            # would need the pre-upsert snapshot this frame is the last
-            # holder of — one split over text already in flight, and a
-            # single cached int per row
+            # _dl: the PRE-cut token count the text-index tombstone
+            # needs (the delete_documents pattern); computed on both
+            # paths, since which one runs is known only after the count
             .select(
                 "document_id",
                 format_text_udf(F.col("text")).alias("text"),
@@ -1893,23 +1942,19 @@ class Engine:
         scope.release(cut)
         if n_changed == 0:
             return 0
-        ids = changed.select("document_id")
-        # bounded by N_DOC_BUCKETS no matter how many docs changed
-        buckets = sorted(
-            int(r[0])
-            for r in ids.select(
-                F.pmod(F.col("document_id"), F.lit(N_DOC_BUCKETS)).alias("b")
-            )
-            .distinct()
-            .collect()
-        )
-        small = n_changed <= BULK_REWRITE_CAP
-        changed_ids = None
-        dl_by_doc = None
-        if small:
+        if n_changed <= BULK_REWRITE_CAP:
+            # the point shape: the changed ids come to the driver (with
+            # the pre-cut dls the text-index tombstone needs), and every
+            # keyed scan below takes them as an IN literal
             meta = changed.select("document_id", "_dl").collect()
-            changed_ids = sorted(r["document_id"] for r in meta)
             dl_by_doc = {r["document_id"]: int(r["_dl"]) for r in meta}
+            ids = _id_frame(self.spark, sorted(dl_by_doc))
+            buckets = sorted({i % N_DOC_BUCKETS for i in dl_by_doc})
+        else:
+            # the bulk shape: the changed set stays a frame, and a bulk
+            # cut touches most buckets, so reads are not bucket-pruned
+            dl_by_doc, buckets = None, None
+            ids = changed.select("document_id")
         upd = (
             self.t["documents"]
             .read(partition_values=buckets)
@@ -1923,93 +1968,70 @@ class Engine:
                 "category_id",
             )
         )
-        self.t["documents"].upsert(upd, "document_id")
+        self.t["documents"].replace_rows("document_id", ids, upd, parts=buckets)
         if re_embed:
-            self._re_embed_documents(
-                cid, ids, buckets, document_ids=changed_ids
-            )
-        # text index: below the cap, tombstone the pre-cut postings,
-        # COMPACT (a tombstoned id stays hidden until compaction
-        # clears the list — append alone would leave the
-        # re-tokenized documents invisible), then append the changed
-        # documents re-read from the NEW snapshot. Above the cap,
-        # rebuild over the cut snapshot — proportional work for a
-        # whole-corpus cut, id-list-free, and bit-identical scoring
-        # either way.
+            self._re_embed_documents(cid, ids, buckets)
+        # text index: below the cap, tombstone the pre-cut postings and
+        # append the changed documents re-read from the NEW snapshot
+        # (the append compacts first, since their ids are tombstoned).
+        # Above the cap, rebuild over the cut snapshot — proportional
+        # work for a whole-corpus cut, id-list-free, and bit-identical
+        # scoring either way.
         tpath = self._text_index_path(cid)
         if versioned.exists(tpath):
-            from go_vectorsearch_spark.operators.fulltext import (
-                compact_postings,
-                delete_postings,
-            )
+            from go_vectorsearch_spark.operators.fulltext import delete_postings
 
-            if small:
+            if dl_by_doc is not None:
                 delete_postings(
-                    self.spark, tpath, changed_ids, dl_by_doc=dl_by_doc
+                    self.spark, tpath, sorted(dl_by_doc), dl_by_doc=dl_by_doc
                 )
-                compact_postings(self.spark, tpath)
-                self.append_text_index(owner, category, changed_ids)
+                self.append_text_index(owner, category, sorted(dl_by_doc))
             else:
                 n_buckets = int(versioned.snapshot(tpath)[1]["n_buckets"])
                 self.build_text_index(owner, category, n_buckets=n_buckets)
-        # near-dup band store: the changed documents' band rows
-        # derive from the text — rewrite exactly theirs under the
-        # store's cross-process lock (the compact_neardup_index
-        # discipline); the changed set joins as a frame, never as
-        # an id literal
+        # near-dup band store: the changed documents' band rows derive
+        # from the text — swap exactly theirs for rows of the new text
         if versioned.exists(self._neardup_path(cid)):
-            t = self._neardup_table(cid)
-            with t._write_lock():
-                kept = t.read().join(ids, "document_id", "left_anti")
-                # buckets only with the frame shape — the id-list
-                # branch derives its own pruning set from the ids
-                fresh = self._doc_band_rows(
-                    self._category_doc_texts(cid, changed_ids)
-                    if small
-                    else self._category_doc_texts(cid, ids, buckets=buckets),
+            self._neardup_table(cid).replace_rows(
+                "document_id",
+                ids,
+                self._doc_band_rows(
+                    self._category_doc_texts(cid, ids, buckets=buckets),
                     "document_id",
-                )
-                t.write(kept.unionByName(fresh))
+                ),
+            )
         self._invalidate_cache()
         return n_changed
 
     def _re_embed_documents(
-        self,
-        cid: int,
-        ids: DataFrame,
-        buckets: list[int],
-        document_ids: list[int] | None = None,
+        self, cid: int, ids: DataFrame, buckets: list[int] | None
     ) -> None:
         """Swap the embedding rows of the ``ids`` frame's documents for
         fresh ones derived from their CURRENT payloads: the upload
         path's chunk → embed → quantize → assign stages over the new
-        snapshot, committed with one atomic
-        :meth:`_VersionedTable.replace_partitions` (touched centroid
-        partitions lose the stale rows and gain the fresh assignments in
-        the same version — no reader ever sees a document
-        half-vectored).
-
-        ``ids`` — a (document_id) frame, joined semi/anti into every
-        scan; ``document_ids`` — the same set as a bounded list when
-        the caller is below :data:`BULK_REWRITE_CAP` (pruned isin
-        literals, the point shape). The only driver materializations
-        are the touched centroid partitions (bounded by the category's
-        centroid count) and one min-id scalar."""
-        id_filter = (
-            F.col("document_id").isin(list(document_ids))
-            if document_ids is not None
-            else None
-        )
-        docs = self.t["documents"].read(partition_values=buckets)
-        if id_filter is not None:
-            docs = docs.filter(id_filter)
-        else:
-            docs = docs.join(ids, "document_id", "left_semi")
-        docs = docs.filter(F.col("category_id") == cid).select(
-            F.col("document_id").alias("doc_id"),
-            "name",
-            "external_id",
-            "payload_json",
+        snapshot, committed with ONE
+        :meth:`_VersionedTable.replace_rows` (the centroid partitions
+        that held stale rows lose them and gain the fresh assignments
+        in the same version — no reader ever sees a document
+        half-vectored). ``buckets`` — the ids' hash buckets, or None
+        for all — prunes the documents read. The only driver
+        materializations are the touched centroid partitions (bounded by
+        the category's centroid count) and one (min doc id, max chunk
+        index) aggregate."""
+        docs = (
+            _keyed(
+                self.t["documents"].read(partition_values=buckets),
+                ids,
+                "document_id",
+                "left_semi",
+            )
+            .filter(F.col("category_id") == cid)
+            .select(
+                F.col("document_id").alias("doc_id"),
+                "name",
+                "external_id",
+                "payload_json",
+            )
         )
         with persist.Scope() as scope:
             chunks = scope.hold(dequantized_vector(
@@ -2027,13 +2049,7 @@ class Engine:
                 out_col="centroid_id",
             )
             base_emb = self._next_id("embeddings", "embedding_id")
-            # one scalar aggregate, not min() over a driver list
-            base_doc = (
-                min(document_ids)
-                if document_ids is not None
-                else int(ids.agg(F.min("document_id")).head()[0])
-            )
-            new_emb = assign_embedding_ids(assigned, base_emb, base_doc).select(
+            new_emb = assign_embedding_ids(assigned, base_emb).select(
                 "embedding_id",
                 F.col("doc_id").alias("document_id"),
                 "centroid_id",
@@ -2041,33 +2057,7 @@ class Engine:
                 "lo",
                 "hi",
             )
-            emb_t = self.t["embeddings"]
-
-            def _stale(df: DataFrame) -> DataFrame:
-                if id_filter is not None:
-                    return df.filter(id_filter)
-                return df.join(ids, "document_id", "left_semi")
-
-            def _live(df: DataFrame) -> DataFrame:
-                if id_filter is not None:
-                    return df.filter(~id_filter)
-                return df.join(ids, "document_id", "left_anti")
-
-            # bounded by the category's centroid count, not by |ids|
-            touched = [
-                r[0]
-                for r in _stale(emb_t.read())
-                .select("centroid_id")
-                .distinct()
-                .collect()
-            ]
-            if touched:
-                survivors = _live(emb_t.read(partition_values=touched))
-                emb_t.replace_partitions(
-                    survivors.unionByName(new_emb), touched
-                )
-            else:
-                emb_t.append(new_emb)
+            self.t["embeddings"].replace_rows("document_id", ids, new_emb)
 
     def decontaminate_report(
         self, owner: str, category: str, benchmark_texts: list[str], L: int = 8
@@ -2715,89 +2705,30 @@ class Engine:
 
     # -- deletes (server/delete.go:214-288, cascades as anti-joins) ----------
 
-    def _cascade_plans(self, victim_cats: DataFrame) -> dict[str, DataFrame]:
-        """Pure plan builder for a category cascade: survivor frames for
-        embeddings/documents/centroids given victim categories. Split
-        from the writes so tests can assert on the plans directly; the
-        WRITE path (_cascade_categories) re-derives its survivor frames
-        from partition-pruned reads once the touched sets are known —
-        these full-read plans define the semantics the pruned writes
-        must match.
-
-        Only the victim CATEGORY-ID set is broadcast-hinted (ids only,
-        bounded by categories-per-owner). victim_docs = ALL document ids
-        of the deleted categories — unbounded at the design point, so NO
-        broadcast hint: Catalyst (with AQE) picks broadcast only when
-        that side is actually small, falling back to a shuffle anti-join
-        otherwise."""
-        vc = F.broadcast(victim_cats.select("category_id"))
-        docs = self.t["documents"].read()
-        victim_docs = docs.join(vc, "category_id", "left_semi").select("document_id")
-        emb = self.t["embeddings"].read()
-        return {
-            "embeddings": emb.join(victim_docs, "document_id", "left_anti"),
-            "documents": docs.join(vc, "category_id", "left_anti"),
-            "centroids": self.t["centroids"].read().join(
-                vc, "category_id", "left_anti"
-            ),
-            "victim_docs": victim_docs,
-        }
-
-    def _cascade_categories(self, victim_cats: DataFrame) -> None:
-        """Given victim categories (category_id col), delete their
-        documents, embeddings, and centroids bottom-up via anti-joins —
-        rewriting ONLY the partitions that actually held victim rows.
-        The touched-partition collects are bounded by the partition
-        counts (centroids per table, N_DOC_BUCKETS), never by rows."""
-        plans = self._cascade_plans(victim_cats)
-        emb = self.t["embeddings"].read()
-        touched_cents = [
-            r[0]
-            for r in emb.join(
-                plans["victim_docs"], "document_id", "left_semi"
-            )
-            .select("centroid_id")
-            .distinct()
-            .collect()
-        ]
-        touched_buckets = [
-            r[0]
-            for r in plans["victim_docs"]
-            .select(F.expr(_PARTITION_EXPRS["documents"]))
-            .distinct()
-            .collect()
-        ]
-        # survivor frames for the WRITES re-read only the touched
-        # partitions (manifest pruning) — the full-table reads above
-        # exist to IDENTIFY victims, and must not be what the rewrite
-        # jobs scan (O(touched) read side at the 100 TB design point)
-        vc = F.broadcast(victim_cats.select("category_id"))
-        if touched_cents:
-            self.t["embeddings"].overwrite_partitions(
-                self.t["embeddings"]
-                .read(partition_values=touched_cents)
-                .join(plans["victim_docs"], "document_id", "left_anti"),
-                touched_cents,
-            )
-        if touched_buckets:
-            self.t["documents"].overwrite_partitions(
-                self.t["documents"]
-                .read(partition_values=touched_buckets)
-                .join(vc, "category_id", "left_anti"),
-                touched_buckets,
-            )
-        self.t["centroids"].write(plans["centroids"])
-        # a deleted category's BM25 store would otherwise sit orphaned
-        # on disk forever (and search_hybrid can never reach it — the
-        # category id is gone). The victim-id collect is bounded by
-        # categories-per-owner, like the cascade's other collects.
+    def _cascade_categories(self, cids: list[int]) -> None:
+        """Delete the categories ``cids``' documents, embeddings and
+        centroids bottom-up: one :meth:`_VersionedTable.replace_rows`
+        per table, each rewriting ONLY the partitions that held a victim
+        row. The category ids (bounded by categories-per-owner) ride
+        every scan as an IN literal. The victim document ids are ALL
+        document ids of the deleted categories — unbounded at the design
+        point, so they stay a frame with NO broadcast hint: Catalyst
+        (with AQE) broadcasts them only when that side is actually
+        small, falling back to a shuffle anti-join otherwise."""
         import shutil
 
-        for (cid,) in victim_cats.select("category_id").collect():
-            for dead in (
-                self._text_index_path(int(cid)),
-                self._neardup_path(int(cid)),
-            ):
+        vc = _id_frame(self.spark, cids, "category_id")
+        victim_docs = _keyed(
+            self.t["documents"].read(), vc, "category_id", "left_semi"
+        ).select("document_id")
+        self.t["embeddings"].replace_rows("document_id", victim_docs)
+        self.t["documents"].replace_rows("category_id", vc)
+        self.t["centroids"].replace_rows("category_id", vc)
+        # a deleted category's BM25 and band stores would otherwise sit
+        # orphaned on disk forever (no search can reach them — the
+        # category id is gone)
+        for cid in cids:
+            for dead in (self._text_index_path(cid), self._neardup_path(cid)):
                 if os.path.isdir(dead):
                     shutil.rmtree(dead, ignore_errors=True)
 
@@ -2805,13 +2736,17 @@ class Engine:
         owners = self.t["owners"].read()
         victim = owners.filter(F.col("name") == owner)
         cats = self.t["categories"].read()
-        victim_cats = cats.join(
-            F.broadcast(victim.select("owner_id")), "owner_id", "left_semi"
-        )
-        self._cascade_categories(victim_cats)
-        self.t["categories"].write(
-            cats.join(F.broadcast(victim.select("owner_id")), "owner_id", "left_anti")
-        )
+        # bounded by categories-per-owner
+        cids = [
+            int(r[0])
+            for r in cats.join(
+                F.broadcast(victim.select("owner_id")), "owner_id", "left_semi"
+            )
+            .select("category_id")
+            .collect()
+        ]
+        self._cascade_categories(cids)
+        self.t["categories"].write(cats.filter(~F.col("category_id").isin(cids)))
         self.t["owners"].write(owners.filter(F.col("name") != owner))
         self._invalidate_cache()
 
@@ -2819,9 +2754,10 @@ class Engine:
         cid = self._category_id(owner, category)
         if cid is None:
             return
-        cats = self.t["categories"].read()
-        self._cascade_categories(cats.filter(F.col("category_id") == cid))
-        self.t["categories"].write(cats.filter(F.col("category_id") != cid))
+        self._cascade_categories([cid])
+        self.t["categories"].write(
+            self.t["categories"].read().filter(F.col("category_id") != cid)
+        )
         self._invalidate_cache()
 
     def delete_document(self, owner: str, category: str, document_id: int) -> None:
@@ -2876,34 +2812,17 @@ class Engine:
         if not victim_rows:
             return 0  # no verified victims in this tenant: no-op
         verified = sorted(r["document_id"] for r in victim_rows)
-        victim_buckets = sorted({i % N_DOC_BUCKETS for i in verified})
+        keys = _id_frame(self.spark, verified)
         # embeddings carry no category_id — the cascade follows the
         # VERIFIED victim documents (FK ON DELETE CASCADE semantics),
         # so a bare document_id match can't cross tenants here either.
-        emb = self.t["embeddings"].read()
-        touched_cents = [
-            r[0]
-            for r in emb.filter(F.col("document_id").isin(verified))
-            .select("centroid_id")
-            .distinct()
-            .collect()
-        ]
-        # SURVIVOR frames read only the touched partitions (manifest-
-        # level pruning): identifying victims costs one column scan, but
-        # the rewrite job must not list/scan the whole table again —
-        # O(touched) on the read side matches O(touched) on the write
-        if touched_cents:
-            self.t["embeddings"].overwrite_partitions(
-                self.t["embeddings"]
-                .read(partition_values=touched_cents)
-                .filter(~F.col("document_id").isin(verified)),
-                touched_cents,
-            )
-        self.t["documents"].overwrite_partitions(
-            self.t["documents"]
-            .read(partition_values=victim_buckets)
-            .filter(~victim),
-            victim_buckets,
+        # Each table rewrites only the partitions that held a victim:
+        # the centroid lists found by one scan, the ids' hash buckets
+        self.t["embeddings"].replace_rows("document_id", keys)
+        self.t["documents"].replace_rows(
+            "document_id",
+            keys,
+            parts=sorted({i % N_DOC_BUCKETS for i in verified}),
         )
         # the text index must not keep ranking dead documents: their
         # postings would occupy lexical top-n slots that hydration then

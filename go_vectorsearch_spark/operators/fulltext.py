@@ -35,8 +35,10 @@ exactly (tests/test_fulltext.py).
 
 from __future__ import annotations
 
+import os
 import re
 from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -429,27 +431,60 @@ def write_postings(
         )
 
 
-def _batches_frame(spark, path: str, m: dict) -> DataFrame:
+def term_buckets(spark, terms: list[str], n_buckets: int) -> list[int]:
+    """The stored layout's buckets of ``terms``, ``pmod(xxhash64(term),
+    n_buckets)``, on the driver: Spark's own XXH64 over the UTF-8 bytes
+    with the expression's seed (42), so no job runs and no Python twin
+    of the hash can drift from the write side. The hasher is an
+    instance: py4j resolves a static method by the first overload of
+    its name the JVM lists, which may be the instance one."""
+    jvm = spark._jvm
+    xxh64 = jvm.org.apache.spark.sql.catalyst.expressions.XXH64(42)
+    offset = jvm.org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET
+    return sorted({
+        xxh64.hashUnsafeBytes(b, offset, len(b)) % n_buckets
+        for b in (bytearray(t.encode("utf-8")) for t in terms)
+    })
+
+
+def _batches_frame(
+    spark, path: str, m: dict, buckets: list[int] | None = None
+) -> DataFrame:
     """Union of a manifest's immutable batch directories under the
     explicit stored schema (an EMPTY batch has no files to infer from)
     — the single definition of the stored-layout scan, shared by
-    read_postings and delete_postings' presence scan."""
-    frames = [
-        spark.read.schema(STORED_POSTINGS_SCHEMA).parquet(f"{path}/{rel}")
-        for rel in m["batches"]
-    ]
-    postings = frames[0]
-    for f in frames[1:]:
-        postings = postings.unionByName(f)
-    return postings
+    read_postings and delete_postings' presence scan. ``buckets``
+    names the only ``_tb=`` directories to read, under each batch's
+    ``basePath`` so ``_tb`` stays a partition column: past 32
+    directories a whole-batch read runs a parallel listing job."""
+    frames = []
+    for rel in m["batches"]:
+        base = f"{path}/{rel}"
+        reader = spark.read.schema(STORED_POSTINGS_SCHEMA)
+        if buckets is None:
+            frames.append(reader.parquet(base))
+            continue
+        dirs = [d for d in (f"{base}/_tb={b}" for b in buckets) if os.path.isdir(d)]
+        if dirs:
+            frames.append(reader.option("basePath", base).parquet(*dirs))
+    if not frames:
+        return spark.createDataFrame([], STORED_POSTINGS_SCHEMA)
+    return reduce(DataFrame.unionByName, frames)
 
 
-def read_postings(spark, path: str) -> tuple[BM25Index, int]:
+def read_postings(
+    spark, path: str, terms: list[str] | None = None
+) -> tuple[BM25Index, int]:
     """(index over the stored layout, n_buckets) at the CURRENT version
     — the pointer and manifest are driver-side file reads (no Spark
-    job). The postings frame unions the manifest's batch directories
-    (each scan keeps its own ``_tb`` partition pruning);
-    :func:`bm25_search_stored` adds the bucket filter.
+    job). The postings frame unions the manifest's batch directories.
+
+    ``terms`` prunes it to those terms' hash buckets, the inverted
+    index's seek as directory pruning: the scan names only their
+    directories (:func:`term_buckets`), and the ``_tb`` filter, whose
+    ``pmod(xxhash64('term'), n)`` literals Catalyst folds before
+    partition pruning, keeps them a PartitionFilter. The term filter
+    a scorer adds still pushes into the buckets' row groups.
 
     Tombstoned doc_ids (point deletes, :func:`delete_postings`) are
     filtered OUT of the returned frame — a deleted document's physical
@@ -458,7 +493,17 @@ def read_postings(spark, path: str) -> tuple[BM25Index, int]:
     sees them, and the manifest's n_docs/sum_dl already exclude them,
     so idf/avgdl match a from-scratch build over the live corpus."""
     _v, m = _current(path, "read_postings")
-    postings = _batches_frame(spark, path, m)
+    n_buckets = int(m["n_buckets"])
+    if terms is None:
+        postings = _batches_frame(spark, path, m)
+    else:
+        postings = (
+            _batches_frame(spark, path, m, term_buckets(spark, terms, n_buckets))
+            .filter(F.col("_tb").isin(
+                [F.pmod(F.xxhash64(F.lit(t)), F.lit(n_buckets)) for t in terms]
+            ))
+            .drop("_tb")
+        )
     tombstones = m.get("tombstones", [])
     if tombstones:
         # driver-held list, bounded by deletes-since-last-compaction —
@@ -473,7 +518,7 @@ def read_postings(spark, path: str) -> tuple[BM25Index, int]:
             avgdl=(sum_dl / n if n else 0.0),
             sum_dl=sum_dl,
         ),
-        int(m["n_buckets"]),
+        n_buckets,
     )
 
 
@@ -662,38 +707,10 @@ def bm25_search_stored(
     b: float = 0.75,
     allowed: DataFrame | None = None,
 ) -> DataFrame:
-    """BM25 over the stored bucketed layout: each query term's hash
-    bucket rides the filter as a FOLDABLE Spark expression —
-    ``pmod(xxhash64('term'), n)`` over literals, constant-folded by
-    Catalyst before partition pruning, so the bucket function is
-    exactly Spark's own (no Python reimplementation that could drift)
-    AND no job runs to evaluate it. Unlisted buckets are never
-    touched; the term filter still pushes into the surviving buckets'
-    row groups."""
-    index, n_buckets = read_postings(spark, path)
+    """BM25 over the stored bucketed layout, scanning only the query
+    terms' hash buckets (:func:`read_postings`' ``terms``)."""
     terms = sorted({t for t in re.split(TOKEN_SPLIT_RE, query.lower()) if t})
     if not terms:
         return spark.createDataFrame([], "doc_id long, score double")
-    return bm25_search(
-        bucket_pruned(index, n_buckets, terms), query, k=k, k1=k1, b=b,
-        allowed=allowed,
-    )
-
-
-def bucket_pruned(index: BM25Index, n_buckets: int, terms: list[str]) -> BM25Index:
-    """Prune a STORED index's postings to the terms' hash buckets via
-    the foldable ``pmod(xxhash64('term'), n)`` literals (see
-    bm25_search_stored) — shared by the single-query stored search and
-    the engine's batched hybrid scorer, so the bucket function cannot
-    drift between them."""
-    bucket_exprs = ", ".join(
-        f"pmod(xxhash64('{t}'), {n_buckets})" for t in terms
-    )
-    return BM25Index(
-        postings=index.postings.filter(
-            F.expr(f"_tb IN ({bucket_exprs})")
-        ).drop("_tb"),
-        n_docs=index.n_docs,
-        avgdl=index.avgdl,
-        sum_dl=index.sum_dl,
-    )
+    index, _ = read_postings(spark, path, terms)
+    return bm25_search(index, query, k=k, k1=k1, b=b, allowed=allowed)

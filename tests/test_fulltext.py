@@ -4,6 +4,8 @@ shape, and fusion semantics."""
 from __future__ import annotations
 
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from go_vectorsearch_spark.operators.fulltext import (
@@ -274,6 +276,28 @@ def test_maxsim_plan_one_shuffle(spark, sf_correct):
     assert plan.count("Scan parquet") == 1
     assert plan.count("Exchange") == 1
     assert "Join" not in plan and "BatchEvalPython" not in plan
+
+
+TERM_EDGES = ["zebra", "common", "alpha1", "héllo", "", "spark shuffle", "日本語", "\x00"]
+
+
+@given(st.lists(st.text(max_size=12), max_size=24))
+@settings(max_examples=3, deadline=None)
+def test_term_buckets_match_spark_xxhash(spark, terms):
+    """The driver-side bucket of a term is the write side's
+    ``pmod(xxhash64(term), n)``, multibyte and empty strings included."""
+    from go_vectorsearch_spark.operators.fulltext import term_buckets
+
+    terms = TERM_EDGES + terms
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(terms)], "i int, t string")
+    want = df.orderBy("i").select(
+        F.pmod(F.xxhash64("t"), F.lit(64)), F.pmod(F.xxhash64("t"), F.lit(7))
+    ).collect()
+    got = [
+        (term_buckets(spark, [t], 64)[0], term_buckets(spark, [t], 7)[0])
+        for t in terms
+    ]
+    assert got == [tuple(r) for r in want]
 
 
 def test_bm25_stored_layout_partition_prunes(spark, sf_correct, tmp_path):

@@ -171,7 +171,7 @@ def test_failed_engine_calls_leave_no_cache_entries(spark, eng, monkeypatch):
     monkeypatch.setattr(e.t["embeddings"], "_commit", boom)
     assert _leaks(spark, [failing("upload", lambda: e.upload("o", "c", _docs("x")))]) == []
     monkeypatch.undo()
-    monkeypatch.setattr(e.t["documents"], "upsert", boom)
+    monkeypatch.setattr(e.t["documents"], "_commit", boom)
     assert _leaks(spark, [
         failing("substr_dedup_cut", lambda: e.substr_dedup_cut("o", "c", L=4, iterate=3)),
         failing("decontaminate_cut", lambda: e.decontaminate_cut("o", "c", [SHARED], L=4)),

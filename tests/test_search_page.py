@@ -203,8 +203,8 @@ PIN_TEXTS = ["word1 spark", "page test doc", "twin payload shared", "word4"]
     [
         ("search_diverse", 3),
         ("search_many", 5),
-        ("search_hybrid", 7),
-        ("search_many_hybrid", 11),
+        ("search_hybrid", 6),
+        ("search_many_hybrid", 10),
     ],
 )
 def test_warm_search_form_job_counts(spark, page_engine, form, limit):

@@ -241,6 +241,37 @@ def test_plain_delete_runs_no_tokenizer(spark, upload_engine, monkeypatch):
     assert eng.t["documents"].read().filter(F.col("document_id") == victim).count() == 0
 
 
+def test_one_row_upsert_job_count(spark, upload_engine):
+    """A keyed upsert finds the partitions holding the incoming keys
+    with one scan and rewrites them; the incoming rows' own partitions
+    take an append, so no collect of them runs."""
+    eng, ids = upload_engine
+    t = eng.t["documents"]
+    row = t.read().filter(F.col("document_id") == ids[5]).collect()[0]
+    changed = row.asDict()
+    changed["payload_json"] = json.dumps({"body": "upserted"})
+    df = spark.createDataFrame([changed], t.schema)
+    _, jobs = _jobs_of(spark, lambda: t.upsert(df, "document_id"))
+    # measured on this engine (a per-upsert collect of the incoming
+    # rows' partitions made it 12)
+    assert jobs <= 10, jobs
+    got = t.read().filter(F.col("document_id") == ids[5]).collect()
+    assert [r.asDict() for r in got] == [changed]
+
+
+def test_delete_category_job_count(spark, upload_engine):
+    eng, _ = upload_engine
+    eng.upload("acme", "gone", [_doc(400), _doc(401)])
+    cid = eng._category_id("acme", "gone")
+    _, jobs = _jobs_of(spark, lambda: eng.delete_category("acme", "gone"))
+    # measured on this engine: the category id rides every scan as a
+    # literal, so no broadcast job ships it (19 when it did)
+    assert jobs <= 14, jobs
+    assert eng._category_id("acme", "gone") is None
+    assert eng.t["documents"].read().filter(F.col("category_id") == cid).count() == 0
+    assert eng.t["centroids"].read().filter(F.col("category_id") == cid).count() == 0
+
+
 def test_delete_in_text_indexed_category_keeps_bm25_stats_exact(spark, upload_engine):
     from go_vectorsearch_spark.operators.fulltext import read_postings
 
@@ -262,3 +293,28 @@ def test_delete_in_text_indexed_category_keeps_bm25_stats_exact(spark, upload_en
     assert (after.n_docs, after.sum_dl) == (
         before.n_docs - 2, before.sum_dl - sum(r["dl"] for r in dls)
     )
+
+
+def test_reused_document_id_is_a_bm25_hit(spark, upload_engine):
+    """Ids are allocated max+1 over the surviving rows, so deleting the
+    newest document hands its id to the next upload. Its postings must
+    not stay hidden behind the old tombstone, and the corpus stats must
+    equal a fresh build over the same live documents."""
+    from go_vectorsearch_spark.operators.fulltext import (
+        bm25_search_stored,
+        read_postings,
+    )
+
+    eng, _ = upload_engine
+    ids = eng.upload("acme", "reuse", [_doc(500 + i) for i in range(5)])
+    assert eng.build_text_index("acme", "reuse") == 5
+    assert eng.delete_documents("acme", "reuse", [ids[-1]]) == 1
+    again = eng.upload("acme", "reuse", [_doc(600, "zebra crossing")])
+    assert again == [ids[-1]]  # the id came back
+    path = eng._text_index_path(eng._category_id("acme", "reuse"))
+    hits = bm25_search_stored(spark, path, "zebra", k=5).collect()
+    assert [r["doc_id"] for r in hits] == again
+    grown, _ = read_postings(spark, path)
+    assert eng.build_text_index("acme", "reuse") == 5
+    fresh, _ = read_postings(spark, path)
+    assert (grown.n_docs, grown.sum_dl) == (fresh.n_docs, fresh.sum_dl)

@@ -196,6 +196,36 @@ def test_pointer_file_is_owned_by_versioned_only():
     assert offenders == []
 
 
+def test_engine_row_rewrites_go_through_replace_rows():
+    """Lint: in api.py, rows leave the Engine's partitioned tables only
+    through ``_VersionedTable.replace_rows`` — no code outside the class
+    calls ``overwrite_partitions``, and ``replace_partitions``' one
+    outside caller is ``refresh_index_incremental``, whose moves drop
+    whole partitions."""
+    import ast
+
+    with open(os.path.join(PKG, "api.py")) as fh:
+        tree = ast.parse(fh.read())
+    calls = []
+
+    def visit(node, scope):
+        for child in ast.iter_child_nodes(node):
+            inner = scope
+            if isinstance(child, (ast.ClassDef, ast.FunctionDef)):
+                inner = scope + (child.name,)
+            elif (
+                isinstance(child, ast.Call)
+                and isinstance(child.func, ast.Attribute)
+                and child.func.attr in ("overwrite_partitions", "replace_partitions")
+                and scope[:1] != ("_VersionedTable",)
+            ):
+                calls.append((child.func.attr, ".".join(scope)))
+            visit(child, inner)
+
+    visit(tree, ())
+    assert calls == [("replace_partitions", "Engine.refresh_index_incremental")]
+
+
 def test_legacy_manifest_names_get_a_rename_hint(tmp_path):
     """A table root written before manifests were named v{N}.json: a
     read names the legacy layout and the one-time rename instead of

@@ -1,7 +1,8 @@
 """Model-based randomized check of the manifest-versioned table.
 
 The storage layer is the round's riskiest code path: a seeded random
-sequence of append / overwrite_partitions / upsert / compact is applied
+sequence of append / overwrite_partitions / upsert / replace_rows /
+compact is applied
 both to a `_VersionedTable` and to a plain in-memory dict model; after
 every operation the table must equal the model exactly, and at the end
 every surviving snapshot must replay its recorded historical state
@@ -12,6 +13,7 @@ from __future__ import annotations
 
 import random
 
+import pyarrow as pa
 import pytest
 
 N_PARTS = 4  # partition_expr = pmod(id, 4)
@@ -29,6 +31,11 @@ def _model_apply(model: dict, op: str, rows: list, parts: list | None) -> None:
             if part in set(parts):
                 model[rid] = (part, x)
     elif op == "upsert":
+        for rid, part, x in rows:
+            model[rid] = (part, x)
+    elif op == "replace":  # parts = the removed keys here
+        for rid in parts:
+            model.pop(rid, None)
         for rid, part, x in rows:
             model[rid] = (part, x)
 
@@ -68,8 +75,18 @@ def test_versioned_table_matches_dict_model(spark, tmp_path, seed):
     def df_of(rows):
         return spark.createDataFrame(rows, t.schema)
 
+    def keys_of(ids):
+        # both key shapes: a scanned frame joins, a driver-local
+        # (Arrow-backed) one becomes an IN literal
+        if rng.random() < 0.5:
+            return spark.createDataFrame([(i,) for i in ids], "id long")
+        return spark.createDataFrame(pa.table({"id": pa.array(ids, pa.int64())}))
+
+    variants = set()
     for step in range(10):
-        op = rng.choice(["append", "overwrite", "upsert", "compact"])
+        op = rng.choice(["append", "overwrite", "upsert", "replace", "compact"])
+        if step in (4, 8):
+            op = "replace"  # both variants below run on a non-empty table
         if op == "append":
             rows = [
                 r for r in fresh_rows(rng.randrange(1, 4)) if r[0] not in model
@@ -92,6 +109,30 @@ def test_versioned_table_matches_dict_model(spark, tmp_path, seed):
             rows = fresh_rows(rng.randrange(1, 4))
             t.upsert(df_of(rows), key="id", keep_versions=50)
             _model_apply(model, "upsert", rows, None)
+        elif op == "replace":
+            victims = rng.sample(sorted(model), min(len(model), rng.randrange(1, 3)))
+            if "remove" not in variants or not victims:
+                variants.add("remove")
+                rows = []
+            else:
+                # the victims come back in a different partition, beside
+                # brand-new ids
+                variants.add("move")
+                rows = [
+                    (rid, (model[rid][0] + rng.randrange(1, N_PARTS)) % N_PARTS,
+                     f"moved-{step}")
+                    for rid in victims
+                ] + [r for r in fresh_rows(rng.randrange(0, 3)) if r[0] not in model]
+            keys = sorted(set(victims) | {r[0] for r in rows})
+            # parts: the holding partitions found by the scan, or a
+            # superset the caller already holds
+            held = sorted({model[rid][0] for rid in victims if rid in model})
+            parts = rng.choice([None, sorted(set(held) | {rng.randrange(N_PARTS)})])
+            t.replace_rows(
+                "id", keys_of(keys), df_of(rows) if rows else None, parts=parts,
+                keep_versions=50,
+            )
+            _model_apply(model, "replace", rows, keys)
         else:
             t.compact(min_dirs=2, keep_versions=50)
             # data unchanged
@@ -100,6 +141,7 @@ def test_versioned_table_matches_dict_model(spark, tmp_path, seed):
         if t._version() >= 0:
             history[t._version()] = dict(model)
 
+    assert variants == {"remove", "move"}
     # time travel: every surviving version replays its recorded state
     versions = t.versions()
     assert versions, "no versions written"
