@@ -469,11 +469,11 @@ class _VersionedTable:
         (their survivors, anti-joined on ``keys``); every other
         partition carries over by reference, and ``rows`` join
         whichever partitions they route to through
-        :meth:`replace_partitions`. One key-semi-join scan finds the
-        holding partitions, unless the caller passes ``parts`` because
+        :meth:`replace_partitions`. The caller may pass ``parts`` when
         it already holds them (the ids' hash buckets): any superset of
-        the holding set gives the same rows. Unpartitioned tables
-        rewrite whole (they are metadata-sized)."""
+        the holding set gives the same rows. Otherwise
+        :meth:`_holding_parts` finds them. Unpartitioned tables rewrite
+        whole (they are metadata-sized)."""
         with self._write_lock():
             if not self.partition_expr:
                 kept = _keyed(self.read(), keys, key, "left_anti")
@@ -483,13 +483,7 @@ class _VersionedTable:
                 )
                 return
             if parts is None:
-                parts = [
-                    r[0]
-                    for r in _keyed(self.read(), keys, key, "left_semi")
-                    .select(F.expr(self.partition_expr))
-                    .distinct()
-                    .collect()
-                ]
+                parts = self._holding_parts(key, keys)
             if not parts and rows is None:
                 return
             kept = _keyed(
@@ -500,6 +494,30 @@ class _VersionedTable:
                 parts,
                 keep_versions=keep_versions,
             )
+
+    def _holding_parts(self, key: str, keys: DataFrame) -> list:
+        """Partition values that may hold a row whose ``key`` is in
+        ``keys``. When the partition expression reads ``key`` alone
+        (the documents' id hash bucket) a row's partition is its key's,
+        so they are computed from ``keys`` with no table scan: a
+        superset, as a key not in the table names a partition too.
+        Otherwise one key-semi-join scan finds them."""
+        part = F.expr(self.partition_expr)
+        # the columns the expression reads, from its analyzed plan over
+        # an empty frame (no job)
+        refs = (
+            self.spark.createDataFrame([], self.schema)
+            .select(part)
+            ._jdf.queryExecution()
+            .analyzed()
+            .references()
+            .toSeq()
+        )
+        if {refs.apply(i).name() for i in range(refs.size())} == {key}:
+            found = keys.select(part)
+        else:
+            found = _keyed(self.read(), keys, key, "left_semi").select(part)
+        return [r[0] for r in found.distinct().collect()]
 
     def changes(
         self,

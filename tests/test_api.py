@@ -504,6 +504,42 @@ def test_versioned_table_upsert_unpartitioned(spark, tmp_path):
     assert {tuple(r) for r in t.read().collect()} == {(1, "a"), (2, "B"), (3, "c")}
 
 
+def test_key_routed_replace_rows_reads_only_the_keys_partitions(
+    spark, tmp_path, monkeypatch
+):
+    """When the partition expression reads the key alone (the documents'
+    id buckets), upsert and replace_rows take the keys' own partitions:
+    the table is read only pruned to them, and every other partition
+    carries over by reference."""
+    from go_vectorsearch_spark.api import _VersionedTable
+
+    t = _VersionedTable(
+        spark, str(tmp_path), "kr", "id long, x string",
+        partition_expr="pmod(id, 4)",
+    )
+    t.write(spark.createDataFrame([(i, f"v{i}") for i in range(8)], t.schema))
+    reads = []
+    read = t.read
+
+    def spy(*args, **kwargs):
+        reads.append(kwargs)
+        return read(*args, **kwargs)
+
+    monkeypatch.setattr(t, "read", spy)
+    before = t._manifest(t._version())
+    # replace id 1, insert id 9 (both bucket 1)
+    t.upsert(spark.createDataFrame([(1, "A"), (9, "new")], t.schema), key="id")
+    after = t._manifest(t._version())
+    assert {k for k in before if after[k] != before[k]} == {"1"}
+    # remove id 6 and an absent id 10 (bucket 2)
+    t.replace_rows("id", spark.createDataFrame([(6,), (10,)], "id long"))
+    assert reads and all(kw.get("partition_values") is not None for kw in reads)
+    assert {tuple(r) for r in read().collect()} == {
+        (0, "v0"), (1, "A"), (2, "v2"), (3, "v3"), (4, "v4"), (5, "v5"),
+        (7, "v7"), (9, "new"),
+    }
+
+
 def test_vacuum_age_guard_protects_young_data(spark, tmp_path):
     """With vacuum_min_age_s > 0, data directories that fell out of the
     manifest keep-window survive until they age out — an in-flight
