@@ -28,11 +28,12 @@ manifest level, exactly the IVF inverted-list layout
 
 from __future__ import annotations
 
+import operator
 import os
 import threading
 import time
 from collections.abc import Sequence
-from functools import reduce
+from functools import cached_property, reduce
 
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
@@ -40,7 +41,13 @@ from pyspark.sql import functions as F
 from go_vectorsearch_spark import persist, versioned
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
 
-from go_vectorsearch_spark.functions.vector import dequantize, quantize, vector_range
+from go_vectorsearch_spark.functions.vector import (
+    cosine_array,
+    dequantize,
+    dequantize_array,
+    quantize,
+    vector_range,
+)
 from go_vectorsearch_spark.operators.assign import assign_nearest, assign_nearest_mat
 from go_vectorsearch_spark.operators.documents import (
     SEARCH_QUERY_PREFIX,
@@ -54,6 +61,7 @@ from go_vectorsearch_spark.operators.search import (
     mmr_select,
     normalize_search_args,
     round6,
+    round6_array,
 )
 from go_vectorsearch_spark.sources.tables import ensure_package_on_workers
 
@@ -106,6 +114,13 @@ N_BAND_BUCKETS = 16  # near-dup band-store partitions (band-key hash)
 # 256 would push 99% of realistic targeted cuts onto the whole-store
 # rebuild path for no scan saving.
 BULK_REWRITE_CAP = 10_000
+# request-sized reads run on the driver: a read whose files hold at most
+# this many rows (summed from their parquet footers, no job) is one
+# pyarrow read, so a warm search scores its probed lists and hydrates
+# its page with no Spark job. At 64 dims the bound keeps a scored read
+# near 25 MB of float64 on the driver and tens of milliseconds of numpy;
+# larger reads take the Spark path.
+LOCAL_READ_ROWS = 50_000
 _PARTITION_EXPRS = {
     "embeddings": "centroid_id",
     "documents": f"pmod(document_id, {N_DOC_BUCKETS})",
@@ -344,6 +359,66 @@ class _VersionedTable:
             .option("recursiveFileLookup", "true")
             .parquet(*[os.path.join(self.dir, d) for d in dirs])
         )
+
+    def read_arrow(
+        self,
+        partition_values: Sequence | None = None,
+        columns: Sequence[str] | None = None,
+        filters=None,
+    ):
+        """The current snapshot as a pyarrow Table read on the driver,
+        or ``None`` when its files hold more than ``LOCAL_READ_ROWS``
+        rows — the caller's cue to take its Spark path.
+
+        The snapshot resolves once and its immutable files are listed
+        from the manifest, as :meth:`read` does, so the read keeps that
+        snapshot whatever writers do meanwhile; ``partition_values``
+        prunes at the manifest level. The row count comes from the
+        parquet footers; no Spark job runs. ``filters`` is a pyarrow
+        compute expression, pushed into the scan."""
+        import pyarrow.dataset as ds
+
+        _v, parts = self._snapshot()
+        if partition_values is not None:
+            keys = {str(x) for x in partition_values}
+            parts = {k: d for k, d in parts.items() if k in keys}
+        data = ds.dataset(
+            self._data_files(parts), schema=self._arrow_schema, format="parquet"
+        )
+        if data.count_rows() > LOCAL_READ_ROWS:
+            return None
+        return data.to_table(columns=columns, filter=filters)
+
+    @cached_property
+    def _arrow_schema(self):
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        return to_arrow_schema(StructType.fromDDL(self.schema))
+
+    def lookup(
+        self,
+        columns: Sequence[str],
+        where: dict,
+        partition_values: Sequence | None = None,
+    ) -> list[tuple]:
+        """The ``columns`` of the current snapshot's rows matching every
+        ``where`` condition (column -> value, or -> list of values for
+        IN), as tuples: a :meth:`read_arrow` on the driver when the read
+        is under the bound, else a pruned Spark collect."""
+        import pyarrow.compute as pc
+
+        def match(col):  # pc.field or F.col: the same predicate either side
+            return reduce(operator.and_, [
+                col(c).isin(v) if isinstance(v, list) else col(c) == v
+                for c, v in where.items()
+            ])
+
+        tbl = self.read_arrow(partition_values, columns, match(pc.field))
+        if tbl is not None:
+            return list(zip(*(tbl[c].to_pylist() for c in columns)))
+        df = self.read(partition_values=partition_values).filter(match(F.col))
+        return [tuple(r) for r in df.select(*columns).collect()]
 
     def _data_files(self, parts: dict[str, list[str]]) -> list[str]:
         """Paths of the data files a manifest's ``parts`` reference,
@@ -684,6 +759,28 @@ def _merge_top(a: list, b: list, n: int) -> list:
     return sorted(best.values(), key=_rank_key)[:n]
 
 
+def _local_topk(doc_ids, chunk_ids, scores, n: int, vectors=None) -> list:
+    """:func:`brute_force_topk` (with ``vectors``: its ``_with_vector``
+    form) over chunks already scored on the driver: each document's best
+    chunk (highest score, then lowest chunk id, the ``max_by`` tie
+    rule) in (round(score, 6) desc, id asc) order, cut to ``n``. Returns
+    (document_id, score[, vector]) rows."""
+    import numpy as np
+
+    if not len(doc_ids):
+        return []
+    order = np.lexsort((chunk_ids, -scores, doc_ids))
+    docs = doc_ids[order]
+    best = order[np.r_[True, docs[1:] != docs[:-1]]]
+    best = best[np.lexsort((doc_ids[best], -round6_array(scores[best])))][:n]
+    if vectors is None:
+        return [Row(document_id=int(doc_ids[i]), score=float(scores[i])) for i in best]
+    return [
+        Row(document_id=int(doc_ids[i]), score=float(scores[i]), vector=vectors[i].tolist())
+        for i in best
+    ]
+
+
 def _rrf(legs: Sequence[list], c: int) -> list:
     """Reciprocal-rank fusion (Cormack, Clarke & Buettcher, SIGIR 2009)
     of ranked (document_id, score) row lists, on the driver: fused(d) =
@@ -902,14 +999,9 @@ class Engine:
         return (top if top is not None else 0) + 1
 
     def _get_or_create(self, table: str, id_col: str, filters: dict) -> int:
-        df = self.t[table].read()
-        cond = None
-        for k, v in filters.items():
-            c = F.col(k) == F.lit(v)
-            cond = c if cond is None else cond & c
-        hit = df.filter(cond).select(id_col).head()
-        if hit is not None:
-            return hit[0]
+        hit = self.t[table].lookup([id_col], filters)
+        if hit:
+            return hit[0][0]
         new_id = self._next_id(table, id_col)
         new_row = self.spark.createDataFrame(
             [{id_col: new_id, **filters}], _SCHEMAS[table]
@@ -1364,15 +1456,8 @@ class Engine:
         (documents.noop_embed_text) and runs no Spark job."""
         if not self.provider:
             return [noop_embed_text(t, dim=self.embed_dim) for t in qtexts]
-        import numpy as np
-
         codes, lo, hi = self._embed_once_failover(qtexts)
-        span = (hi.astype(np.float32) - lo.astype(np.float32)).astype(np.float32)
-        deq = (
-            lo.astype(np.float32)[:, None]
-            + codes.astype(np.float32) / np.float32(255.0) * span[:, None]
-        )
-        return [row.astype(float).tolist() for row in deq]
+        return [row.astype(float).tolist() for row in dequantize_array(codes, lo, hi)]
 
     def _retrieve(
         self,
@@ -1392,8 +1477,10 @@ class Engine:
 
         T1 probe ranking runs on the driver over the TTL-cached
         centroids — the reference's in-process V2 cosine
-        (server/search.go:202-227) — so a repeat search runs no Spark
-        job before the probed scan.
+        (server/search.go:202-227) — and so, without ``where`` and under
+        ``LOCAL_READ_ROWS``, does the probed scan (:meth:`_score`): a
+        repeat search runs no Spark job at all, as the reference answers
+        in process.
 
         ``where`` (a Column predicate over the documents table)
         PRE-filters the scored chunks through a doc-id semi-join
@@ -1458,8 +1545,14 @@ class Engine:
         cosine over its lists as (document_id, score[, vector]) rows in
         (round(score, 6) desc, id asc) order, keyed by q_ix.
 
-        The scan reads only the probed lists, pruned at the MANIFEST
-        level, and dequantizes the stored codes inside the cosine
+        The read holds only the probed lists, pruned at the MANIFEST
+        level. Without ``allowed``, when the lists hold at most
+        ``LOCAL_READ_ROWS`` rows (:meth:`_VersionedTable.read_arrow`),
+        they are ranked on the driver with no Spark job
+        (:meth:`_score_local`), bit for bit as the Spark path ranks
+        them.
+
+        The Spark path dequantizes the stored codes inside the cosine
         expression; ``allowed`` (a document_id frame) semi-joins in
         before scoring. One query folds its vector into the plan as a
         literal (brute_force_topk: groupBy-max + TakeOrdered; with
@@ -1470,13 +1563,18 @@ class Engine:
 
         ``lexical`` — a hybrid form's BM25 leg, a (q_ix, document_id,
         score) frame already cut to each query's top-n — is collected in
-        the same Spark action, so the two legs pay one result stage; its
-        rows come back second, ranked and keyed the same way ({} without
-        it)."""
+        the Spark path's action, so the two legs pay one result stage
+        (alone when the vector leg ran on the driver); its rows come
+        back second, ranked and keyed the same way ({} without it)."""
         probes = [p for p in probes if p[2]]
         legs = {} if lexical is None else {"lexical": lexical}
-        if probes:
-            lists = sorted({c for _, _, ids in probes for c in ids})
+        lists = sorted({c for _, _, ids in probes for c in ids})
+        local = (
+            self._score_local(lists, probes, n, with_vector)
+            if probes and allowed is None
+            else None
+        )
+        if probes and local is None:
             raw = (
                 self.t["embeddings"]
                 .read(partition_values=lists)
@@ -1510,7 +1608,51 @@ class Engine:
                     n,
                 )
         got = _collect_by_query(legs) if legs else {}
-        return got.get("vector", {}), got.get("lexical", {})
+        return local or got.get("vector", {}), got.get("lexical", {})
+
+    def _score_local(
+        self,
+        lists: list[int],
+        probes: list[tuple[int, list, list[int]]],
+        n: int,
+        with_vector: bool,
+    ) -> dict[int, list] | None:
+        """:meth:`_score`'s driver path: one pyarrow read of the probed
+        lists, dequantized in float32 and scored by the sequential-fold
+        cosine (functions.vector's ``*_array`` twins of the Spark
+        expressions), each query over its own lists with the same code,
+        ranked by :func:`_local_topk`. ``None`` — take the Spark path —
+        when the lists hold more than ``LOCAL_READ_ROWS`` rows or a
+        stored vector's width is not the query's."""
+        import numpy as np
+        import pyarrow.compute as pc
+
+        tbl = self.t["embeddings"].read_arrow(
+            lists,
+            ["embedding_id", "document_id", "centroid_id", "codes", "lo", "hi"],
+            pc.field("centroid_id").isin(lists),
+        )
+        dim = len(probes[0][1])
+        if tbl is None or (pc.list_value_length(tbl["codes"]).to_numpy() != dim).any():
+            return None
+        vecs = dequantize_array(
+            pc.list_flatten(tbl["codes"]).to_numpy().reshape(-1, dim),
+            tbl["lo"].to_numpy(),
+            tbl["hi"].to_numpy(),
+        )
+        eids, docs, cents = (
+            tbl[c].to_numpy() for c in ("embedding_id", "document_id", "centroid_id")
+        )
+        out = {}
+        for q_ix, qvec, ids in probes:
+            hit = np.isin(cents, ids)
+            rows = _local_topk(
+                docs[hit], eids[hit], cosine_array(vecs[hit], qvec), n,
+                vecs[hit] if with_vector else None,
+            )
+            if rows:
+                out[q_ix] = rows
+        return out
 
     def _hydrate(
         self, page_rows, scope: int, batched: bool = False
@@ -1520,9 +1662,11 @@ class Engine:
 
         The reference collects the page's ids and hydrates them with a
         separate point query (server/search.go:285-308); so does this:
-        one documents scan pruned at the manifest level to the page
-        ids' HASH BUCKETS and filtered to the ids and the category is
-        collected (one job) and joined to the page on the driver. The
+        one documents read pruned at the manifest level to the page
+        ids' HASH BUCKETS and filtered to the ids and the category
+        (:meth:`_VersionedTable.lookup`: a pyarrow read with no job under
+        ``LOCAL_READ_ROWS``, else one Spark collect), joined to the page
+        on the driver. The
         rows keep the caller's order, which is already the rank: the
         (round(score, 6) desc, id asc) order, the MMR selection order
         or the fused order; batched pages follow in q_ix order. A page
@@ -1537,12 +1681,12 @@ class Engine:
         if not ids:
             return self._page_frame([], batched)
         docs = {
-            d["document_id"]: d
-            for d in self.t["documents"]
-            .read(partition_values=sorted({i % N_DOC_BUCKETS for i in ids}))
-            .filter(F.col("document_id").isin(ids) & (F.col("category_id") == scope))
-            .select("document_id", "name", "external_id", "payload_json")
-            .collect()
+            d[0]: d
+            for d in self.t["documents"].lookup(
+                ["document_id", "name", "external_id", "payload_json"],
+                {"document_id": ids, "category_id": scope},
+                partition_values=sorted({i % N_DOC_BUCKETS for i in ids}),
+            )
         }
         return self._page_frame(
             [
@@ -2653,19 +2797,13 @@ class Engine:
         )
 
     def fetch_category_names(self, owner: str) -> list[str]:
-        owners = self.t["owners"].read().filter(F.col("name") == owner)
-        cats = self.t["categories"].read()
-        rows = (
-            cats.join(
-                owners.select(F.col("owner_id").alias("_oid")),
-                cats.owner_id == F.col("_oid"),
-                "left_semi",
-            )
-            .select("name")
-            .orderBy("name")
-            .collect()
+        owners = [o for (o,) in self.t["owners"].lookup(["owner_id"], {"name": owner})]
+        if not owners:
+            return []
+        # str order is code-point order, which is Spark's UTF-8 byte order
+        return sorted(
+            n for (n,) in self.t["categories"].lookup(["name"], {"owner_id": owners})
         )
-        return [r[0] for r in rows]
 
     # -- serving-layer metadata (cache/middleware.go:18-163) -----------------
     def _invalidate_cache(self) -> None:
@@ -2678,19 +2816,13 @@ class Engine:
         (misses — unknown owner/category — are never cached)."""
 
         def load() -> int | None:
-            owners = self.t["owners"].read().filter(F.col("name") == owner)
-            o = owners.head()
-            if o is None:
+            o = self.t["owners"].lookup(["owner_id"], {"name": owner})
+            if not o:
                 return None
-            c = (
-                self.t["categories"]
-                .read()
-                .filter(
-                    (F.col("owner_id") == o["owner_id"]) & (F.col("name") == category)
-                )
-                .head()
+            c = self.t["categories"].lookup(
+                ["category_id"], {"owner_id": o[0][0], "name": category}
             )
-            return None if c is None else c["category_id"]
+            return c[0][0] if c else None
 
         if self._cache:
             return self._cache.get(("category_id", owner, category), load)
@@ -2709,13 +2841,9 @@ class Engine:
         centroid sets use plans/ivf.nearest_centroids_distributed."""
 
         def load() -> list[tuple[int, list[float]]]:
-            return [
-                (r["centroid_id"], r["vector"])
-                for r in self.t["centroids"]
-                .read()
-                .filter(F.col("category_id") == cid)
-                .collect()
-            ]
+            return self.t["centroids"].lookup(
+                ["centroid_id", "vector"], {"category_id": cid}
+            )
 
         if self._cache and not fresh:
             return self._cache.get(("centroids", cid), load)

@@ -133,6 +133,33 @@ def dequantize(qvec: Column, lo: Column, hi: Column, precision: str = "float32")
     )
 
 
+def dequantize_array(codes, lo, hi) -> np.ndarray:
+    """:func:`dequantize` (float32) on the driver, step for step, so
+    the vectors equal Spark's bit for bit: ``codes`` is (rows, dims),
+    ``lo``/``hi`` are (rows,)."""
+    lo = np.asarray(lo, dtype=np.float32)[:, None]
+    span = np.asarray(hi, dtype=np.float32)[:, None] - lo
+    return lo + np.asarray(codes, dtype=np.float32) / np.float32(255.0) * span
+
+
+def cosine_array(vecs, q) -> np.ndarray:
+    """:func:`cosine_similarity` of each row of ``vecs`` with ``q`` on
+    the driver, bit for bit: products in float64 and every sum a
+    sequential fold in index order, as :func:`dot`'s ``F.aggregate``
+    adds (``np.cumsum`` adds in order; ``@`` and ``sum`` do not)."""
+    v = np.asarray(vecs, dtype=np.float64)
+    q = np.asarray(q, dtype=np.float64)
+
+    def fold(x):
+        # + 0.0: the aggregate starts at 0.0, which turns a leading -0.0
+        # into 0.0; every other partial sum is the same
+        return np.cumsum(x, axis=-1)[..., -1] + 0.0
+
+    denom = np.sqrt(fold(v * v)) * np.sqrt(fold(q * q))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, 0.0, fold(v * q) / denom)
+
+
 # ---------------------------------------------------------------------------
 # Binary wire/storage codec - bit-exact parity with the reference's
 # []byte vector layout: [min float32 LE (4B)][max float32 LE (4B)][D x uint8]

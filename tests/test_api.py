@@ -327,13 +327,17 @@ def test_search_metadata_cached_and_invalidated(spark, tmp_path, monkeypatch):
     )
 
     calls = collections.Counter()
-    orig = _VersionedTable.read
 
-    def counting_read(self, *a, **k):
-        calls[self.name] += 1
-        return orig(self, *a, **k)
+    def counting(orig):
+        def read(self, *a, **k):
+            calls[self.name] += 1
+            return orig(self, *a, **k)
 
-    monkeypatch.setattr(_VersionedTable, "read", counting_read)
+        return read
+
+    # a store read is a Spark read or a driver-side pyarrow read
+    for name in ("read", "read_arrow"):
+        monkeypatch.setattr(_VersionedTable, name, counting(getattr(_VersionedTable, name)))
     eng.search("o", "c", "words", nprobe=-1).collect()
     warm = dict(calls)
     assert warm.get("centroids", 0) >= 1  # first search loads metadata

@@ -1,8 +1,10 @@
-"""The page-sized ends of the serving search path: query embedding and
-page hydration run on the driver, so a warm-cache search costs only the
-probed scan and the top-k in Spark (plus one point read of the page's
-documents). All five search forms share one retrieval core; their job
-counts and pages are pinned here."""
+"""The serving search path on the driver: query embedding, probe
+ranking, the probed scan and top-k, and page hydration. Under the
+engine's LOCAL_READ_ROWS bound a warm search reads the probed lists and
+the page's documents with pyarrow and runs no Spark job; over it, or
+with ``where=``, the scan and top-k run in Spark, and both paths return
+the same pages bit for bit. All five search forms share one retrieval
+core; their job counts and pages are pinned here."""
 
 from __future__ import annotations
 
@@ -16,7 +18,15 @@ from hypothesis import strategies as st
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from go_vectorsearch_spark.api import SEARCH_QUERY_PREFIX, Engine
+from go_vectorsearch_spark import api
+from go_vectorsearch_spark.api import (
+    _SCHEMAS,
+    SEARCH_QUERY_PREFIX,
+    Engine,
+    _id_frame,
+    _rank_probe_ids,
+)
+from go_vectorsearch_spark.functions.vector import cosine_array, dequantize_array
 from go_vectorsearch_spark.operators.fulltext import bm25_search_stored
 from go_vectorsearch_spark.operators.search import (
     mmr_select,
@@ -175,6 +185,8 @@ def test_query_vec_lit_is_one_literal(spark):
         ).alias("score"),
     )
     assert got == {r["id"]: r["score"] for r in ref.collect()}
+    # and so does the driver's sequential-fold twin
+    assert cosine_array(vecs, q).tolist() == [got[i] for i in range(len(vecs))]
     qa = np.asarray(q)
     for i, v in enumerate(vecs):
         assert got[i] == pytest.approx(
@@ -348,3 +360,193 @@ def test_round6_matches_spark_round(spark, xs):
     assert [round6(x) for x in xs] == want
     assert round6_array(xs).tolist() == want
     assert want[:3] == [0.123457, 1e-06, 0.707107]
+
+
+# ---------------------------------------------------------------------------
+# the driver path: request-sized reads score and hydrate with no Spark job
+# ---------------------------------------------------------------------------
+
+# ranks both Twins right behind one P document (and the crafted ones)
+EDGE_QUERY = "Twin. twin payload shared word for word."
+
+
+@pytest.fixture(scope="module")
+def edge_engine(page_engine):
+    """page_engine's category plus crafted edge cases, their chunks
+    stored in the list the edge query probes first:
+
+    - Near and Far score different cosines that round to the same 6
+      decimals, Near (the lower id) the lower raw score, so the rounded
+      order is the reverse of the raw order;
+    - Pair's two chunks score exactly equal with different vectors (the
+      lower chunk id holds the doubled one);
+    - Gone is deleted."""
+    eng, _ = page_engine
+    names = ["Near", "Far", "Pair", "Gone"]
+    near, far, pair, gone = eng.upload("acme", "wiki", [
+        {"name": n, "external_id": n.lower(), "document": json.dumps({"body": f"edge {n}"})}
+        for n in names
+    ])
+    eng.delete_document("acme", "wiki", gone)
+    q = np.asarray(eng._embed_query(SEARCH_QUERY_PREFIX + EDGE_QUERY))
+    lo, hi = np.float32(min(q.min(), 0.0)), np.float32(max(q.max(), 0.0))
+    base = np.floor((q - lo) / (hi - lo) * 255).astype(np.int64)
+    cands = []
+    for i in range(len(base)):
+        for step in (-2, -1, 1, 2):
+            c = base.copy()
+            c[i] = min(max(c[i] + step, 0), 255)
+            cands.append(c)
+    scores = cosine_array(
+        dequantize_array(np.array(cands), [lo] * len(cands), [hi] * len(cands)), q
+    )
+    order = np.argsort(scores, kind="stable")
+    a, b = next(
+        (a, b) for a, b in zip(order, order[1:])
+        if scores[a] < scores[b] and round6(scores[a]) == round6(scores[b])
+    )
+    scope = eng._category_id("acme", "wiki")
+    cent = _rank_probe_ids(eng._category_centroids(scope), q.tolist(), 1)[0]
+    first = eng._next_id("embeddings", "embedding_id")
+    rows = [
+        (first, near, cands[a], lo, hi),
+        (first + 1, far, cands[b], lo, hi),
+        (first + 2, pair, base, 2 * lo, 2 * hi),
+        (first + 3, pair, base, lo, hi),
+    ]
+    eng.t["embeddings"].replace_rows(
+        "document_id",
+        _id_frame(eng.spark, [near, far, pair]),
+        eng.spark.createDataFrame(
+            [(e, d, cent, [int(x) for x in c], float(l), float(h)) for e, d, c, l, h in rows],
+            _SCHEMAS["embeddings"],
+        ),
+    )
+    pair_vec = dequantize_array([base], [2 * lo], [2 * hi])[0].tolist()
+    return eng, dict(near=near, far=far, pair=pair, gone=gone, cent=cent, pair_vec=pair_vec)
+
+
+def test_driver_path_pages_equal_spark_path(edge_engine, monkeypatch):
+    """Every form's page, scores included, is bit for bit the Spark
+    path's (forced by a bound of 0 rows), at nprobe 1/2/all and offsets
+    0/3. The hybrid forms' offset only slices their fused ranking, whose
+    vector leg is ``fuse_depth`` deep at any offset, so they take offset
+    3 at nprobe = all alone."""
+    eng, edge = edge_engine
+    texts = [EDGE_QUERY, "word3 spark"]
+
+    def pages():
+        out = {}
+        for nprobe in (1, 2, -1):
+            for offset in (0, 3):
+                forms = ["search", "search_diverse", "search_many"]
+                if offset == 0 or nprobe == -1:
+                    forms += ["search_hybrid", "search_many_hybrid"]
+                for form in forms:
+                    arg = texts if "many" in form else EDGE_QUERY
+                    extra = {"pool": 12} if form == "search_diverse" else {}
+                    out[form, nprobe, offset] = getattr(eng, form)(
+                        "acme", "wiki", arg, count=6, offset=offset, nprobe=nprobe,
+                        **extra,
+                    ).collect()
+        return out
+
+    local = pages()
+    monkeypatch.setattr(api, "LOCAL_READ_ROWS", 0)
+    assert pages() == local
+    assert all(r["document_id"] != edge["gone"] for page in local.values() for r in page)
+    # the rounded tie comes in id order although Far's raw score is higher
+    page = local["search", 1, 0]
+    by_id = {r["document_id"]: r for r in page}
+    near, far = by_id[edge["near"]], by_id[edge["far"]]
+    assert near["score"] < far["score"]
+    assert round6(near["score"]) == round6(far["score"])
+    got = [r["document_id"] for r in page]
+    assert got.index(edge["near"]) < got.index(edge["far"])
+    twins = [r["score"] for r in local["search", -1, 0] if r["name"] == "Twin"]
+    assert len(twins) == 2 and twins[0] == twins[1]
+
+
+def test_best_chunk_tie_returns_lower_chunk_ids_vector(edge_engine, monkeypatch):
+    eng, edge = edge_engine
+    q = eng._embed_query(SEARCH_QUERY_PREFIX + EDGE_QUERY)
+
+    def pair_row():
+        top, _ = eng._score([(0, q, [edge["cent"]])], 50, with_vector=True)
+        return next(r for r in top[0] if r["document_id"] == edge["pair"])
+
+    local = pair_row()
+    monkeypatch.setattr(api, "LOCAL_READ_ROWS", 0)
+    assert pair_row() == local
+    assert local["vector"] == edge["pair_vec"]
+
+
+def test_reads_over_the_bound_take_the_spark_path(spark, page_engine, monkeypatch):
+    eng, _ = page_engine
+    text = "word3 spark"
+    scope = eng._category_id("acme", "wiki")
+    q = eng._embed_query(SEARCH_QUERY_PREFIX + text)
+    lists = _rank_probe_ids(eng._category_centroids(scope), q, 2)
+    n_rows = eng.t["embeddings"].read_arrow(lists).num_rows
+
+    def score():
+        return eng._score([(0, q, lists)], 10)[0]
+
+    def page():
+        return eng.search("acme", "wiki", text, count=10, nprobe=2).collect()
+
+    monkeypatch.setattr(api, "LOCAL_READ_ROWS", n_rows)
+    at, at_jobs = _jobs_of(spark, score)
+    want = page()
+    monkeypatch.setattr(api, "LOCAL_READ_ROWS", n_rows - 1)
+    over, over_jobs = _jobs_of(spark, score)
+    assert at_jobs == 0 and over_jobs > 0
+    assert over == at and page() == want
+
+
+def test_where_takes_the_spark_path(spark, page_engine, monkeypatch):
+    eng, _ = page_engine
+    called = []
+    monkeypatch.setattr(eng, "_score_local", lambda *a: called.append(a))
+    rows, jobs = _jobs_of(spark, lambda: eng.search(
+        "acme", "wiki", "word3 spark", count=5, nprobe=2, where=F.col("name") != "P3",
+    ).collect())
+    assert rows and jobs > 0 and not called
+
+
+def test_category_without_index_returns_empty_page_in_zero_jobs(spark, page_engine):
+    eng, _ = page_engine
+    (owner_id,), = eng.t["owners"].lookup(["owner_id"], {"name": "acme"})
+    eng._get_or_create("categories", "category_id", {"name": "bare", "owner_id": owner_id})
+    assert eng._category_centroids(eng._category_id("acme", "bare")) == []
+    for category in ("bare", "missing"):
+        for form, arg in (("search", "x"), ("search_many", ["x", "y"]),
+                          ("search_diverse", "x")):
+            rows, jobs = _jobs_of(
+                spark, lambda: getattr(eng, form)("acme", category, arg).collect()
+            )
+            assert (rows, jobs) == ([], 0), (category, form)
+
+
+@pytest.mark.parametrize(
+    "form, jobs",
+    [
+        ("search", 0),
+        ("search_many", 0),
+        ("search_diverse", 0),
+        ("search_hybrid", 4),
+        ("search_many_hybrid", 6),
+    ],
+)
+def test_warm_search_form_exact_job_counts(spark, page_engine, form, jobs):
+    """Under the bound only the hybrid forms' BM25 leg runs in Spark."""
+    eng, _ = page_engine
+    arg = PIN_TEXTS if "many" in form else "word3 spark"
+
+    def call():
+        return getattr(eng, form)("acme", "wiki", arg, count=10, nprobe=2).collect()
+
+    warm = call()
+    rows, got = _jobs_of(spark, call)
+    assert rows == warm and rows
+    assert got == jobs
