@@ -114,12 +114,16 @@ N_BAND_BUCKETS = 16  # near-dup band-store partitions (band-key hash)
 # 256 would push 99% of realistic targeted cuts onto the whole-store
 # rebuild path for no scan saving.
 BULK_REWRITE_CAP = 10_000
-# request-sized reads run on the driver: a read whose files hold at most
-# this many rows (summed from their parquet footers, no job) is one
-# pyarrow read, so a warm search scores its probed lists and hydrates
-# its page with no Spark job. At 64 dims the bound keeps a scored read
-# near 25 MB of float64 on the driver and tens of milliseconds of numpy;
-# larger reads take the Spark path.
+# request-sized scans run on the driver: probed lists whose files hold
+# at most this many rows (summed from their parquet footers, no job) are
+# one pyarrow read scored with numpy, so a warm search runs no Spark job;
+# larger scans take the Spark path. This is a driver-memory cap, not a
+# speed crossover. Measured at 64 dims against local[2] Spark on a
+# 4-core box, the driver path was 8x to 18x faster at every size from
+# 10k to 200k probed rows (one query at 50k rows: 0.19 s vs 2.0 s),
+# while its peak memory grows with the rows, about 3 KB a row: a
+# 16-query batch over 50k rows peaked at 99 MB of numpy arrays plus
+# 55 MB of Arrow buffers, over 200k rows at 397 MB plus 215 MB.
 LOCAL_READ_ROWS = 50_000
 _PARTITION_EXPRS = {
     "embeddings": "centroid_id",
@@ -368,33 +372,13 @@ class _VersionedTable:
     ):
         """The current snapshot as a pyarrow Table read on the driver,
         or ``None`` when its files hold more than ``LOCAL_READ_ROWS``
-        rows — the caller's cue to take its Spark path.
-
-        The snapshot resolves once and its immutable files are listed
-        from the manifest, as :meth:`read` does, so the read keeps that
-        snapshot whatever writers do meanwhile; ``partition_values``
-        prunes at the manifest level. The row count comes from the
-        parquet footers; no Spark job runs. ``filters`` is a pyarrow
-        compute expression, pushed into the scan."""
-        import pyarrow.dataset as ds
-
-        _v, parts = self._snapshot()
-        if partition_values is not None:
-            keys = {str(x) for x in partition_values}
-            parts = {k: d for k, d in parts.items() if k in keys}
-        data = ds.dataset(
-            self._data_files(parts), schema=self._arrow_schema, format="parquet"
-        )
+        rows — the caller's cue to take its Spark path. The row count
+        comes from the parquet footers; no Spark job runs. ``filters``
+        is a pyarrow compute expression, pushed into the scan."""
+        data = self._arrow_dataset(partition_values)
         if data.count_rows() > LOCAL_READ_ROWS:
             return None
         return data.to_table(columns=columns, filter=filters)
-
-    @cached_property
-    def _arrow_schema(self):
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import StructType
-
-        return to_arrow_schema(StructType.fromDDL(self.schema))
 
     def lookup(
         self,
@@ -404,21 +388,46 @@ class _VersionedTable:
     ) -> list[tuple]:
         """The ``columns`` of the current snapshot's rows matching every
         ``where`` condition (column -> value, or -> list of values for
-        IN), as tuples: a :meth:`read_arrow` on the driver when the read
-        is under the bound, else a pruned Spark collect."""
+        IN), as tuples: one pyarrow scan on the driver with the filter
+        pushed in, so only the matches are kept and no job runs.
+
+        Not bounded by ``LOCAL_READ_ROWS``, which caps scored reads:
+        against a local[2] Spark collect this scan was faster on the
+        owners and categories tables up to 2.5M rows and on a page's
+        documents buckets up to 500k rows. On the centroids table, which
+        is not partitioned, it was faster up to 200k rows (108 vs
+        167 ms) and slower at 500k (308 vs 185 ms)."""
         import pyarrow.compute as pc
 
-        def match(col):  # pc.field or F.col: the same predicate either side
-            return reduce(operator.and_, [
-                col(c).isin(v) if isinstance(v, list) else col(c) == v
-                for c, v in where.items()
-            ])
+        match = reduce(operator.and_, [
+            pc.field(c).isin(v) if isinstance(v, list) else pc.field(c) == v
+            for c, v in where.items()
+        ])
+        tbl = self._arrow_dataset(partition_values).to_table(columns=columns, filter=match)
+        return list(zip(*(tbl[c].to_pylist() for c in columns)))
 
-        tbl = self.read_arrow(partition_values, columns, match(pc.field))
-        if tbl is not None:
-            return list(zip(*(tbl[c].to_pylist() for c in columns)))
-        df = self.read(partition_values=partition_values).filter(match(F.col))
-        return [tuple(r) for r in df.select(*columns).collect()]
+    def _arrow_dataset(self, partition_values: Sequence | None = None):
+        """The current snapshot's data files as one pyarrow dataset. The
+        snapshot resolves once and its immutable files are listed from
+        the manifest, as :meth:`read` does, so a read keeps that
+        snapshot whatever writers do meanwhile; ``partition_values``
+        prunes at the manifest level."""
+        import pyarrow.dataset as ds
+
+        _v, parts = self._snapshot()
+        if partition_values is not None:
+            keys = {str(x) for x in partition_values}
+            parts = {k: d for k, d in parts.items() if k in keys}
+        return ds.dataset(
+            self._data_files(parts), schema=self._arrow_schema, format="parquet"
+        )
+
+    @cached_property
+    def _arrow_schema(self):
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import StructType
+
+        return to_arrow_schema(StructType.fromDDL(self.schema))
 
     def _data_files(self, parts: dict[str, list[str]]) -> list[str]:
         """Paths of the data files a manifest's ``parts`` reference,
@@ -1664,12 +1673,10 @@ class Engine:
         separate point query (server/search.go:285-308); so does this:
         one documents read pruned at the manifest level to the page
         ids' HASH BUCKETS and filtered to the ids and the category
-        (:meth:`_VersionedTable.lookup`: a pyarrow read with no job under
-        ``LOCAL_READ_ROWS``, else one Spark collect), joined to the page
-        on the driver. The
-        rows keep the caller's order, which is already the rank: the
-        (round(score, 6) desc, id asc) order, the MMR selection order
-        or the fused order; batched pages follow in q_ix order. A page
+        (:meth:`_VersionedTable.lookup`: a pyarrow scan, no job), joined
+        to the page on the driver. The rows keep the caller's order,
+        which is already the rank: the (round(score, 6) desc, id asc)
+        order, the MMR selection order or the fused order; batched pages follow in q_ix order. A page
         id whose document was deleted after the top-k is dropped.
         """
         pages = (
@@ -2797,13 +2804,19 @@ class Engine:
         )
 
     def fetch_category_names(self, owner: str) -> list[str]:
-        owners = [o for (o,) in self.t["owners"].lookup(["owner_id"], {"name": owner})]
-        if not owners:
-            return []
-        # str order is code-point order, which is Spark's UTF-8 byte order
-        return sorted(
-            n for (n,) in self.t["categories"].lookup(["name"], {"owner_id": owners})
+        owners = self.t["owners"].read().filter(F.col("name") == owner)
+        cats = self.t["categories"].read()
+        rows = (
+            cats.join(
+                owners.select(F.col("owner_id").alias("_oid")),
+                cats.owner_id == F.col("_oid"),
+                "left_semi",
+            )
+            .select("name")
+            .orderBy("name")
+            .collect()
         )
+        return [r[0] for r in rows]
 
     # -- serving-layer metadata (cache/middleware.go:18-163) -----------------
     def _invalidate_cache(self) -> None:
@@ -2832,7 +2845,7 @@ class Engine:
         self, cid: int, fresh: bool = False
     ) -> list[tuple[int, list[float]]]:
         """All (centroid_id, vector) of a category, TTL-cached (unless
-        ``fresh``: one collect, bypassing the cache) — the
+        ``fresh``: one read, bypassing the cache) — the
         reference's FetchCentroids (cache/middleware.go:115-163): search
         resolves its probe set WITHOUT touching storage on repeat
         requests. Bounded by design: centroid count ~ rows/10k (the

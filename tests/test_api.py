@@ -336,7 +336,7 @@ def test_search_metadata_cached_and_invalidated(spark, tmp_path, monkeypatch):
         return read
 
     # a store read is a Spark read or a driver-side pyarrow read
-    for name in ("read", "read_arrow"):
+    for name in ("read", "_arrow_dataset"):
         monkeypatch.setattr(_VersionedTable, name, counting(getattr(_VersionedTable, name)))
     eng.search("o", "c", "words", nprobe=-1).collect()
     warm = dict(calls)
