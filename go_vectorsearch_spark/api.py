@@ -30,11 +30,15 @@ from __future__ import annotations
 
 import operator
 import os
+import re
+import shutil
 import threading
 import time
 from collections.abc import Sequence
 from functools import cached_property, reduce
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,13 +46,15 @@ from go_vectorsearch_spark import persist, versioned
 from go_vectorsearch_spark.operators.relational import lookup_by_keys
 
 from go_vectorsearch_spark.functions.vector import (
-    cosine_array,
+    columns_f64,
+    cosine_columns,
     dequantize,
     dequantize_array,
+    norm_columns,
     quantize,
     vector_range,
 )
-from go_vectorsearch_spark.operators.assign import assign_nearest, assign_nearest_mat
+from go_vectorsearch_spark.operators.assign import assign_nearest, nearest_ids
 from go_vectorsearch_spark.operators.documents import (
     SEARCH_QUERY_PREFIX,
     document_chunks,
@@ -63,6 +69,7 @@ from go_vectorsearch_spark.operators.search import (
     round6,
     round6_array,
 )
+from go_vectorsearch_spark.sources.embed_http import embed_texts
 from go_vectorsearch_spark.sources.tables import ensure_package_on_workers
 
 EMBED_DIM = 64  # matches the driver testdata's embedding width
@@ -200,6 +207,22 @@ def _row_group_stats(path: str, col: str) -> list:
     return [md.row_group(g).column(ix).statistics for g in range(md.num_row_groups)]
 
 
+_PMOD = re.compile(r"pmod\((\w+), (\d+)\)")
+
+
+def _arrow_partition_keys(expr: str, tbl) -> np.ndarray:
+    """The value of a partition expression for each row of a pyarrow
+    Table, computed on the driver: the twin of the two forms
+    ``_PARTITION_EXPRS`` uses, a bare column or ``pmod(col, n)``
+    (numpy's ``mod`` by a positive n is Spark's ``pmod``)."""
+    if expr in tbl.column_names:
+        return tbl[expr].to_numpy()
+    m = _PMOD.fullmatch(expr)
+    if m is None:
+        raise ValueError(f"no driver form of partition expression {expr!r}")
+    return np.mod(tbl[m[1]].to_numpy(), int(m[2]))
+
+
 def _part_dirs(m: dict) -> list[str]:
     """The data directories a table manifest references."""
     return [d for dirs in m["parts"].values() for d in dirs]
@@ -293,8 +316,10 @@ class _VersionedTable:
             self.dir, keep, "_data", _part_dirs, self.vacuum_min_age_s
         )
 
-    def _write_batch(self, df: DataFrame, v: int) -> dict[str, list[str]]:
-        """Write df as immutable batch w{v}; return its parts mapping.
+    def _write_batch(self, df, v: int) -> dict[str, list[str]]:
+        """Write df — a DataFrame, or a pyarrow Table of driver rows
+        (:meth:`_write_arrow`) — as immutable batch w{v}; return its
+        parts mapping.
 
         mode("overwrite"): a FAILED prior attempt at this version (write
         job died after creating the directory, before _commit moved the
@@ -305,6 +330,8 @@ class _VersionedTable:
         advance makes v unreachable for later writers."""
         rel = os.path.join("_data", f"w{v}")
         path = os.path.join(self.dir, rel)
+        if not isinstance(df, DataFrame):
+            return self._write_arrow(df, rel, path)
         if self.partition_expr:
             # route each value's rows to ONE task before partitionBy:
             # without the repartition every write task emits a file per
@@ -328,6 +355,37 @@ class _VersionedTable:
             }
         df.write.mode("overwrite").parquet(path)
         return {"": [rel]}
+
+    def _write_arrow(self, tbl, rel: str, path: str) -> dict[str, list[str]]:
+        """:meth:`_write_batch` for a pyarrow Table, on the driver with no
+        Spark job: rows are routed to ``_p=<value>`` directories by
+        :func:`_arrow_partition_keys`, the twin of the partition
+        expression, and each directory gets one zstd parquet file with
+        row-group statistics (as Spark writes them, so
+        :meth:`max_value` reads footers either way). An orphan w{v}
+        of a failed attempt is removed first, whole, as the Spark
+        form's static overwrite does."""
+        import pyarrow.parquet as pq
+
+        shutil.rmtree(path, ignore_errors=True)
+        tbl = tbl.select(self._arrow_schema.names).cast(self._arrow_schema)
+        if not self.partition_expr:
+            groups = [("", rel, tbl)]
+        else:
+            keys = _arrow_partition_keys(self.partition_expr, tbl)
+            groups = [
+                (str(k), os.path.join(rel, f"_p={k}"), tbl.filter(keys == k))
+                for k in np.unique(keys).tolist()
+            ]
+        out = {}
+        for key, sub, rows in groups:
+            os.makedirs(os.path.join(self.dir, sub))
+            pq.write_table(
+                rows, os.path.join(self.dir, sub, "part-00000.zstd.parquet"),
+                compression="zstd",
+            )
+            out[key] = [sub]
+        return out
 
     def read(
         self,
@@ -471,10 +529,12 @@ class _VersionedTable:
             v = self._version() + 1
             self._commit(v, self._write_batch(df, v), keep_versions)
 
-    def append(self, df: DataFrame, keep_versions: int = 2) -> None:
+    def append(self, df, keep_versions: int = 2) -> None:
         """Add rows without rewriting ANY existing data: the new manifest
         carries every prior directory by reference and adds the new
-        batch's. Upload's shape (server/upload.go:288-304's INSERTs)."""
+        batch's. Upload's shape (server/upload.go:288-304's INSERTs).
+        ``df`` may be a pyarrow Table of driver rows, written with no
+        Spark job (:meth:`_write_arrow`)."""
         with self._write_lock():
             cur, parts = self._snapshot()
             v = cur + 1
@@ -710,8 +770,6 @@ def _rank_probe_ids(
     rounding so the probe set matches brute_force_topk's
     (round(score, 6) desc, id asc) total order; zero-norm sides score
     0.0 in the shared kernel."""
-    import numpy as np
-
     from go_vectorsearch_spark.plans.ivf import _rank_centroids
 
     if not cent_rows:
@@ -774,8 +832,6 @@ def _local_topk(doc_ids, chunk_ids, scores, n: int, vectors=None) -> list:
     chunk (highest score, then lowest chunk id, the ``max_by`` tie
     rule) in (round(score, 6) desc, id asc) order, cut to ``n``. Returns
     (document_id, score[, vector]) rows."""
-    import numpy as np
-
     if not len(doc_ids):
         return []
     order = np.lexsort((chunk_ids, -scores, doc_ids))
@@ -879,8 +935,6 @@ def _local_frame(spark: SparkSession, schema, rows: Sequence[tuple]) -> DataFram
     pyarrow schema). Spark plans it as a LocalRelation, so building it
     runs no job and neither does its collect(); a frame built from a
     Python list is an RDD scan and pays one job per action."""
-    import pyarrow as pa
-
     cols = list(zip(*rows)) if rows else [()] * len(schema)
     return spark.createDataFrame(
         pa.Table.from_arrays(
@@ -894,8 +948,6 @@ def _id_frame(
 ) -> DataFrame:
     """A driver-local one-column frame of ``ids``: the keys of a point
     rewrite, which :func:`_keyed` turns into an ``IN`` literal."""
-    import pyarrow as pa
-
     return _local_frame(spark, pa.schema([(col, pa.int64())]), [(i,) for i in ids])
 
 
@@ -903,20 +955,18 @@ def assign_embedding_ids(
     chunks: DataFrame,
     base_emb: int,
     base_doc: int | None = None,
-    stride: int | None = None,
 ) -> DataFrame:
     """Unique, deterministic embedding_id per (doc_id, chunk_idx) with NO
     global sort: id = base + (doc_id - base_doc) * stride + chunk_idx,
-    base_doc = the batch's min doc_id and stride = max chunks per doc in
-    the batch (one tiny agg job for whichever the caller omits). A
-    row_number over an unpartitioned Window would funnel the whole batch
-    through one task — fine for request-sized uploads, the wrong shape
-    for bulk ingest. Ids are gappy (stride over-allocates); id allocation
-    is max+1 so gaps are harmless."""
-    if base_doc is None or stride is None:
-        lo, hi = chunks.agg(F.min("doc_id"), F.max("chunk_idx")).head()
-        base_doc = lo if base_doc is None else base_doc
-        stride = (hi or 0) + 1 if stride is None else stride
+    base_doc = the batch's min doc_id unless given and stride = max
+    chunks per doc in the batch (one tiny agg job). A row_number over an
+    unpartitioned Window would funnel the whole batch through one task —
+    the wrong shape for bulk ingest. Ids are gappy (stride
+    over-allocates); id allocation is max+1 so gaps are harmless. An
+    upload computes the same ids on the driver."""
+    lo, hi = chunks.agg(F.min("doc_id"), F.max("chunk_idx")).head()
+    base_doc = lo if base_doc is None else base_doc
+    stride = (hi or 0) + 1
     return chunks.withColumn(
         "embedding_id",
         F.lit(base_emb)
@@ -951,8 +1001,9 @@ class Engine:
             select_embed_provider,
         )
 
-        # the upload path's pandas UDFs import this package on Spark's
-        # Python workers, which do not share the driver's sys.path
+        # refresh_index and re-embed run pandas UDFs that import this
+        # package on Spark's Python workers, which do not share the
+        # driver's sys.path
         ensure_package_on_workers(spark)
         self.spark = spark
         self.root = root
@@ -1012,10 +1063,7 @@ class Engine:
         if hit:
             return hit[0][0]
         new_id = self._next_id(table, id_col)
-        new_row = self.spark.createDataFrame(
-            [{id_col: new_id, **filters}], _SCHEMAS[table]
-        )
-        self.t[table].append(new_row)
+        self.t[table].append(pa.Table.from_pylist([{id_col: new_id, **filters}]))
         return new_id
 
     # -- upload (server/upload.go:111-323) ---------------------------------
@@ -1119,102 +1167,84 @@ class Engine:
                 # with zero survivors every slot matched the store
                 return [dup_of[ix] for ix in range(len(documents))]
             documents = [documents[i] for i in survivors]
-        import numpy as np
-        import pyarrow as pa
-
-        # the request-sized ends run on the driver: chunking here (a bad
-        # payload fails before any write), and the documents and chunk
-        # rows become Arrow-backed LocalRelations — no job builds them
+        # the whole request runs on the driver, as the reference's
+        # in-process pass does: chunk (a bad payload fails before any
+        # write), embed, seed, assign, then two Arrow appends — no Spark
+        # job
         doc_chunks = [
             document_chunks(d.get("name", ""), d["document"], ctx_num=2048)
             for d in documents
         ]
         base_doc = self._next_id("documents", "document_id")
         ids = [base_doc + i for i in range(len(documents))]
-        long, text = pa.int64(), pa.string()
-        new_docs = _local_frame(
-            self.spark,
-            pa.schema([("document_id", long), ("name", text), ("external_id", text),
-                       ("payload_json", text), ("category_id", long)]),
-            [
-                (doc_id, d.get("name", ""), d.get("external_id", ""), d["document"],
-                 category_id)
-                for doc_id, d in zip(ids, documents)
-            ],
-        )
-        chunk_frame = _local_frame(
-            self.spark,
-            pa.schema([("doc_id", long), ("chunk_idx", pa.int32()), ("chunk", text)]),
-            [
-                (doc_id, ix, chunk)
-                for doc_id, texts in zip(ids, doc_chunks)
-                for ix, chunk in enumerate(texts)
-            ],
-        )
+        doc_of = np.repeat(np.array(ids, dtype=np.int64), list(map(len, doc_chunks)))
+        chunk_idx = np.concatenate([np.arange(len(c)) for c in doc_chunks])
         # Embed → quantized codes immediately (the reference never holds
         # full precision past the decode boundary, ai/aicomms/embed.go:
-        # 42-50). "vector" is the dequantize-in-expression working column
-        # used for centroid assignment, never stored.
-        # persist: the embed stage (an HTTP mapInPandas in live mode) is
-        # referenced by up to two actions below (seed head, embeddings
-        # write) — unpersisted, every chunk would be re-POSTed to the
-        # embed endpoint per action, and a non-bit-deterministic
-        # endpoint would seed centroids from a different response than
-        # the stored codes
-        with persist.Scope() as scope:
-            chunks = scope.hold(dequantized_vector(self._embed_chunks(chunk_frame)))
+        # 42-50); the dequantized vectors only seed and assign
+        codes, lo, hi = embed_texts(
+            [c for texts in doc_chunks for c in texts],
+            dim=self.embed_dim,
+            providers=[self.provider] if self.provider else None,
+        )
+        vecs = dequantize_array(codes, lo, hi)
 
-            # one fresh collect of the category's centroids: a cached list
-            # another process has since replaced could assign into a list
-            # that no longer exists
-            cents = self._category_centroids(category_id, fresh=True)
-            if not cents:
-                # first upload of a category seeds centroid #1 with the
-                # first chunk's embedding (server/upload.go:210-227)
-                first = chunks.orderBy("doc_id", "chunk_idx").select("vector").head()
-                seed_id = self._next_id("centroids", "centroid_id")
-                self.t["centroids"].append(
-                    self.spark.createDataFrame(
-                        [{"centroid_id": seed_id, "category_id": category_id,
-                          "vector": first[0]}],
-                        _SCHEMAS["centroids"],
-                    )
-                )
-                cents = [(seed_id, first[0])]
-
-            # nearest-centroid assignment (server/upload.go:239-245, J5/V3)
-            assigned = assign_nearest_mat(
-                chunks,
-                [(int(c), np.asarray(v, dtype=np.float64)) for c, v in cents],
-                vec_col="vector",
-                out_col="centroid_id",
+        # one fresh read of the category's centroids: a cached list
+        # another process has since replaced could assign into a list
+        # that no longer exists
+        cents = self._category_centroids(category_id, fresh=True)
+        if not cents:
+            # first upload of a category seeds centroid #1 with the
+            # first chunk's embedding (server/upload.go:210-227)
+            seed_id = self._next_id("centroids", "centroid_id")
+            cents = [(seed_id, vecs[0].tolist())]
+            self.t["centroids"].append(
+                pa.Table.from_pylist([
+                    {"centroid_id": seed_id, "category_id": category_id,
+                     "vector": cents[0][1]},
+                ])
             )
 
-            base_emb = self._next_id("embeddings", "embedding_id")
-            new_emb = assign_embedding_ids(
-                assigned, base_emb, base_doc, stride=max(map(len, doc_chunks))
-            ).select(
-                "embedding_id",
-                F.col("doc_id").alias("document_id"),
-                "centroid_id",
-                "codes",
-                "lo",
-                "hi",
-            )
-            # pure appends: existing data is carried over by manifest
-            # reference — an upload writes only its own rows, the
-            # INSERT-shaped write path of server/upload.go:288-304.
-            # DOCUMENTS COMMIT FIRST: a crash between the two appends then
-            # leaves zombie documents with no vectors — hydratable,
-            # deletable, merely unsearchable — and the next upload's
-            # _next_id sees the advanced documents max. The reverse order
-            # left orphan embeddings whose document_ids the NEXT upload
-            # re-allocated to unrelated documents: old vectors permanently
-            # aliased onto new content, with no repair path (the delete
-            # cascade verifies victims against the documents table and
-            # could never reach them).
-            self.t["documents"].append(new_docs)
-            self.t["embeddings"].append(new_emb)
+        # nearest-centroid assignment (server/upload.go:239-245, J5/V3)
+        assigned = nearest_ids(
+            vecs, [(int(c), np.asarray(v, dtype=np.float64)) for c, v in cents]
+        )
+        base_emb = self._next_id("embeddings", "embedding_id")
+        # assign_embedding_ids' arithmetic: stride = the most chunks of
+        # any document in the request
+        stride = max(map(len, doc_chunks))
+        dim = codes.shape[1]
+        new_emb = pa.table({
+            "embedding_id": base_emb + (doc_of - base_doc) * stride + chunk_idx,
+            "document_id": doc_of,
+            "centroid_id": assigned,
+            "codes": pa.ListArray.from_arrays(
+                np.arange(0, codes.size + 1, dim, dtype=np.int32),
+                codes.astype(np.int32).ravel(),
+            ),
+            "lo": lo,
+            "hi": hi,
+        })
+        new_docs = pa.Table.from_pylist([
+            {"document_id": doc_id, "name": d.get("name", ""),
+             "external_id": d.get("external_id", ""),
+             "payload_json": d["document"], "category_id": category_id}
+            for doc_id, d in zip(ids, documents)
+        ])
+        # pure appends: existing data is carried over by manifest
+        # reference — an upload writes only its own rows, the
+        # INSERT-shaped write path of server/upload.go:288-304.
+        # DOCUMENTS COMMIT FIRST: a crash between the two appends then
+        # leaves zombie documents with no vectors — hydratable,
+        # deletable, merely unsearchable — and the next upload's
+        # _next_id sees the advanced documents max. The reverse order
+        # left orphan embeddings whose document_ids the NEXT upload
+        # re-allocated to unrelated documents: old vectors permanently
+        # aliased onto new content, with no repair path (the delete
+        # cascade verifies victims against the documents table and
+        # could never reach them).
+        self.t["documents"].append(new_docs)
+        self.t["embeddings"].append(new_emb)
         self._invalidate_cache()  # owner/category/centroids may have changed
         # a category WITH a text index stays hybrid-consistent without
         # manual maintenance: the new documents' postings append
@@ -1628,12 +1658,11 @@ class Engine:
     ) -> dict[int, list] | None:
         """:meth:`_score`'s driver path: one pyarrow read of the probed
         lists, dequantized in float32 and scored by the sequential-fold
-        cosine (functions.vector's ``*_array`` twins of the Spark
+        cosine (functions.vector's driver twins of the Spark
         expressions), each query over its own lists with the same code,
         ranked by :func:`_local_topk`. ``None`` — take the Spark path —
         when the lists hold more than ``LOCAL_READ_ROWS`` rows or a
         stored vector's width is not the query's."""
-        import numpy as np
         import pyarrow.compute as pc
 
         tbl = self.t["embeddings"].read_arrow(
@@ -1649,15 +1678,35 @@ class Engine:
             tbl["lo"].to_numpy(),
             tbl["hi"].to_numpy(),
         )
+        # rows grouped by list, so a query's lists are slices of the
+        # read; one float64 copy and one norm fold per read, shared by
+        # every query of the batch
+        order = np.argsort(tbl["centroid_id"].to_numpy(), kind="stable")
         eids, docs, cents = (
-            tbl[c].to_numpy() for c in ("embedding_id", "document_id", "centroid_id")
+            tbl[c].to_numpy()[order]
+            for c in ("embedding_id", "document_id", "centroid_id")
         )
+        vecs = vecs[order]
+        cols = columns_f64(vecs)
+        norms = norm_columns(cols)
         out = {}
         for q_ix, qvec, ids in probes:
-            hit = np.isin(cents, ids)
+            ids = np.unique(ids)
+            spans = [
+                (a, b)
+                for a, b in zip(
+                    np.searchsorted(cents, ids), np.searchsorted(cents, ids, "right")
+                )
+                if a < b
+            ]
+            if not spans:
+                continue
+            sel = np.concatenate([np.arange(a, b) for a, b in spans])
+            scores = np.concatenate(
+                [cosine_columns(cols[:, a:b], norms[a:b], qvec) for a, b in spans]
+            )
             rows = _local_topk(
-                docs[hit], eids[hit], cosine_array(vecs[hit], qvec), n,
-                vecs[hit] if with_vector else None,
+                docs[sel], eids[sel], scores, n, vecs[sel] if with_vector else None
             )
             if rows:
                 out[q_ix] = rows
@@ -1708,8 +1757,6 @@ class Engine:
     def _page_frame(self, rows: list[tuple], batched: bool = False) -> DataFrame:
         """A search result (``q_ix`` first when ``batched``) as a
         :func:`_local_frame`, so its collect() runs no job."""
-        import pyarrow as pa
-
         schema = pa.schema(
             ([("q_ix", pa.int64())] if batched else [])
             + [
@@ -3101,8 +3148,6 @@ class Engine:
         Returns ``{"split": [...], "dropped": [...], "recentered":
         [...], "centroids": n}`` (old centroid ids; ``centroids`` is
         the category's final count)."""
-        import numpy as np
-
         from go_vectorsearch_spark.plans.ivf import build_index
 
         noop = {"split": [], "dropped": [], "recentered": [], "centroids": 0}

@@ -142,22 +142,46 @@ def dequantize_array(codes, lo, hi) -> np.ndarray:
     return lo + np.asarray(codes, dtype=np.float32) / np.float32(255.0) * span
 
 
+def fold_sum(terms):
+    """Sum equal-shape float64 arrays in order, starting from 0.0: the
+    sequential fold :func:`dot`'s ``F.aggregate`` runs, bit for bit
+    (``@``, ``sum`` and ``np.sum`` add in another order)."""
+    acc = 0.0
+    for t in terms:
+        acc = acc + t
+    return acc
+
+
+def columns_f64(vecs) -> np.ndarray:
+    """(rows, dims) vectors as a (dims, rows) float64 matrix, one
+    contiguous array per dimension: the layout the driver folds run
+    on, so a fold over the dimensions is ``dims`` vector adds."""
+    return np.ascontiguousarray(np.asarray(vecs, dtype=np.float64).T)
+
+
+def norm_columns(cols) -> np.ndarray:
+    """:func:`l2_norm` of each vector of a :func:`columns_f64` matrix."""
+    return np.sqrt(fold_sum(c * c for c in cols))
+
+
+def cosine_columns(cols, norms, q) -> np.ndarray:
+    """:func:`cosine_similarity` of each vector of a :func:`columns_f64`
+    matrix, whose :func:`norm_columns` are ``norms``, with ``q``. A
+    caller scoring several queries against one read folds the norms
+    once."""
+    q = np.asarray(q, dtype=np.float64)
+    denom = norms * np.sqrt(fold_sum(x * x for x in q))
+    dots = fold_sum(c * x for c, x in zip(cols, q))
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(denom == 0.0, 0.0, dots / denom)
+
+
 def cosine_array(vecs, q) -> np.ndarray:
     """:func:`cosine_similarity` of each row of ``vecs`` with ``q`` on
     the driver, bit for bit: products in float64 and every sum a
-    sequential fold in index order, as :func:`dot`'s ``F.aggregate``
-    adds (``np.cumsum`` adds in order; ``@`` and ``sum`` do not)."""
-    v = np.asarray(vecs, dtype=np.float64)
-    q = np.asarray(q, dtype=np.float64)
-
-    def fold(x):
-        # + 0.0: the aggregate starts at 0.0, which turns a leading -0.0
-        # into 0.0; every other partial sum is the same
-        return np.cumsum(x, axis=-1)[..., -1] + 0.0
-
-    denom = np.sqrt(fold(v * v)) * np.sqrt(fold(q * q))
-    with np.errstate(divide="ignore", invalid="ignore"):
-        return np.where(denom == 0.0, 0.0, fold(v * q) / denom)
+    :func:`fold_sum`."""
+    cols = columns_f64(vecs)
+    return cosine_columns(cols, norm_columns(cols), q)
 
 
 # ---------------------------------------------------------------------------

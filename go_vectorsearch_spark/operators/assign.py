@@ -21,6 +21,11 @@ Two physical strategies, chosen by centroid count:
 
 Both are narrow (no shuffle): assignment cost scales linearly with
 rows and is embarrassingly parallel across partitions.
+
+Rows already on the driver (an upload's chunks) take
+:func:`nearest_ids`, which picks the strategy the same way and runs
+each one's numpy twin: the GEMM body itself, or the expression path's
+sequential folds, so a row lands in the centroid the Spark path picks.
 """
 
 from __future__ import annotations
@@ -33,7 +38,13 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from go_vectorsearch_spark.functions.vector import dot, l2_normalize
+from go_vectorsearch_spark.functions.vector import (
+    columns_f64,
+    dot,
+    fold_sum,
+    l2_normalize,
+    norm_columns,
+)
 
 # Centroid count at which the GEMM path takes over. Low on purpose: the
 # expression path embeds k x dim float literals into codegen (compile
@@ -75,15 +86,22 @@ def assign_nearest_mat(
     (id, vector) pairs — the k-means fit produces exactly this, so
     callers like ``build_index`` skip a createDataFrame→collect
     round-trip of data that never left the driver."""
-    if not cents:
-        raise ValueError("assign_nearest: empty centroid set")
-    cents = sorted(cents, key=lambda t: t[0])  # asc id => argmax first-hit = lowest id
-
-    if method == "auto":
-        method = "gemm" if len(cents) >= GEMM_THRESHOLD else "expr"
+    cents, method = _resolve(cents, method)
     if method == "gemm":
         return _assign_gemm(df, cents, vec_col, out_col, sim_col)
     return _assign_expr(df, cents, vec_col, out_col, sim_col)
+
+
+def _resolve(
+    cents: list[tuple[int, np.ndarray]], method: str
+) -> tuple[list[tuple[int, np.ndarray]], str]:
+    """Centroids in ascending id order (argmax first-hit = lowest id)
+    and the strategy ``auto`` picks by their count."""
+    if not cents:
+        raise ValueError("assign_nearest: empty centroid set")
+    if method == "auto":
+        method = "gemm" if len(cents) >= GEMM_THRESHOLD else "expr"
+    return sorted(cents, key=lambda t: t[0]), method
 
 
 def _assign_expr(
@@ -95,10 +113,7 @@ def _assign_expr(
 ) -> DataFrame:
     """Codegen'd path: pre-normalized centroid literals, one dot per
     (row, centroid), array_max over (sim, -id) structs."""
-    normed = []
-    for cid, v in cents:
-        n = np.linalg.norm(v)
-        normed.append((cid, v / n if n > 0 else v))
+    normed = _expr_normed(cents)
 
     # F.lit(list) makes each centroid vector a single array Literal —
     # the F.array(*[lit per dim]) form was a CreateArray with k x d
@@ -139,13 +154,8 @@ def _assign_gemm(
     sim_col: str | None,
 ) -> DataFrame:
     """Arrow-batch GEMM path (reference Dgemm analog,
-    compute/cosine_gonum.go:60-116): per batch, X_norm @ C_normᵀ then
-    row argmax. numpy argmax keeps the first (lowest-id) max."""
-    ids = np.array([c for c, _ in cents], dtype=np.int64)
-    C = np.vstack([v for _, v in cents])
-    Cn = np.linalg.norm(C, axis=1, keepdims=True)
-    Cn[Cn == 0] = 1.0
-    C = C / Cn
+    compute/cosine_gonum.go:60-116): :func:`nearest_gemm` per batch."""
+    ids, C = _gemm_normed(cents)
 
     out_fields = df.schema.fields + [T.StructField(out_col, T.LongType())]
     if sim_col is not None:
@@ -157,17 +167,74 @@ def _assign_gemm(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            X = np.vstack(pdf[vec_col].to_numpy()).astype(np.float64)
-            Xn = np.linalg.norm(X, axis=1, keepdims=True)
-            zero = Xn[:, 0] == 0
-            Xn[zero] = 1.0
-            sims = (X / Xn) @ C.T
-            sims[zero] = 0.0  # zero vectors: cosine defined as 0 (V2 guard)
-            arg = sims.argmax(axis=1)
+            arg, sims = nearest_gemm(np.vstack(pdf[vec_col].to_numpy()), C)
             res = pdf[in_cols].copy()
             res[out_col] = ids[arg]
             if sim_col is not None:
-                res[sim_col] = sims[np.arange(len(arg)), arg]
+                res[sim_col] = sims
             yield res
 
     return df.mapInPandas(assign_batches, schema=out_schema)
+
+
+def _expr_normed(cents: list[tuple[int, np.ndarray]]) -> list[tuple[int, np.ndarray]]:
+    """The expression path's unit centroids, a zero centroid kept as is."""
+    normed = []
+    for cid, v in cents:
+        n = np.linalg.norm(v)
+        normed.append((cid, v / n if n > 0 else v))
+    return normed
+
+
+def _gemm_normed(cents: list[tuple[int, np.ndarray]]) -> tuple[np.ndarray, np.ndarray]:
+    """The GEMM path's (ids, row-normalized (k x d) centroid matrix)."""
+    ids = np.array([c for c, _ in cents], dtype=np.int64)
+    C = np.vstack([v for _, v in cents])
+    Cn = np.linalg.norm(C, axis=1, keepdims=True)
+    Cn[Cn == 0] = 1.0
+    return ids, C / Cn
+
+
+def nearest_gemm(X: np.ndarray, C: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Row-wise cosine argmax of the (n x d) rows ``X`` against the
+    row-normalized centroids ``C``: X_norm @ Cᵀ, one BLAS GEMM. Returns
+    (index into C, its similarity) per row; numpy argmax keeps the first
+    (lowest-id) max, and a zero row scores 0 (V2 guard)."""
+    X = np.asarray(X, dtype=np.float64)
+    Xn = np.linalg.norm(X, axis=1, keepdims=True)
+    zero = Xn[:, 0] == 0
+    Xn[zero] = 1.0
+    sims = (X / Xn) @ C.T
+    sims[zero] = 0.0
+    arg = sims.argmax(axis=1)
+    return arg, sims[np.arange(len(arg)), arg]
+
+
+def nearest_fold(X: np.ndarray, cents: list[tuple[int, np.ndarray]]) -> np.ndarray:
+    """:func:`_assign_expr` on the driver, bit for bit: each row
+    l2-normalized and dotted with each unit centroid as sequential
+    folds (functions.vector's driver twins of ``dot``), the max
+    similarity winning with ties to the lowest id. Returns the index
+    into ``cents`` (sorted by id) per row."""
+    cols = columns_f64(X)
+    norms = norm_columns(cols)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        unit = np.where(norms == 0.0, cols, cols / norms)
+    sims = np.stack([
+        fold_sum(u * x for u, x in zip(unit, np.asarray(v, dtype=np.float64)))
+        for _, v in _expr_normed(cents)
+    ], axis=1)
+    return sims.argmax(axis=1)
+
+
+def nearest_ids(
+    X: np.ndarray, cents: list[tuple[int, np.ndarray]], method: str = "auto"
+) -> np.ndarray:
+    """:func:`assign_nearest_mat` for (n x d) vectors already on the
+    driver: the id of each row's nearest centroid, chosen as the Spark
+    path of the same ``method`` chooses it."""
+    cents, method = _resolve(cents, method)
+    if method == "gemm":
+        ids, C = _gemm_normed(cents)
+        return ids[nearest_gemm(X, C)[0]]
+    return np.array([c for c, _ in cents], dtype=np.int64)[nearest_fold(X, cents)]

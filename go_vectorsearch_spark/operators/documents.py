@@ -14,8 +14,8 @@ upload is request-sized and calls it on the driver; bulk re-chunking
 (:func:`prepare_chunks`) applies the same function through one
 Arrow-batched pandas UDF. The embedder, in contrast, is a pure column
 expression (md5-block codes) so embedding generation stays JVM-side and
-scales with the scan; a bit-exact pure-Python twin embeds single query
-strings on the driver.
+scales with the scan; a bit-exact pure-Python twin embeds query strings
+and an upload's chunks on the driver.
 
 Quirks of the reference reproduced on purpose (and locked by golden
 tests in tests/test_documents.py):
@@ -345,14 +345,20 @@ _NOOP_LEVELS = [
 ]
 
 
-def noop_embed_text(text: str, dim: int = NOOP_DIM, seed: int = 0) -> list[float]:
-    """Driver-side twin of :func:`noop_embed` for one string, equal to
-    the expression element for element: the same md5 blocks over the
-    UTF-8 bytes of ``seed:text:block`` and the same float32 levels.
-    The serving path embeds queries with it, so a query costs no Spark
-    job."""
+def noop_codes_text(text: str, dim: int = NOOP_DIM, seed: int = 0) -> bytes:
+    """Driver-side twin of :func:`noop_embed_codes` for one string: the
+    same md5 blocks over the UTF-8 bytes of ``seed:text:block``, one
+    byte per code. Uploads embed their chunks with it."""
     stream = b"".join(
         hashlib.md5(f"{seed}:{text}:{b}".encode()).digest()
         for b in range((dim + 15) // 16)
     )
-    return [_NOOP_LEVELS[c] for c in stream[:dim]]
+    return stream[:dim]
+
+
+def noop_embed_text(text: str, dim: int = NOOP_DIM, seed: int = 0) -> list[float]:
+    """Driver-side twin of :func:`noop_embed` for one string, equal to
+    the expression element for element: :func:`noop_codes_text` mapped
+    to the same float32 levels. The serving path embeds queries with
+    it, so a query costs no Spark job."""
+    return [_NOOP_LEVELS[c] for c in noop_codes_text(text, dim, seed)]

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from go_vectorsearch_spark.functions.vector import as_double, vector_mean
-from go_vectorsearch_spark.operators.assign import assign_nearest
+from go_vectorsearch_spark.operators.assign import assign_nearest, nearest_gemm
 from go_vectorsearch_spark.operators.search import brute_force_topk, round6_array
 
 CENTROID_SCHEMA = "centroid_id long, centroid_vec array<double>"
@@ -98,16 +98,14 @@ def _norm_rows(mat: np.ndarray) -> np.ndarray:
 
 
 def _argmax_ids(X: np.ndarray, ids: np.ndarray, C: np.ndarray) -> np.ndarray:
-    """Row-wise nearest-centroid ids by cosine argmax — the one numpy
-    kernel behind the distributed GEMM batches (operators/assign.py
-    ``_assign_gemm``) and the driver-local build path, so both paths
+    """Row-wise nearest-centroid ids by cosine argmax —
+    operators/assign.py's ``nearest_gemm``, the one numpy kernel behind
+    the distributed GEMM batches and the driver-local build path, so both paths
     are float-op-identical per row. ``C`` must already be row-normalized
     and ``ids`` ascending (first-max tie = lowest id,
     compute/cosine.go:113-117). Zero rows score 0 against every
     centroid -> first (lowest) id."""
-    sims = _norm_rows(X.astype(np.float64)) @ C.T
-    sims[np.linalg.norm(X, axis=1) == 0] = 0.0
-    return ids[sims.argmax(axis=1)]
+    return ids[nearest_gemm(X, C)[0]]
 
 
 def _cluster_stats(X: np.ndarray, mat: np.ndarray):

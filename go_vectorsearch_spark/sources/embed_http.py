@@ -28,7 +28,9 @@ one Python worker that
     emitting ONLY (codes, lo, hi) — the engine's canonical store form;
 
 so embedding throughput scales with partitions and endpoint count, and
-nothing full-precision is shuffled or stored.
+nothing full-precision is shuffled or stored. The per-batch function is
+:func:`http_embed_batches`; an upload, whose chunks are already on the
+driver, runs it there through :func:`embed_texts`.
 
 The deterministic noop embedder (operators/documents.noop_embed_codes,
 reference noop/ai.go:47-64) remains the default seam for tests and the
@@ -336,8 +338,16 @@ def _post_json(
     return json.loads(data)
 
 
-def http_embed(
-    df: DataFrame,
+def http_embed(df: DataFrame, text_col: str = "chunk", **options) -> DataFrame:
+    """Embed ``text_col`` via batched HTTP POSTs; appends (codes, lo, hi).
+    One ``mapInPandas`` stage of :func:`http_embed_batches`, whose
+    keyword arguments ``options`` are."""
+    in_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
+    run = http_embed_batches(text_col, **options)
+    return df.mapInPandas(run, schema=f"{in_fields}, {_OUT_FIELDS}")
+
+
+def http_embed_batches(
     text_col: str = "chunk",
     api_bases: Sequence[str] = (),
     model: str = "embed",
@@ -349,14 +359,19 @@ def http_embed(
     max_attempts: int | None = None,
     backoff_s: float = 0.2,
     request_compression: bool = False,
-) -> DataFrame:
-    """Embed ``text_col`` via batched HTTP POSTs; appends (codes, lo, hi).
+):
+    """:func:`http_embed`'s per-batch function: iterator of pandas
+    frames -> the same frames with (codes, lo, hi) appended. Spark runs
+    it in ``mapInPandas``; an upload calls it on the driver over its
+    chunks, so both get the same batching, endpoint rotation, retries
+    and quantize-at-decode.
 
     Request shape matches the reference (ai/ollama/embed.go:19-33 +
     aicomms/embed.go:11-19): ``{"model": m, "input": [texts...],
-    "options": {"num_ctx": n}}``; bearer auth when ``token`` is set
-    (embed.go:50-52). Response: ``{"embeddings": [[floats...], ...]}``
-    — quantized row-by-row at decode, full precision discarded.
+    "options": {"num_ctx": n}}``, ``batch_size`` texts per POST; bearer
+    auth when ``token`` is set (embed.go:50-52). Response:
+    ``{"embeddings": [[floats...], ...]}`` — quantized row-by-row at
+    decode, full precision discarded.
 
     Endpoint selection is least-connections with latency-EWMA ties
     (:class:`_EndpointBalancer`, ai/httpclient/provider.go:56-87).
@@ -375,8 +390,6 @@ def http_embed(
     if max_attempts is None:
         max_attempts = 2 * len(bases)
     max_attempts = max(1, max_attempts)  # 0/negative would skip the loop
-    in_fields = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema)
-    out_schema = f"{in_fields}, {_OUT_FIELDS}"
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from pyspark import TaskContext
@@ -489,7 +502,7 @@ def http_embed(
             for c, _prefix in conns.values():
                 c.close()
 
-    return df.mapInPandas(run, schema=out_schema)
+    return run
 
 
 def embed_chunks(
@@ -507,25 +520,9 @@ def embed_chunks(
     :func:`select_embed_provider` (ai/methods.go:14-22); ``api_bases``
     remains the one-provider Ollama shorthand. Both HTTP paths and the
     noop emit the same canonical (codes, lo, hi) columns."""
-    if providers:
-        p = select_embed_provider(providers)
-        # explicit caller kwargs override the provider config; popping
-        # them keeps **http_kwargs from passing the same keyword twice
-        return http_embed(
-            df,
-            text_col=text_col,
-            api_bases=list(p.api_bases),
-            model=http_kwargs.pop("model", None) or p.model,
-            token=http_kwargs.pop("token", p.token),
-            num_ctx=http_kwargs.pop("num_ctx", p.num_ctx),
-            path=http_kwargs.pop("path", p.embed_path),
-            request_compression=http_kwargs.pop(
-                "request_compression", p.request_compression
-            ),
-            **http_kwargs,
-        )
-    if api_bases:
-        return http_embed(df, text_col=text_col, api_bases=api_bases, **http_kwargs)
+    http = _http_options(api_bases, providers, http_kwargs)
+    if http is not None:
+        return http_embed(df, text_col=text_col, **http)
     from go_vectorsearch_spark.operators.documents import (
         NOOP_HI,
         NOOP_LO,
@@ -537,3 +534,67 @@ def embed_chunks(
         .withColumn("lo", F.lit(NOOP_LO).cast("float"))
         .withColumn("hi", F.lit(NOOP_HI).cast("float"))
     )
+
+
+def embed_texts(
+    texts: Sequence[str],
+    api_bases: Sequence[str] | None = None,
+    dim: int = 64,
+    providers: Sequence[EmbedProvider] | None = None,
+    **http_kwargs,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """:func:`embed_chunks` on the driver for texts already there (an
+    upload's chunks): (codes (n, d) uint8, lo f32, hi f32), equal to
+    the frame's columns. Noop mode hashes each text with
+    ``documents.noop_codes_text``; HTTP mode runs
+    :func:`http_embed_batches` over the texts as one batch stream. No
+    Spark job runs."""
+    http = _http_options(api_bases, providers, http_kwargs)
+    if http is not None:
+        run = http_embed_batches(text_col="chunk", **http)
+        (out,) = run(iter([pd.DataFrame({"chunk": list(texts)})]))
+        return (
+            np.array(out["codes"].tolist(), dtype=np.uint8),
+            out["lo"].to_numpy(dtype=np.float32),
+            out["hi"].to_numpy(dtype=np.float32),
+        )
+    from go_vectorsearch_spark.operators.documents import (
+        NOOP_HI,
+        NOOP_LO,
+        noop_codes_text,
+    )
+
+    codes = np.frombuffer(
+        b"".join(noop_codes_text(t, dim=dim) for t in texts), dtype=np.uint8
+    ).reshape(len(texts), dim)
+    return (
+        codes,
+        np.full(len(texts), NOOP_LO, dtype=np.float32),
+        np.full(len(texts), NOOP_HI, dtype=np.float32),
+    )
+
+
+def _http_options(
+    api_bases: Sequence[str] | None,
+    providers: Sequence[EmbedProvider] | None,
+    http_kwargs: dict,
+) -> dict | None:
+    """:func:`http_embed` keyword arguments for the configured provider
+    (explicit caller kwargs override the provider config), or ``None``
+    for the noop embedder."""
+    if providers:
+        p = select_embed_provider(providers)
+        return {
+            **http_kwargs,
+            "api_bases": list(p.api_bases),
+            "model": http_kwargs.get("model") or p.model,
+            "token": http_kwargs.get("token", p.token),
+            "num_ctx": http_kwargs.get("num_ctx", p.num_ctx),
+            "path": http_kwargs.get("path", p.embed_path),
+            "request_compression": http_kwargs.get(
+                "request_compression", p.request_compression
+            ),
+        }
+    if api_bases:
+        return {**http_kwargs, "api_bases": api_bases}
+    return None

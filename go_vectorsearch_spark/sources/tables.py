@@ -10,7 +10,9 @@ operator" here is just ``spark.read.parquet`` plus schema knowledge.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 import zipfile
 
@@ -48,7 +50,14 @@ def ensure_package_on_workers(spark: SparkSession) -> None:
     import go_vectorsearch_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(go_vectorsearch_spark.__file__))
-    zpath = os.path.join(tempfile.gettempdir(), "go_vectorsearch_spark_pkg.zip")
+    # a directory of this process's own: at one shared path, a second
+    # process shipping its copy rewrote the zip under this one, and
+    # Spark then failed every task here ("exists and does not match
+    # contents"). Spark serves the file from there for the session, so
+    # it goes when the process exits
+    zdir = tempfile.mkdtemp(prefix="gvs_pkg_")
+    atexit.register(shutil.rmtree, zdir, True)
+    zpath = os.path.join(zdir, "go_vectorsearch_spark_pkg.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:

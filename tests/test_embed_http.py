@@ -198,6 +198,41 @@ def test_engine_with_http_provider(spark, stub_server, tmp_path):
     assert {"codes", "lo", "hi"} <= set(emb.columns) and "vector" not in emb.columns
 
 
+def test_engine_http_upload_stores_the_spark_path_codes(spark, stub_server, tmp_path):
+    """An HTTP-mode upload embeds its chunks on the driver through
+    http_embed's per-batch function: the stored codes are the ones the
+    mapInPandas form of the same function returns for those chunks."""
+    from go_vectorsearch_spark.api import Engine
+    from go_vectorsearch_spark.operators.documents import document_chunks
+
+    srv, base = stub_server()
+    eng = Engine(spark, str(tmp_path / "store"), api_bases=[base])
+    docs = [
+        {"name": f"d{i}", "external_id": "", "document": json.dumps({"t": "w " * (400 * i) + f"x{i}"})}
+        for i in range(3)
+    ]
+    ids = eng.upload("acme", "wiki", docs)
+    assert srv.requests and all(r["path"] == "/api/embed" for r in srv.requests)
+    chunks = [document_chunks(d["name"], d["document"]) for d in docs]
+    stride = max(map(len, chunks))
+    frame = spark.createDataFrame(
+        [(i, ix, c) for i, cs in zip(ids, chunks) for ix, c in enumerate(cs)],
+        "doc_id long, chunk_idx int, chunk string",
+    )
+    want = sorted(
+        (1 + (r["doc_id"] - ids[0]) * stride + r["chunk_idx"], r["doc_id"],
+         r["codes"], r["lo"], r["hi"])
+        for r in http_embed(frame, api_bases=[base]).collect()
+    )
+    got = sorted(
+        tuple(r)
+        for r in eng.t["embeddings"].read()
+        .select("embedding_id", "document_id", "codes", "lo", "hi").collect()
+    )
+    assert sum(map(len, chunks)) > len(docs)
+    assert got == want
+
+
 def test_openai_provider_shape(spark, stub_server):
     """kind="openai" POSTs the same payload to /v1/embeddings
     (ai/openai/embed.go:39) with bearer auth."""
